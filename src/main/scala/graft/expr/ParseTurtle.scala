@@ -10,133 +10,73 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.turtle.Turtle
+import graft.pipeline.TripleEmit
 
 /** `parse_turtle(text)` — a native Catalyst GENERATOR (like `explode`):
   * one input document → N rows `(subj, pred, obj)` in N-Triples term
   * syntax, without materializing an intermediate array (the preferred
   * custom-operator form per SURVEY.md §2.6/§7.3; the reference's
   * `Document::parse_str` + `build_triples` lifecycle behind a SQL surface).
+  * A malformed document fails the query.
   *
+  * `parse_turtle_safe(text)` is the same generator with `lenient = true`:
+  * rows gain an `err` column, and a malformed document yields exactly one
+  * row `(null, null, null, "<message> at <start>..<end>")` instead of
+  * throwing — one bad page out of 10^12 must not kill the job.
+  *
+  * Both reach the kernel through [[TripleEmit.turtleRows]].
   * CodegenFallback: the parser is a per-row black box; whole-stage codegen
   * still fuses everything around the generate node.
   */
-case class ParseTurtle(child: Expression)
+case class ParseTurtle(child: Expression, lenient: Boolean)
     extends UnaryExpression with Generator with CodegenFallback {
 
-  override def elementSchema: StructType = StructType(Seq(
-    StructField("subj", StringType, nullable = false),
-    StructField("pred", StringType, nullable = false),
-    StructField("obj", StringType, nullable = false)))
+  private def name = if (lenient) "parse_turtle_safe" else "parse_turtle"
+
+  override def elementSchema: StructType = {
+    val terms = Seq("subj", "pred", "obj").map(StructField(_, StringType, nullable = lenient))
+    StructType(if (lenient) terms :+ StructField("err", StringType, nullable = true) else terms)
+  }
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"parse_turtle requires a string column, got ${child.dataType.catalogString}")
+      s"$name requires a string column, got ${child.dataType.catalogString}")
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val v = child.eval(input)
+    def utf(s: String) = UTF8String.fromString(s)
     if (v == null) Iterator.empty
-    else Turtle.parseToTriples(v.toString) match {
-      case Right(ts) =>
-        ts.iterator.map { t =>
-          InternalRow(
-            UTF8String.fromString(t.subj.render),
-            UTF8String.fromString(t.pred),
-            UTF8String.fromString(t.obj.render))
-        }
-      case Left(e) =>
-        throw new IllegalArgumentException(s"parse_turtle: ${e.message} at ${e.span}")
-    }
+    else if (lenient) TripleEmit.turtleRows(v.toString, name)(
+      (s, p, o, _, _) => InternalRow(utf(s), utf(p), utf(o), null),
+      e => InternalRow(null, null, null, utf(s"${e.message} at ${e.span}")))
+    else TripleEmit.turtleRows(v.toString, name)(
+      (s, p, o, _, _) => InternalRow(utf(s), utf(p), utf(o)))
   }
 
   override protected def withNewChildInternal(newChild: Expression): ParseTurtle =
     copy(child = newChild)
 }
 
-/** `parse_turtle_safe(text)` — the LENIENT sibling of [[ParseTurtle]]:
-  * instead of throwing, a malformed document yields exactly one row
-  * `(null, null, null, err)` while well-formed documents yield their
-  * triples with `err = null`. This matches the reference's diagnostic-sink
-  * behaviour (`/root/reference/examples/simple.rs:27-37`: errors are
-  * reported with their span, the process survives) — one bad page out of
-  * 10^12 must not kill the job.
-  */
-case class ParseTurtleSafe(child: Expression)
-    extends UnaryExpression with Generator with CodegenFallback {
-
-  override def elementSchema: StructType = StructType(Seq(
-    StructField("subj", StringType, nullable = true),
-    StructField("pred", StringType, nullable = true),
-    StructField("obj", StringType, nullable = true),
-    StructField("err", StringType, nullable = true)))
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"parse_turtle_safe requires a string column, got ${child.dataType.catalogString}")
-
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val v = child.eval(input)
-    if (v == null) Iterator.empty
-    else Turtle.parseToTriples(v.toString) match {
-      case Right(ts) =>
-        ts.iterator.map { t =>
-          InternalRow(
-            UTF8String.fromString(t.subj.render),
-            UTF8String.fromString(t.pred),
-            UTF8String.fromString(t.obj.render),
-            null)
-        }
-      case Left(e) =>
-        Iterator.single(InternalRow(null, null, null,
-          UTF8String.fromString(s"${e.message} at ${e.span}")))
-    }
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): ParseTurtleSafe =
-    copy(child = newChild)
-}
-
 /** Registration: per-session (temp function) or via
-  * `spark.sql.extensions=graft.expr.GraftExtensions`.
+  * `spark.sql.extensions=graft.expr.GraftExtensions`; both read [[Builders]].
   */
 object TurtleFunctions {
-  val Info = new ExpressionInfo(classOf[ParseTurtle].getName, "parse_turtle")
-  val SafeInfo = new ExpressionInfo(classOf[ParseTurtleSafe].getName, "parse_turtle_safe")
+  /** SQL name → expression builder. */
+  val Builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "parse_turtle" -> (exprs => ParseTurtle(exprs.head, lenient = false)),
+    "parse_turtle_safe" -> (exprs => ParseTurtle(exprs.head, lenient = true)))
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "parse_turtle", exprs => ParseTurtle(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "parse_turtle_safe", exprs => ParseTurtleSafe(exprs.head), "built-in")
-  }
-
-  /** SQL-surface 2 of 3 (SURVEY §2.6): a plain `functions.udf` returning
-    * the triple array, for users who want `explode(parse_turtle_udf(col))`
-    * without registering a Generator. The Generator forms above are
-    * strictly better (no intermediate array materialization) — this
-    * wrapper exists because it is the documented contract.
-    */
-  val parseTurtleUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udf { (text: String) =>
-      if (text == null) Array.empty[(String, String, String)]
-      else Turtle.parseToTriples(text) match {
-        case Right(ts) => ts.map(t => (t.subj.render, t.pred, t.obj.render)).toArray
-        case Left(e)   => throw new IllegalArgumentException(s"parse_turtle: ${e.message} at ${e.span}")
-      }
+  def register(spark: SparkSession): Unit =
+    Builders.foreach { case (name, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "built-in")
     }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("parse_turtle"),
-      TurtleFunctions.Info,
-      (exprs: Seq[Expression]) => ParseTurtle(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("parse_turtle_safe"),
-      TurtleFunctions.SafeInfo,
-      (exprs: Seq[Expression]) => ParseTurtleSafe(exprs.head)))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    TurtleFunctions.Builders.foreach { case (name, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[ParseTurtle].getName, name), build))
+    }
 }

@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
-import graft.pipeline.{Canonical, Extract}
-import graft.turtle.Turtle
+import graft.pipeline.{Canonical, Extract, TripleEmit}
+import graft.turtle.NTriples
 
 /** KG operators exposed over the shared test tables: Turtle parsing at
   * scale, boilerplate extraction, dictionary mentions, and distributed
@@ -26,24 +26,43 @@ object GraphOps {
        |  p:nchars $nChars .
        |""".stripMargin
 
+  /** The skeleton every per-document Turtle op shares: one typed
+    * `mapPartitions` in which `doc` builds each input row's `(doc_id,
+    * text)` and `rows` turns that document into output rows, reading it
+    * through the binding [[TripleEmit.turtleRows]].
+    */
+  private def perDoc[A, T: Encoder](in: Dataset[A])(doc: A => (Long, String))(
+      rows: (Long, String) => Iterator[T]): Dataset[T] =
+    in.mapPartitions(_.flatMap { a => val (id, ttl) = doc(a); rows(id, ttl) })
+
+  /** The `documents` columns [[turtleForDoc]] reads; `forDoc` builds the document. */
+  private def docColumns(documents: DataFrame): Dataset[(Long, String, String, Long)] = {
+    import documents.sparkSession.implicits._
+    documents.select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
+      .as[(Long, String, String, Long)]
+  }
+  private val forDoc: ((Long, String, String, Long)) => (Long, String) = {
+    case (id, lang, source, nChars) => (id, turtleForDoc(id, lang, source, nChars))
+  }
+
+  /** Strict (doc_id, subj, pred, obj) rows of one document. */
+  private def triplesOf(id: Long, ttl: String): Iterator[(Long, String, String, String)] =
+    TripleEmit.turtleRows(ttl, s"doc $id")((s, p, o, _, _) => (id, s, p, o))
+
+  /** One document's triples as N-Triples text, re-parsed by the
+    * independent N-Triples parser back into term space.
+    */
+  private def ntReparse(id: Long, ttl: String): Vector[graft.turtle.Triple] =
+    NTriples.parse(TripleEmit.turtleRows(ttl, s"doc $id")((s, p, o, _, _) => s"$s <$p> $o .\n").mkString)
+      .fold(e => throw new IllegalStateException(s"doc $id reparse: $e"), identity)
+
   /** Parse per-row Turtle into (doc_id, subj, pred, obj) triples with the
     * embedded conformance-tested parser — the scaled-up version of the
     * reference's `Document::parse_str` + `build_triples` lifecycle.
     */
   def parseTurtle(documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    documents.select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-      .as[(Long, String, String, Long)]
-      .mapPartitions { it =>
-        it.flatMap { case (id, lang, source, nChars) =>
-          val ttl = turtleForDoc(id, lang, source, nChars)
-          Turtle.parseToTriples(ttl) match {
-            case Right(ts) => ts.iterator.map(t => (id, t.subj.render, t.pred, t.obj.render))
-            case Left(e)   => throw new IllegalStateException(s"doc $id: $e")
-          }
-        }
-      }.toDF("doc_id", "subj", "pred", "obj")
+    import documents.sparkSession.implicits._
+    perDoc(docColumns(documents))(forDoc)(triplesOf).toDF("doc_id", "subj", "pred", "obj")
   }
 
   /** Graph → TURTLE → graph round trip at corpus scale (kg34): each doc's
@@ -51,25 +70,16 @@ object GraphOps {
     * (prefix compaction and `;`-grouping exercised on real namespaces)
     * and re-parse through the conformance parser inside the same task —
     * the EXPORT side of the engine, value-checked because the re-parsed
-    * triples must equal the direct parse (kg01's oracle).
+    * triples must equal the direct parse (kg01's oracle). The writer reads
+    * the rendered rows back through the N-Triples parser, as
+    * [[exportTurtleDir]] does.
     */
   def turtleRoundTrip(documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    documents.select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-      .as[(Long, String, String, Long)]
-      .mapPartitions { it =>
-        it.flatMap { case (id, lang, source, nChars) =>
-          val ttl = turtleForDoc(id, lang, source, nChars)
-          val t1 = Turtle.parseToTriples(ttl)
-            .fold(e => throw new IllegalStateException(s"doc $id: $e"), identity)
-          val ser = graft.turtle.TurtleWriter.write(t1,
-            Map("p" -> PropPrefix, "d" -> DocPrefix))
-          Turtle.parseToTriples(ser)
-            .fold(e => throw new IllegalStateException(s"doc $id reparse: $e"), identity)
-            .iterator.map(t => (id, t.subj.render, t.pred, t.obj.render))
-        }
-      }.toDF("doc_id", "subj", "pred", "obj")
+    import documents.sparkSession.implicits._
+    perDoc(docColumns(documents))(forDoc) { (id, ttl) =>
+      triplesOf(id, graft.turtle.TurtleWriter.write(ntReparse(id, ttl),
+        Map("p" -> PropPrefix, "d" -> DocPrefix)))
+    }.toDF("doc_id", "subj", "pred", "obj")
   }
 
   /** [[parseTurtle]] carrying each triple's source BYTE span — the
@@ -84,20 +94,11 @@ object GraphOps {
     * the span — pinned byte-exactly on p01/p12/p18 in ConformanceSpec).
     */
   def parseTurtleWithSpans(documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    documents.select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-      .as[(Long, String, String, Long)]
-      .mapPartitions { it =>
-        it.flatMap { case (id, lang, source, nChars) =>
-          val ttl = turtleForDoc(id, lang, source, nChars)
-          Turtle.parseToTriples(ttl) match {
-            case Right(ts) => ts.iterator.map(t =>
-              (id, t.subj.render, t.pred, t.obj.render, t.span.start.toLong, t.span.end.toLong))
-            case Left(e)   => throw new IllegalStateException(s"doc $id: $e")
-          }
-        }
-      }.toDF("doc_id", "subj", "pred", "obj", "span_start", "span_end")
+    import documents.sparkSession.implicits._
+    perDoc(docColumns(documents))(forDoc) { (id, ttl) =>
+      TripleEmit.turtleRows(ttl, s"doc $id")((s, p, o, start, end) =>
+        (id, s, p, o, start.toLong, end.toLong))
+    }.toDF("doc_id", "subj", "pred", "obj", "span_start", "span_end")
   }
 
   /** Distributed Turtle FILE source — the reference's file-source entry
@@ -182,26 +183,6 @@ object GraphOps {
     }
   }
 
-  /** Lenient typed twin of [[parseTurtle]] over (doc_id, ttl) rows: a
-    * malformed document yields one `(doc_id, null, null, null, err)` row
-    * instead of an exception (reference diagnostic-sink semantics,
-    * `examples/simple.rs:27-37`) — the job survives bad input.
-    */
-  def parseTurtleLenient(ttlDocs: DataFrame): DataFrame = {
-    val spark = ttlDocs.sparkSession
-    import spark.implicits._
-    ttlDocs.select(col("doc_id"), col("ttl")).as[(Long, String)]
-      .mapPartitions(_.flatMap { case (id, ttl) =>
-        Turtle.parseToTriples(ttl) match {
-          case Right(ts) =>
-            ts.iterator.map(t => (id, t.subj.render, t.pred, t.obj.render, null: String))
-          case Left(e) =>
-            Iterator.single((id, null: String, null: String, null: String,
-              s"${e.message} at ${e.span}"))
-        }
-      }).toDF("doc_id", "subj", "pred", "obj", "err")
-  }
-
   /** Rich-grammar Turtle document: `@base`-relative subject IRI, a
     * `\\u`-escaped literal, an RDF collection (numeric integer + decimal
     * lexical forms preserved verbatim), and an anonymous blank-node
@@ -222,15 +203,9 @@ object GraphOps {
 
   /** (doc_id, subj, pred, obj) from [[richTurtleForDoc]] per row. */
   def parseTurtleRich(documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    documents.select(col("doc_id")).as[Long]
-      .mapPartitions(_.flatMap { id =>
-        Turtle.parseToTriples(richTurtleForDoc(id)) match {
-          case Right(ts) => ts.iterator.map(t => (id, t.subj.render, t.pred, t.obj.render))
-          case Left(e)   => throw new IllegalStateException(s"doc $id: $e")
-        }
-      }).toDF("doc_id", "subj", "pred", "obj")
+    import documents.sparkSession.implicits._
+    perDoc(documents.select(col("doc_id")).as[Long])(id => (id, richTurtleForDoc(id)))(triplesOf)
+      .toDF("doc_id", "subj", "pred", "obj")
   }
 
   /** Distributed N-Triples SINK — the reference's serializer surface at
@@ -270,22 +245,10 @@ object GraphOps {
     * every row of the corpus, not just the 29 fixtures.
     */
   def parseTurtleNtRoundTrip(documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    documents.select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-      .as[(Long, String, String, Long)]
-      .mapPartitions { it =>
-        it.flatMap { case (id, lang, source, nChars) =>
-          val ttl = turtleForDoc(id, lang, source, nChars)
-          val ts = Turtle.parseToTriples(ttl)
-            .fold(e => throw new IllegalStateException(s"doc $id: $e"), identity)
-          val nt = graft.turtle.NTriples.render(ts)
-          graft.turtle.NTriples.parse(nt) match {
-            case Right(ts2) => ts2.iterator.map(t => (id, t.subj.render, t.pred, t.obj.render))
-            case Left(e)    => throw new IllegalStateException(s"doc $id reparse: $e")
-          }
-        }
-      }.toDF("doc_id", "subj", "pred", "obj")
+    import documents.sparkSession.implicits._
+    perDoc(docColumns(documents))(forDoc) { (id, ttl) =>
+      ntReparse(id, ttl).iterator.map(t => (id, t.subj.render, t.pred, t.obj.render))
+    }.toDF("doc_id", "subj", "pred", "obj")
   }
 
   /** Wrap each document in the synthetic page HTML and re-extract —
@@ -343,21 +306,18 @@ object GraphOps {
     * 3 metadata triples + 2 per mentioned entity (kg:mentions + kg:label).
     */
   def emitFromDocs(documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
+    import documents.sparkSession.implicits._
     val mentionsPerDoc = mentionCounts(documents)
       .groupBy(col("doc_id")).agg(collect_set(col("term")).as("terms"))
-    documents.select(col("doc_id"), col("lang"))
+    val pages = documents.select(col("doc_id"), col("lang"))
       .join(mentionsPerDoc, Seq("doc_id"), "left")
       .as[(Long, String, Option[Seq[String]])]
-      .mapPartitions(_.map { case (id, lang, terms) =>
-        val ents = terms.getOrElse(Seq.empty).sorted
-          .map(t => (s"http://graft.example/entity/$t", t))
-        val ttl = graft.pipeline.TripleEmit.turtleForPage(s"$DocPrefix$id", 0L, lang, ents)
-        val n = Turtle.parseToTriples(ttl)
-          .fold(e => throw new IllegalStateException(s"doc $id: $e"), _.length)
-        (id, n.toLong)
-      }).toDF("doc_id", "n_triples")
+    perDoc(pages) { case (id, lang, terms) =>
+      val ents = terms.getOrElse(Seq.empty).sorted
+        .map(t => (s"http://graft.example/entity/$t", t))
+      (id, TripleEmit.turtleForPage(s"$DocPrefix$id", 0L, lang, ents))
+    }((id, ttl) => Iterator.single((id, triplesOf(id, ttl).size.toLong)))
+      .toDF("doc_id", "n_triples")
   }
 
   /** SPARQL-style basic graph pattern as DataFrame joins — QUERYING the

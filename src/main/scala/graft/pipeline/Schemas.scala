@@ -31,21 +31,6 @@ final case class TripleRow(
     src_url: String,
     warc_ts: Timestamp)
 
-/** [[TripleRow]] plus the emitting statement's byte span in the source
-  * document (reference `Meta` parity: every emitted triple carries the
-  * span of the statement/object that produced it, `src/build.rs:279-287`).
-  * The span columns are ordinary columns — select them away and column
-  * pruning drops them from the scan.
-  */
-final case class SpannedTripleRow(
-    subj: String,
-    pred: String,
-    obj: String,
-    src_url: String,
-    warc_ts: Timestamp,
-    span_start: Int,
-    span_end: Int)
-
 /** Parse/build failure routed to the rejects table instead of failing the
   * job (reference diagnostic sink, `examples/simple.rs:27-37`).
   */

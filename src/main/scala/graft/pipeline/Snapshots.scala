@@ -82,11 +82,6 @@ final class SnapshotStore(root: String, spark: SparkSession, config: String = ""
     }
   }
 
-  /** Drop a stage's snapshot (test helper for kill/resume scenarios). */
-  def invalidate(stage: String): Unit = {
-    if (fs.exists(dir(stage))) { fs.delete(dir(stage), true); () }
-  }
-
   def stages(): Seq[String] =
     if (!fs.exists(new Path(root))) Seq.empty
     else fs.listStatus(new Path(root)).toSeq.filter(_.isDirectory).map(_.getPath.getName)

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.turtle.{NTriples, Turtle}
+import graft.turtle.{NTriples, Turtle, TurtleError}
 
 /** Triple emission. The emitter EMBEDS the Turtle parser-serializer: each
   * page's statements are written as a Turtle document (prefixes, `a` sugar,
@@ -61,6 +61,35 @@ object TripleEmit {
     sb.toString
   }
 
+  /** The Turtle→rows binding: every Spark path reaches the kernel through
+    * this one function, which decides how a kernel result becomes rows.
+    *   - Row format: `row(subj, pred, obj, spanStart, spanEnd)` per triple,
+    *     subject and object in N-Triples term syntax (the [[TripleRow]]
+    *     encoding), the predicate a bare IRI, the byte span that of the
+    *     emitting statement.
+    *   - Blank labels: `scoped` rewrites them per document (`_:d<tag>l…`
+    *     for the document's labels, `_:d<tag>-n` for anonymous nodes, tag =
+    *     hex of `doc`'s hash) so documents merge into one graph without
+    *     collisions; otherwise the kernel's fixture-parity `_:0, _:1, …`.
+    *   - Failure policy: strict by default — a malformed document throws,
+    *     naming `doc`; a lenient caller passes `reject`, and the document
+    *     yields exactly one `reject(error)` row carrying its span and message
+    *     (reference diagnostic sink, `examples/simple.rs:27-37`).
+    */
+  def turtleRows[R](text: String, doc: String, scoped: Boolean = false)(
+      row: (String, String, String, Int, Int) => R,
+      reject: TurtleError => R = (e: TurtleError) =>
+        throw new IllegalStateException(s"$doc: ${e.message} at ${e.span}")): Iterator[R] = {
+    val parsed =
+      if (scoped) Turtle.parseToTriplesScoped(text, java.lang.Long.toHexString(Mentions.hash64(doc)))
+      else Turtle.parseToTriples(text)
+    parsed match {
+      case Right(ts) =>
+        ts.iterator.map(t => row(t.subj.render, t.pred, t.obj.render, t.span.start, t.span.end))
+      case Left(e) => Iterator.single(reject(e))
+    }
+  }
+
   /** Emit stage.
     * `linked`: (url, canonical_iri, label) — one row per linked mention.
     * Output: TripleRow per emitted triple (src_url/warc_ts lineage columns).
@@ -80,62 +109,36 @@ object TripleEmit {
       .as[(String, java.sql.Timestamp, String, Option[Seq[(String, String)]])]
       .mapPartitions { it =>
         it.flatMap { case (url, ts, lang, ents) =>
-          val ttl = turtleForPage(url, ts.getTime, lang, ents.getOrElse(Seq.empty))
           // embedded parser: the emitted document must parse; a failure here
-          // is a serializer bug, surfaced as an error row upstreamed by tests
-          Turtle.parseToTriples(ttl) match {
-            case Right(triples) =>
-              triples.iterator.map { t =>
-                TripleRow(t.subj.render, t.pred, t.obj.render, url, ts)
-              }
-            case Left(e) =>
-              throw new IllegalStateException(s"emitter round-trip failed for $url: $e")
-          }
+          // is a serializer bug and fails the job, naming the page
+          turtleRows(turtleForPage(url, ts.getTime, lang, ents.getOrElse(Seq.empty)), url)(
+            (s, p, o, _, _) => TripleRow(s, p, o, url, ts))
         }
       }
   }
 
   /** Turtle ingestion source: parse foreign .ttl documents into the graph,
-    * routing parse failures to a rejects table instead of failing the job
-    * (reference diagnostic sink, `examples/simple.rs:27-37`).
+    * routing parse failures to a rejects table instead of failing the job.
+    * One pass over `docs` yields a triple-or-reject row per triple or
+    * malformed document; it is materialized ONCE (the call's only job,
+    * lineage truncated through [[CheckpointPolicy]]) and both outputs are
+    * column projections of that one materialization, so no reader of
+    * either re-runs the parse. Blank labels are document-scoped.
     */
   def ingestTurtle(
       docs: Dataset[(String, java.sql.Timestamp, String)]): // (url, ts, turtle_text)
       (Dataset[TripleRow], Dataset[Reject]) = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val (spanned, rejects) = ingestTurtleSpanned(docs)
-    (spanned.map(t => TripleRow(t.subj, t.pred, t.obj, t.src_url, t.warc_ts)), rejects)
-  }
-
-  /** [[ingestTurtle]] carrying each triple's source byte span (reference
-    * `Meta` lineage parity — the span of the statement/object that emitted
-    * the triple). Use this when downstream diagnostics need to point back
-    * into the source bytes; the extra columns prune away when unselected.
-    */
-  def ingestTurtleSpanned(
-      docs: Dataset[(String, java.sql.Timestamp, String)]): // (url, ts, turtle_text)
-      (Dataset[SpannedTripleRow], Dataset[Reject]) = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val parsed = docs.mapPartitions { it =>
-      it.map { case (url, ts, text) =>
-        Turtle.parseToTriplesScoped(text, java.lang.Long.toHexString(Mentions.hash64(url))) match {
-          case Right(ts2) =>
-            (ts2.map(t => SpannedTripleRow(t.subj.render, t.pred, t.obj.render, url, ts,
-              t.span.start, t.span.end)), None: Option[Reject])
-          case Left(e) =>
-            (Seq.empty[SpannedTripleRow], Some(Reject(url, e.span.start, e.span.end, e.message)))
-        }
-      }
-    }.persist()
-    // materialize both outputs ONCE (eager localCheckpoint), then release
-    // the shared parse cache — otherwise every ingest call leaks a cached
-    // copy of the parsed corpus for the session's lifetime; the returned
-    // checkpoint blocks are cleaned when the datasets become unreachable
-    val triples = parsed.flatMap(_._1).localCheckpoint()
-    val rejects = parsed.flatMap(_._2).localCheckpoint()
-    parsed.unpersist()
-    (triples, rejects)
+    val rows = CheckpointPolicy.Local.truncate(docs.mapPartitions(_.flatMap { case (url, ts, text) =>
+      turtleRows(text, url, scoped = true)(
+        (s, p, o, start, end) => (s, p, o, url, ts, start, end, null: String),
+        e => (null, null, null, url, ts, e.span.start, e.span.end, e.message))
+    }).toDF("subj", "pred", "obj", "url", "warc_ts", "span_start", "span_end", "message"))
+    val isReject = col("message").isNotNull
+    (rows.where(!isReject)
+       .select(col("subj"), col("pred"), col("obj"), col("url").as("src_url"), col("warc_ts"))
+       .as[TripleRow],
+     rows.where(isReject).select(col("url"), col("span_start"), col("span_end"), col("message")).as[Reject])
   }
 }

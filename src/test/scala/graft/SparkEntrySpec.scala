@@ -50,18 +50,6 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(errs.forall(_._2.isEmpty))
   }
 
-  test("parseTurtleUdf (functions.udf surface) explodes to the same triples") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val df = Seq("@prefix p: <http://e/> . p:a p:b p:c , p:d .").toDF("ttl")
-    val got = df.select(explode(graft.expr.TurtleFunctions.parseTurtleUdf(col("ttl"))).as("t"))
-      .select("t._1", "t._2", "t._3").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-    assert(got == Set(
-      ("<http://e/a>", "http://e/b", "<http://e/c>"),
-      ("<http://e/a>", "http://e/b", "<http://e/d>")))
-  }
-
   test("GraftExtensions injects parse_turtle/parse_turtle_safe via spark.sql.extensions") {
     val old = spark // ensure the shared context exists
     SparkSession.clearActiveSession()
@@ -80,6 +68,13 @@ class SparkEntrySpec extends AnyFunSuite {
           |  LATERAL VIEW parse_turtle(ttl) t AS subj, pred, obj)""".stripMargin)
         .head().getLong(0)
       assert(n == 1)
+      val objectList = s2.sql(
+        """SELECT t.* FROM (SELECT '@prefix p: <http://e/> . p:a p:b p:c , p:d .' AS ttl) x
+          |LATERAL VIEW parse_turtle(ttl) t AS subj, pred, obj""".stripMargin)
+        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+      assert(objectList == Set(
+        ("<http://e/a>", "http://e/b", "<http://e/c>"),
+        ("<http://e/a>", "http://e/b", "<http://e/d>")))
       val errs = s2.sql(
         """SELECT count(t.err) AS n FROM (SELECT '<bad iri .' AS ttl) x
           |LATERAL VIEW parse_turtle_safe(ttl) t AS subj, pred, obj, err""".stripMargin)
