@@ -14,8 +14,16 @@ import org.apache.spark.sql.expressions.Window
   *      the entity profile (name + topic tokens), expressed entirely as
   *      DataFrame joins/aggregations (Catalyst-optimizable, no UDF in the
   *      shuffle path).
-  *   3. TOP-1 — ranking window per mention (score desc, entity asc
-  *      tie-break).
+  *   3. TOP-1 — argmax per mention: score desc, then an exact alias
+  *      match (surface == one of the entity's aliases) before a fuzzy
+  *      band candidate, then entity IRI asc. The exact-match key decides
+  *      when a no-space alias (`NimbusCorp13`), whose name words never
+  *      reach the context, ties with a look-alike entity of the same
+  *      topics (`NimbusCorp1053`): IRI order alone would pick the latter.
+  *
+  * The alias-quarantine audit ([[auditQuarantine]]) is not part of
+  * [[link]]: `Pipeline.run` runs it on its dictionary branch, beside the
+  * page chain, and [[block]] keeps it behind an opt-in flag.
   */
 object Linking {
 
@@ -86,9 +94,10 @@ object Linking {
 
   /** AUDIT surface for the [[block]] quarantine (no silent caps — the
     * td09/td12 `*HotBands` discipline): alias band-buckets larger than the
-    * cap, with sizes. [[block]] evaluates it on the (small, broadcastable)
-    * dictionary side and WARNS when any bucket is quarantined; callers
-    * inspecting a recall regression read this table offline.
+    * cap, with sizes. [[auditQuarantine]] evaluates it on the (small,
+    * broadcastable) dictionary side and WARNS when any bucket is
+    * quarantined; callers inspecting a recall regression read this table
+    * offline.
     */
   def aliasHotBands(
       dict: Dataset[EntityAlias],
@@ -103,8 +112,22 @@ object Linking {
 
   private val logger = org.slf4j.LoggerFactory.getLogger("graft.pipeline.Linking")
 
+  /** Runs the quarantine audit (a dictionary-sized Spark action) and
+    * warns when any alias band-bucket is quarantined.
+    */
+  def auditQuarantine(
+      dict: Dataset[EntityAlias],
+      maxAliasBandBucket: Int = MaxAliasBandBucket): Unit = {
+    val nHotBuckets = aliasHotBands(dict, maxAliasBandBucket).count()
+    if (nHotBuckets > 0)
+      logger.warn(s"Linking: quarantined $nHotBuckets alias band-bucket(s) " +
+        s"larger than $maxAliasBandBucket from the LSH band join " +
+        "(exact-match recall unaffected; see Linking.aliasHotBands)")
+  }
+
   /** Stage 1: blocking. `mentions` needs (mention_id, surface) columns.
-    * Output: (mention_id, entity_iri) candidate pairs. */
+    * Output: (mention_id, entity_iri, exact) candidate pairs, where
+    * `exact` says the surface is one of the entity's aliases verbatim. */
   def block(
       mentions: DataFrame,
       dict: Dataset[EntityAlias],
@@ -117,13 +140,7 @@ object Linking {
     // data-quality event worth surfacing, but the audit is its own Spark
     // job over the dictionary, so the common unflooded path doesn't pay it
     // per call — [[aliasHotBands]] stays the offline surface either way.
-    if (auditQuarantine) {
-      val nHotBuckets = aliasHotBands(dict, maxAliasBandBucket).count()
-      if (nHotBuckets > 0)
-        logger.warn(s"Linking.block: quarantined $nHotBuckets alias band-bucket(s) " +
-          s"larger than $maxAliasBandBucket from the LSH band join " +
-          "(exact-match recall unaffected; see Linking.aliasHotBands)")
-    }
+    if (auditQuarantine) this.auditQuarantine(dict, maxAliasBandBucket)
 
     // distinct surfaces only — the band fan-out runs once per unique string,
     // not once per occurrence (mentions of hot entities are heavily skewed).
@@ -152,17 +169,19 @@ object Linking {
     // of the (large) mention-surface table beyond its own distinct.
     // Exact surface==alias matches are unioned in directly: identical
     // strings must be candidates even when their band bucket is capped.
+    // They carry exact = true, band candidates false, and max(exact) per
+    // pair keeps the flag through the union — the ranker's tie-break.
     val exactPairs = distinctSurfaces
       .join(broadcast(dict.toDF().select($"alias".as("surface"), $"entity_iri")), "surface")
-      .select($"surface", $"entity_iri")
+      .select($"surface", $"entity_iri", lit(true).as("exact"))
     // pairs ≤ |surfaces| × few candidates — eagerly checkpoint the SMALL
     // result so the distinct-surfaces cache can be released before
     // returning (the lazy return value must not pin it)
     val pairs = surfaceBands
       .join(broadcast(aliasCapped), Seq("band_id", "band_hash"))
-      .select($"surface", $"entity_iri")
+      .select($"surface", $"entity_iri", lit(false).as("exact"))
       .unionByName(exactPairs)
-      .distinct()
+      .groupBy($"surface", $"entity_iri").agg(max($"exact").as("exact"))
       .localCheckpoint()
     // blocking: the default async removal races any storage accounting the
     // caller does right after return (surfaced as PipelineSpec flakiness
@@ -173,10 +192,11 @@ object Linking {
     // hot surface strings
     mentions.select($"mention_id", $"surface")
       .join(broadcast(pairs), "surface")
-      .select($"mention_id", $"entity_iri")
+      .select($"mention_id", $"entity_iri", $"exact")
   }
 
-  /** Stage 2+3: TF-IDF cosine scoring + top-1 ranking window.
+  /** Stage 2+3: TF-IDF cosine scoring + top-1 argmax.
+    * `candidates`: [[block]]'s (mention_id, entity_iri, exact) pairs;
     * `profiles`: (entity_iri, token) exploded entity profiles.
     */
   def scoreAndRank(
@@ -248,23 +268,23 @@ object Linking {
     val dots = candidates
       .join(mentionVec, "mention_id")
       .join(broadcast(entityVec.withColumnRenamed("w", "ew")), Seq("entity_iri", "tid"))
-      .groupBy($"mention_id", $"entity_iri")
+      .groupBy($"mention_id", $"entity_iri", $"exact") // exact is per (mention, entity)
       .agg(sum($"w" * $"ew").as("dot"))
 
     val scored = dots
       .join(mentionNorm, "mention_id")
       .join(broadcast(entityNorm), "entity_iri")
-      .select($"mention_id", $"entity_iri",
+      .select($"mention_id", $"entity_iri", $"exact",
         ($"dot" / ($"m_norm" * $"e_norm")).as("score"))
 
-    // top-1 as a hash-aggregate argmax rather than a ranking window: same
-    // (score desc, entity asc) tie-break via min_by on (-score, entity),
-    // but no whole-partition sort — and the groupBy rides the mention_id
-    // partitioning established above. Deterministic: the ordering struct
-    // is unique per (mention, entity).
+    // top-1 as a hash-aggregate argmax rather than a ranking window: the
+    // (score desc, exact first, entity asc) order via min_by on
+    // (-score, !exact, entity), but no whole-partition sort — and the
+    // groupBy rides the mention_id partitioning established above.
+    // Deterministic: the ordering struct is unique per (mention, entity).
     val top1 = scored.groupBy($"mention_id")
       .agg(min_by(struct($"entity_iri", $"score"),
-        struct(($"score" * -1).as("neg"), $"entity_iri")).as("best"))
+        struct(($"score" * -1).as("neg"), (!$"exact").as("fuzzy"), $"entity_iri")).as("best"))
       .select($"mention_id", $"best.entity_iri".as("entity_iri"), $"best.score".as("score"))
       .as[Candidate]
 
@@ -277,17 +297,15 @@ object Linking {
     result
   }
 
-  /** Full linking stage. The quarantine audit runs HERE — once per link
-    * job at the pipeline entry point, so a flooded alias universe always
-    * surfaces as a warning (the audit job is dictionary-sized, a rounding
-    * error next to the stage) — while [[block]] keeps it opt-out for
-    * callers composing it into per-batch hot loops.
+  /** Full linking stage: blocking, scoring and top-1. It runs no
+    * quarantine audit: the audit reads only the dictionary, so
+    * `Pipeline.run` runs [[auditQuarantine]] on its dictionary branch,
+    * off the page chain's critical path.
     */
   def link(
       mentions: DataFrame,
       dict: Dataset[EntityAlias],
       profiles: DataFrame,
       knownMentionCount: Option[Long] = None): Dataset[Candidate] =
-    scoreAndRank(mentions, block(mentions, dict, auditQuarantine = true),
-      profiles, knownMentionCount)
+    scoreAndRank(mentions, block(mentions, dict), profiles, knownMentionCount)
 }

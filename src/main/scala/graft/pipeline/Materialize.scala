@@ -119,7 +119,9 @@ object Materialize {
     * second pass over a lazily-derived input) or, when absent, from the
     * [[sketchPredCounts]] sketch. The parallelism floor spreads the
     * vocabulary across ~2× the session's shuffle partitions even when
-    * every count is small.
+    * every count is small. Returns the number of rows committed, counted
+    * by an [[org.apache.spark.sql.Observation]] on the write job itself
+    * (no read-back count job).
     */
   def writeAdaptive(
       triples: Dataset[TripleRow],
@@ -127,7 +129,7 @@ object Materialize {
       predBuckets: Int = DefaultPredBuckets,
       predCounts: Option[Map[String, Long]] = None,
       targetRowsPerSalt: Long = TargetRowsPerSalt,
-      maxSalt: Int = MaxSalt): Unit = {
+      maxSalt: Int = MaxSalt): Long = {
     val df = triples.toDF()
     val counts = predCounts.getOrElse(sketchPredCounts(df))
     val shuffleP = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
@@ -137,10 +139,14 @@ object Materialize {
     val baseSalt = math.min(maxSalt,
       math.max(1, (2 * shuffleP + counts.size - 1) / math.max(counts.size, 1)))
     val plan = saltPlan(counts, targetRowsPerSalt, maxSalt, baseSalt)
+    val obs = new org.apache.spark.sql.Observation(
+      s"materialize.write.${java.util.UUID.randomUUID()}")
     saltedDeduped(df, predBuckets, plan, baseSalt)
+      .observe(obs, count(lit(1)).as("n"))
       .write.mode("overwrite")
       .partitionBy("pred_hash")
       .parquet(out)
+    obs.get("n").asInstanceOf[Long]
   }
 
   def read(spark: org.apache.spark.sql.SparkSession, out: String): DataFrame =

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import java.util.concurrent.{Callable, ExecutionException, FutureTask}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -8,14 +10,31 @@ import org.apache.spark.sql.functions._
   * canonicalize → emit triples → materialize graph table; every stage runs
   * through the [[SnapshotStore]] gate (resumable) and the [[Lineage]]
   * tracker (per-partition metrics).
+  *
+  * Two chains run side by side. The PAGE chain (pages → extracted →
+  * mentions → links) runs on the caller's thread. The DICTIONARY branch —
+  * everything that reads only the entity dictionary: the linker's
+  * alias-quarantine audit and the whole `canonical` stage — runs on one
+  * dedicated driver thread started before `pages`, so Spark schedules its
+  * jobs beside the page chain's. The chains meet at `linked`, the first
+  * stage that reads both, and the branch is joined on every exit path
+  * (return, stop, failure), so no job of a run outlives `run`.
   */
 object Pipeline {
 
+  /** What a run committed. `stageWallMs` holds each stage's own wall
+    * time; `canonical` runs on the dictionary branch beside `pages` …
+    * `links`, so its wall overlaps theirs and the walls do not sum to the
+    * run's.
+    */
   final case class Summary(
       stageRows: Map[String, Long],
       graphRows: Long,
       rejects: Long,
       stageWallMs: Map[String, Long] = Map.empty)
+
+  /** A committed stage: its read-back frame, rows and wall time. */
+  private final case class Committed(df: DataFrame, rows: Long, wallMs: Long)
 
   def sparkSession(master: String, shufflePartitions: Int, app: String = "graft"): SparkSession = {
     val b = SparkSession.builder()
@@ -65,10 +84,12 @@ object Pipeline {
       config = s"pages=$nPages;entities=$nEntities;input=" +
         (if (inputPages.isDefined) "external" else "synthetic"))
     val lineage = Lineage.collector(spark)
+    // written only by the caller's thread (record), never by the branch
     var rows = Map.empty[String, Long]
     var walls = Map.empty[String, Long]
 
-    def stage(name: String)(compute: => DataFrame): DataFrame = {
+    // thread-safe: touches only the calling thread's local properties
+    def commit(name: String)(compute: => DataFrame): Committed = {
       val t0 = System.currentTimeMillis()
       // attribute every Spark job of this stage for StageMetricsListener;
       // always reset (a throwing stage must not misattribute later jobs)
@@ -76,78 +97,97 @@ object Pipeline {
       val (df, n) =
         try snaps.run(name)(compute)
         finally spark.sparkContext.setLocalProperty("graft.stage", null)
-      rows += name -> n
-      walls += name -> (System.currentTimeMillis() - t0)
+      Committed(df, n, System.currentTimeMillis() - t0)
+    }
+
+    def record(name: String, c: Committed): DataFrame = {
+      rows += name -> c.rows
+      walls += name -> c.wallMs
       if (stopAfter.contains(name))
         throw new PipelineStopped(name, Summary(rows, -1, -1, walls))
-      df
+      c.df
     }
+
+    def stage(name: String)(compute: => DataFrame): DataFrame = record(name, commit(name)(compute))
 
     val dictDf = PageGen.dictionary(spark, nEntities).toDF().cache()
 
-    val pages = stage("pages") {
-      inputPages.getOrElse(PageGen.pages(spark, nPages, nEntities).toDF())
-    }
+    // the dictionary branch (see the object doc). The thread inherits a
+    // copy of the caller's local properties (job group, scheduler pool),
+    // and its jobs, the audit's included, carry the `canonical` label.
+    val dictBranch = new FutureTask[Committed](new Callable[Committed] {
+      def call(): Committed = {
+        spark.sparkContext.setLocalProperty("graft.stage", "canonical")
+        Linking.auditQuarantine(dictDf.as[EntityAlias])
+        commit("canonical")(Canonical.canonicalMapping(dictDf, checkpoint = checkpoint))
+      }
+    })
+    val branch = new Thread(dictBranch, "graft-dictionary-branch")
+    branch.setDaemon(true)
+    branch.start()
+    try {
+      val pages = stage("pages") {
+        inputPages.getOrElse(PageGen.pages(spark, nPages, nEntities).toDF())
+      }
 
-    val extracted = stage("extracted") {
-      // html is dead weight after extraction — the snapshot keeps only the
-      // columns downstream stages read (halves post-extract snapshot I/O)
-      lineage.track("extracted")(Extract.run(pages.as[WebPage])).toDF()
-        .select($"url", $"warc_ts", $"text", $"lang")
-    }
+      val extracted = stage("extracted") {
+        // html is dead weight after extraction — the snapshot keeps only the
+        // columns downstream stages read (halves post-extract snapshot I/O)
+        lineage.track("extracted")(Extract.run(pages.as[WebPage])).toDF()
+          .select($"url", $"warc_ts", $"text", $"lang")
+      }
 
-    val mentions = stage("mentions") {
-      val aliasSurfaces = PageGen.entityDictionary(nEntities).map(_.alias)
-      lineage.track("mentions")(
-        Mentions.detect(extracted.select($"url", $"text"), aliasSurfaces)).toDF()
-    }
+      val mentions = stage("mentions") {
+        val aliasSurfaces = PageGen.entityDictionary(nEntities).map(_.alias)
+        lineage.track("mentions")(
+          Mentions.detect(extracted.select($"url", $"text"), aliasSurfaces)).toDF()
+      }
 
-    // the linker scans the mention table ~6 times (distinct surfaces, token
-    // explode, tf, norms, candidate join) — cache the slim columns once
-    // instead of re-reading the snapshot per scan
-    val mentionsSlim = mentions.select($"mention_id", $"surface", $"context").cache()
-    val links = stage("links") {
-      Linking.link(mentionsSlim, dictDf.as[EntityAlias], profiles(spark, nEntities),
-        knownMentionCount = rows.get("mentions")).toDF()
-    }
-    mentionsSlim.unpersist(blocking = false)
+      // the linker scans the mention table ~6 times (distinct surfaces, token
+      // explode, tf, norms, candidate join) — cache the slim columns once
+      // instead of re-reading the snapshot per scan
+      val mentionsSlim = mentions.select($"mention_id", $"surface", $"context").cache()
+      val links = stage("links") {
+        Linking.link(mentionsSlim, dictDf.as[EntityAlias], profiles(spark, nEntities),
+          knownMentionCount = rows.get("mentions")).toDF()
+      }
+      mentionsSlim.unpersist(blocking = false)
 
-    val canonical = stage("canonical") {
-      Canonical.canonicalMapping(dictDf, checkpoint = checkpoint)
-    }
+      val canonical = record("canonical",
+        try dictBranch.get() catch { case e: ExecutionException => throw e.getCause })
 
-    val linked = stage("linked") {
-      links
-        .join(mentions.select($"mention_id", $"url"), "mention_id")
-        .join(canonical, Seq("entity_iri"), "left")
-        .withColumn("canonical_iri", coalesce($"canonical_iri", $"entity_iri"))
-        .join(labels(dictDf).withColumnRenamed("entity_iri", "canonical_iri"), Seq("canonical_iri"))
-        .select($"url", $"canonical_iri", $"label")
-    }
+      val linked = stage("linked") {
+        links
+          .join(mentions.select($"mention_id", $"url"), "mention_id")
+          .join(canonical, Seq("entity_iri"), "left")
+          .withColumn("canonical_iri", coalesce($"canonical_iri", $"entity_iri"))
+          .join(labels(dictDf).withColumnRenamed("entity_iri", "canonical_iri"), Seq("canonical_iri"))
+          .select($"url", $"canonical_iri", $"label")
+      }
 
-    val tEmit = System.currentTimeMillis()
-    spark.sparkContext.setLocalProperty("graft.stage", "emit+materialize")
-    val graphRows =
-      try {
-        val triples = lineage.track("emit")(TripleEmit.emit(pages, linked))
-        // predicate-count ESTIMATES from the stage manifests (exact orders
-        // of magnitude: 3 metadata triples per page, ≤1 mentions + ≤1 label
-        // triple per linked mention) — salting only needs the magnitude,
-        // and estimates avoid a second pass over the lazy emit subtree
-        val predEst = Map(
-          "http://www.w3.org/1999/02/22-rdf-syntax-ns#type" -> rows("pages"),
-          s"${TripleEmit.Kg}lang" -> rows("pages"),
-          s"${TripleEmit.Kg}fetchedAt" -> rows("pages"),
-          s"${TripleEmit.Kg}mentions" -> rows("linked"),
-          s"${TripleEmit.Kg}label" -> rows("linked"))
-        Materialize.writeAdaptive(triples, s"$out/graph", predCounts = Some(predEst))
-        Materialize.read(spark, s"$out/graph").count()
-      } finally spark.sparkContext.setLocalProperty("graft.stage", null)
-    walls += "emit+materialize" -> (System.currentTimeMillis() - tEmit)
+      val tEmit = System.currentTimeMillis()
+      spark.sparkContext.setLocalProperty("graft.stage", "emit+materialize")
+      val graphRows =
+        try {
+          val triples = lineage.track("emit")(TripleEmit.emit(pages, linked))
+          // predicate-count ESTIMATES from the stage manifests (exact orders
+          // of magnitude: 3 metadata triples per page, ≤1 mentions + ≤1 label
+          // triple per linked mention) — salting only needs the magnitude,
+          // and estimates avoid a second pass over the lazy emit subtree
+          val predEst = Map(
+            "http://www.w3.org/1999/02/22-rdf-syntax-ns#type" -> rows("pages"),
+            s"${TripleEmit.Kg}lang" -> rows("pages"),
+            s"${TripleEmit.Kg}fetchedAt" -> rows("pages"),
+            s"${TripleEmit.Kg}mentions" -> rows("linked"),
+            s"${TripleEmit.Kg}label" -> rows("linked"))
+          Materialize.writeAdaptive(triples, s"$out/graph", predCounts = Some(predEst))
+        } finally spark.sparkContext.setLocalProperty("graft.stage", null)
+      walls += "emit+materialize" -> (System.currentTimeMillis() - tEmit)
 
-    lineage.write(spark, s"$out/lineage")
+      lineage.write(spark, s"$out/lineage")
 
-    Summary(rows, graphRows, 0L, walls)
+      Summary(rows, graphRows, 0L, walls)
+    } finally branch.join() // on every exit path: no job of this run outlives it
   }
 
   final class PipelineStopped(val stage: String, val partial: Summary)

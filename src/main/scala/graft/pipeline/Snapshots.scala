@@ -1,7 +1,10 @@
 package graft.pipeline
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Stage-granular resumable snapshots.
   *
@@ -13,13 +16,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * final output byte-identical because every stage is a deterministic
   * function of committed inputs.
   *
+  * The manifest records the stage's row count and schema, so neither a
+  * fresh commit nor a resume runs a Spark job beyond the stage's own
+  * write: the count rides the write as an [[Observation]], and read-backs
+  * pass the schema instead of inferring it from the Parquet footers.
+  *
   * Isolated behind this one class so a real catalog/table-format backend
   * can replace it without touching the stages.
   */
 final class SnapshotStore(root: String, spark: SparkSession, config: String = "") {
-
-  require(!config.contains('"') && !config.contains('\\'),
-    s"snapshot config must not need JSON escaping: $config")
 
   /** Caller config plus the snapshot FORMAT version: a resume must not
     * silently serve stage outputs committed by an older build whose ids
@@ -29,58 +34,62 @@ final class SnapshotStore(root: String, spark: SparkSession, config: String = ""
   private val fullConfig = s"fmt=${SnapshotStore.FormatVersion};$config"
 
   private val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val json = new ObjectMapper()
 
   private def dir(stage: String) = new Path(root, stage)
   private def manifest(stage: String) = new Path(dir(stage), "_manifest.json")
 
-  /** Committed iff data + manifest exist AND the manifest's recorded
-    * config equals ours — re-running a DIFFERENT job (page count, input
-    * identity) into the same out dir must recompute, not silently serve
-    * the previous run's snapshots.
+  /** The stage's manifest when data + manifest exist AND the manifest's
+    * recorded config equals ours — re-running a DIFFERENT job (page count,
+    * input identity) into the same out dir must recompute, not silently
+    * serve the previous run's snapshots. A manifest cut short by a crash
+    * fails its checksum or does not parse, so its stage recomputes.
     */
-  def committed(stage: String): Boolean =
-    fs.exists(new Path(dir(stage), "_SUCCESS")) && fs.exists(manifest(stage)) &&
-      manifestConfig(stage) == fullConfig
+  private def committedManifest(stage: String): Option[JsonNode] =
+    if (!fs.exists(new Path(dir(stage), "_SUCCESS")) || !fs.exists(manifest(stage))) None
+    else {
+      val in = fs.open(manifest(stage))
+      val m =
+        try Option(json.readTree(in))
+        catch { case _: java.io.IOException => None } // incl. JSON parse errors
+        finally in.close()
+      m.filter(_.path("config").asText == fullConfig)
+    }
 
-  private def manifestConfig(stage: String): String = {
-    val in = fs.open(manifest(stage))
-    val text =
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    """"config":"([^"]*)"""".r.findFirstMatchIn(text).map(_.group(1)).getOrElse("")
-  }
+  private def load(stage: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(dir(stage).toString)
 
-  def load(stage: String): DataFrame = spark.read.parquet(dir(stage).toString)
-
-  private def writeManifest(stage: String, rows: Long, wallMs: Long): Unit = {
-    val json =
-      s"""{"stage":"$stage","rows":$rows,"wall_ms":$wallMs,"config":"$fullConfig",""" +
-        s""""committed_at_ms":${System.currentTimeMillis()}}"""
+  private def writeManifest(stage: String, rows: Long, schema: StructType, wallMs: Long): Unit = {
+    val m = json.createObjectNode()
+      .put("stage", stage).put("rows", rows).put("wall_ms", wallMs)
+      .put("config", fullConfig).put("committed_at_ms", System.currentTimeMillis())
+    m.set[JsonNode]("schema", json.readTree(schema.json))
     val out = fs.create(manifest(stage), true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    try out.write(json.writeValueAsBytes(m)) finally out.close()
   }
 
   /** Run a stage through the snapshot gate: skip when committed, else
     * compute → write → manifest → read back (downstream reads the
     * committed bytes, never the in-flight plan). Returns the DataFrame and
-    * its row count (from the committed footers — callers must not pay a
-    * second count job).
+    * its row count. A fresh stage adds no job to its write (the count is
+    * observed on the write); a committed one runs none (count and schema
+    * come from the manifest).
     */
-  def run(stage: String)(compute: => DataFrame): (DataFrame, Long) = {
-    if (committed(stage)) {
-      val df = load(stage)
-      (df, df.count())
-    } else {
-      val t0 = System.currentTimeMillis()
-      compute.write.mode("overwrite").parquet(dir(stage).toString)
-      val back = load(stage)
-      val rows = back.count() // metadata-only parquet count
-      writeManifest(stage, rows, System.currentTimeMillis() - t0)
-      (back, rows)
+  def run(stage: String)(compute: => DataFrame): (DataFrame, Long) =
+    committedManifest(stage) match {
+      case Some(m) =>
+        val schema = DataType.fromJson(m.get("schema").toString).asInstanceOf[StructType]
+        (load(stage, schema), m.get("rows").asLong)
+      case None =>
+        val t0 = System.currentTimeMillis()
+        val df = compute
+        val obs = new Observation(s"snapshot.$stage.${java.util.UUID.randomUUID()}")
+        df.observe(obs, count(lit(1)).as("n"))
+          .write.mode("overwrite").parquet(dir(stage).toString)
+        val rows = obs.get("n").asInstanceOf[Long]
+        writeManifest(stage, rows, df.schema, System.currentTimeMillis() - t0)
+        (load(stage, df.schema), rows)
     }
-  }
 
   def stages(): Seq[String] =
     if (!fs.exists(new Path(root))) Seq.empty
@@ -91,8 +100,8 @@ object SnapshotStore {
   /** Snapshot FORMAT version, folded into every manifest's config gate.
     * Bump on any change that alters committed stage bytes for identical
     * job config — id/hash functions (e.g. `Mentions.mentionId`), stage
-    * schemas, emission rules — so stale-format snapshots recompute
-    * instead of silently serving.
+    * schemas, emission rules, linking ranks — so stale-format snapshots
+    * recompute instead of silently serving.
     */
-  val FormatVersion = 2
+  val FormatVersion = 3
 }

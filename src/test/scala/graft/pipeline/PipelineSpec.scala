@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import java.nio.file.Files
 
@@ -19,6 +20,50 @@ class PipelineSpec extends AnyFunSuite {
 
   private val NPages = 200L
   private val NEntities = 120
+  /** Spark jobs of one fresh `Pipeline.run(spark, NPages, NEntities, _)`
+    * on local[4] with 8 shuffle partitions: 61 to 64 measured, plus 2 for
+    * the run-to-run spread of `canonical`'s job count (20 to 22 per run at
+    * 2,000 entities). A read-back count and a schema-inference job per
+    * stage would take it to 83. */
+  private val RunJobBudget = 66
+  /** Jobs of the graph write alone (its AQE query stages and the write);
+    * a read-back count of the graph would add 3. */
+  private val EmitJobs = 4
+
+  /** Runs `body` and counts the Spark jobs it starts, per `graft.stage`
+    * label ("other" when unlabelled).
+    */
+  private def jobsPerStage[T](body: => T): (T, Map[String, Int]) = {
+    val sc = spark.sparkContext
+    val counts = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val label = Option(e.properties).flatMap(p => Option(p.getProperty("graft.stage")))
+        counts.merge(label.getOrElse("other"), 1, _ + _)
+      }
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val result = body
+      org.apache.spark.ListenerBusDrain(sc)
+      import scala.jdk.CollectionConverters._
+      (result, counts.asScala.toMap)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** No Spark job is running (the status store is current once the
+    * listener bus has drained).
+    */
+  private def assertNoActiveJobs(): Unit = {
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    val active = spark.sparkContext.statusTracker.getActiveJobIds
+    assert(active.isEmpty, s"jobs still running: ${active.mkString(",")}")
+  }
+
+  private def graph(out: String): Array[String] =
+    Materialize.read(spark, s"$out/graph").select("subj", "pred", "obj")
+      .collect().map(_.toString).sorted
 
   test("extraction reproduces the oracle text byte-identically for every url") {
     import spark.implicits._
@@ -70,6 +115,34 @@ class PipelineSpec extends AnyFunSuite {
       assert(s3.stageRows("pages") == 120L)
     } finally
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+  }
+
+  test("a resumed, committed snapshot stage returns the manifest's row count and runs no job") {
+    val root = Files.createTempDirectory("graft_snapresume_").toString
+    try {
+      val snaps = new SnapshotStore(root, spark, "job=resume")
+      val ((_, fresh), freshJobs) =
+        jobsPerStage(snaps.run("s")(spark.range(0L, 37L, 1L, 3).toDF("id")))
+      assert(fresh == 37L)
+      assert(freshJobs.values.sum == 1, s"a fresh stage runs only its write: $freshJobs")
+
+      val ((df, resumed), resumeJobs) = jobsPerStage(
+        new SnapshotStore(root, spark, "job=resume").run("s")(fail("a committed stage recomputed")))
+      val manifest = new String(Files.readAllBytes(
+        java.nio.file.Paths.get(root, "s", "_manifest.json")), "UTF-8")
+      assert(manifest.contains("\"rows\":37"), manifest)
+      assert(resumed == 37L)
+      assert(resumeJobs.isEmpty, s"a resume started jobs: $resumeJobs")
+      assert(df.schema.fieldNames.toSeq == Seq("id") && df.count() == 37L)
+
+      // a manifest cut short by a crash is not a commit: the stage recomputes
+      Files.write(java.nio.file.Paths.get(root, "s", "_manifest.json"),
+        manifest.take(manifest.length / 2).getBytes("UTF-8"))
+      var recomputed = false
+      val (_, again) = snaps.run("s") { recomputed = true; spark.range(0L, 37L, 1L, 3).toDF("id") }
+      assert(recomputed && again == 37L)
+    } finally
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
   test("connectedComponentsDelta: merge, split, new nodes — equals fresh CC; untouched components never enter the loop") {
@@ -232,6 +305,24 @@ class PipelineSpec extends AnyFunSuite {
     assert(checked > 0)
   }
 
+  test("linking ties: an exact alias match beats a same-score look-alike with a lower IRI") {
+    import spark.implicits._
+    // entity 1053 shares entity 13's name words and all three topic
+    // tokens (1053 = 13 mod 26 and mod 40); the context holds the topics
+    // but not the name words, so both entities score the same
+    val n = 1100
+    val surface = PageGen.aliases(13)(1)._1 // the no-space alias, "NimbusCorp13"
+    val context = (Seq("market", "village", surface) ++ PageGen.topicTokens(13) :+ "garden")
+      .mkString(" ")
+    val mentions = Seq((1L, surface, context)).toDF("mention_id", "surface", "context")
+    val dict = PageGen.dictionary(spark, n)
+    val cands = Linking.block(mentions, dict).collect().map(_.getString(1)).toSet
+    assert(Set(13, 1053).map(PageGen.entityIri).subsetOf(cands), cands)
+
+    val got = Linking.link(mentions, dict, Pipeline.profiles(spark, n)).collect()
+    assert(got.map(_.entity_iri).toSeq == Seq(PageGen.entityIri(13)), got.toSeq)
+  }
+
   test("link() releases its working caches — no storage accumulation across jobs") {
     import spark.implicits._
     val pages = PageGen.pages(spark, NPages, NEntities)
@@ -293,6 +384,69 @@ class PipelineSpec extends AnyFunSuite {
     assert(lineage.count() > 0)
     assert(lineage.columns.toSet ==
       Set("stage", "partition_id", "attempt", "rows_in", "rows_out", "wall_ms"))
+  }
+
+  test("one fresh Pipeline.run stays within its job budget: no read-back count jobs") {
+    val out = Files.createTempDirectory("graft-kg-jobs").toString
+    try {
+      val (summary, jobs) = jobsPerStage(Pipeline.run(spark, NPages, NEntities, out))
+      info(s"jobs per stage: ${jobs.toSeq.sorted.mkString(", ")}")
+      Seq("pages", "extracted", "mentions").foreach { st =>
+        assert(jobs.get(st).contains(1), s"$st: ${jobs.get(st)} jobs, want only its write")
+      }
+      // the write's own jobs only: the graph's row count rides the write
+      assert(jobs.get("emit+materialize").exists(_ <= EmitJobs), jobs)
+      assert(summary.graphRows == Materialize.read(spark, s"$out/graph").count())
+      assert(jobs.values.sum <= RunJobBudget, s"${jobs.values.sum} jobs: $jobs")
+    } finally
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+  }
+
+  test("dictionary branch: every stop names its stage, commits it, leaves no job running; resume equals uninterrupted") {
+    val n = 60L
+    val base = Files.createTempDirectory("graft-kg-stops").toFile
+    try {
+      val whole = s"$base/whole"
+      Pipeline.run(spark, n, NEntities, whole)
+      assertNoActiveJobs()
+      Seq("pages", "extracted", "mentions", "links", "canonical", "linked").foreach { st =>
+        val out = s"$base/$st"
+        val stopped = intercept[Pipeline.PipelineStopped] {
+          Pipeline.run(spark, n, NEntities, out, stopAfter = Some(st))
+        }
+        assertNoActiveJobs()
+        assert(stopped.stage == st)
+        assert(stopped.partial.stageRows.contains(st), stopped.partial.stageRows)
+        Seq("_SUCCESS", "_manifest.json").foreach { f =>
+          assert(new java.io.File(s"$out/_stages/$st/$f").exists, s"$st not committed: no $f")
+        }
+        Pipeline.run(spark, n, NEntities, out)
+        assertNoActiveJobs()
+        assert(graph(out).sameElements(graph(whole)), s"resumed after $st differs")
+      }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(base)
+  }
+
+  test("dictionary branch: its failure fails Pipeline.run with that error, without a hang") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val base = Files.createTempDirectory("graft-kg-branchfail").toFile
+    try {
+      // a checkpoint dir under a regular file cannot be created
+      val blocker = new java.io.File(base, "file")
+      Files.write(blocker.toPath, Array[Byte](1))
+      val bad = CheckpointPolicy.Reliable(s"$blocker/ck")
+      val expected = intercept[Exception] {
+        bad.truncate(spark.range(3L).toDF())
+      }
+      val run = Future(Pipeline.run(spark, 40L, NEntities, s"$base/out", checkpoint = bad))
+      val err = intercept[Exception](Await.result(run, 5.minutes))
+      assert(err.getClass == expected.getClass, err)
+      assert(err.getMessage == expected.getMessage, err)
+      assertNoActiveJobs()
+      assert(!new java.io.File(s"$base/out/_stages/canonical/_manifest.json").exists)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(base)
   }
 
   test("lineage dedups retried/speculative task attempts to one row per partition") {
