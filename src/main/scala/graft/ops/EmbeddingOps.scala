@@ -1299,62 +1299,4 @@ object EmbeddingOps {
       .filter(col("rank") <= kk)
       .select(col("vec_id"), col("rank"), col("neighbor_id"), col("dist2"))
   }
-
-  /** CELL-COLOCATED [[knnGraphCells]] — the other end of the
-    * memory-vs-bytes trade: ONE exchange keyed on the cell (every vector
-    * shuffled exactly once — no ×blocks replication) and the exact
-    * per-member top-k computed inside the cell task with BOUNDED heaps
-    * (k entries of (dist2, id) per member — ids and distances only, never
-    * a second copy of the vectors), so the rank window disappears
-    * entirely: the task emits the final k rows per vector directly.
-    *
-    * Trade vs the block-pair shape: shuffle bytes drop ×blocks (the
-    * dominant cost at 10⁹×64-dim — measured in BENCH/BASELINE.md), but
-    * per-task memory grows from 2·|cell|/blocks to |cell| vectors. Pick
-    * this variant when cells are sized to fit an executor (the
-    * [[kmeansRefine]] default at `cells` ∝ corpus/target-cell-size);
-    * pick the block-pair variant when a hot cell would not. Results are
-    * IDENTICAL (both are exact within-cell kNN with (dist2, id) ties —
-    * spec-pinned).
-    */
-  def knnGraphCellsColocated(
-      embeddings: DataFrame,
-      k: Int,
-      cells: Int = IvfCells,
-      dims: Int = 64,
-      iterations: Int = 1,
-      checkpoint: graft.pipeline.CheckpointPolicy =
-        graft.pipeline.CheckpointPolicy.Local): DataFrame = {
-    require(k >= 1 && k <= 1024, s"k=$k out of 1..1024")
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val rows = kmeansRefine(embeddings, cells, dims, iterations, checkpoint,
-      keepVector = true)
-      .select(col("cell"), col("vec_id"), col("g"), col("n"))
-      .as[(Long, Long, Array[Long], Long)]
-    val kk = k
-    rows.groupByKey(_._1).flatMapGroups { (_, it) =>
-      val members = it.map { case (_, id, vec, n) => (id, vec, n) }.toArray
-      // worst-on-top heap per member: (dist2, neighbor) under the
-      // (dist2 ASC, id ASC) total order, capped at k
-      val heapOrd = Ordering.Tuple2(Ordering.Long, Ordering.Long)
-      members.iterator.flatMap { case (x, gx, nx) =>
-        val heap = scala.collection.mutable.PriorityQueue.empty[(Long, Long)](heapOrd)
-        var i = 0
-        while (i < members.length) {
-          val (y, gy, ny) = members(i)
-          if (y != x) {
-            val d = dist2Kernel(gx, nx, gy, ny)
-            if (heap.size < kk) heap.enqueue((d, y))
-            else if (heapOrd.lt((d, y), heap.head)) { heap.dequeue(); heap.enqueue((d, y)) }
-          }
-          i += 1
-        }
-        val worstFirst: Seq[(Long, Long)] = heap.dequeueAll
-        worstFirst.reverseIterator.zipWithIndex.map { case ((d, y), r) =>
-          (x, (r + 1).toLong, y, d)
-        }
-      }
-    }.toDF("vec_id", "rank", "neighbor_id", "dist2")
-  }
 }

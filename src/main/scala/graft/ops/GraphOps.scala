@@ -208,36 +208,6 @@ object GraphOps {
       .toDF("doc_id", "subj", "pred", "obj")
   }
 
-  /** Distributed N-Triples SINK — the reference's serializer surface at
-    * scale. Each TripleRow renders to one NT line by pure codegen'd string
-    * concat, because the row columns already hold N-Triples term syntax
-    * (that invariant is the point of the TripleRow encoding; the escape
-    * table was applied when the term was rendered). NT carries no lineage
-    * columns — the parquet graph table stays the system of record, `.nt`
-    * is the interchange EXPORT.
-    */
-  def writeNTriples(triples: org.apache.spark.sql.Dataset[graft.pipeline.TripleRow],
-      path: String): Unit =
-    triples.toDF()
-      .select(concat(col("subj"), lit(" <"), col("pred"), lit("> "),
-        col("obj"), lit(" .")).as("value"))
-      .write.mode("overwrite").text(path)
-
-  /** N-Triples SOURCE: text lines parsed per-partition with the
-    * conformance-tested NT parser (one line = one triple in NT; the parser
-    * is the same one that validates the golden fixtures).
-    */
-  def readNTriples(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.read.textFile(path)
-      .mapPartitions(_.flatMap { line =>
-        graft.turtle.NTriples.parse(line) match {
-          case Right(ts) => ts.iterator.map(t => (t.subj.render, t.pred, t.obj.render))
-          case Left(e)   => throw new IllegalStateException(s"bad NT line `$line`: $e")
-        }
-      }).toDF("subj", "pred", "obj")
-  }
-
   /** Serializer round-trip at scale (kg11): parse each doc's Turtle, render
     * with the N-Triples serializer, re-parse the rendered document with the
     * independent NT parser — output the REPARSED triples. Identity with
@@ -1027,14 +997,12 @@ object GraphOps {
       where: Seq[ChainPattern],
       predCounts: Map[String, Long],
       srcUrl: String,
-      ts: java.sql.Timestamp,
-      predBuckets: Int = graft.pipeline.Materialize.DefaultPredBuckets,
-      salt: Int = graft.pipeline.Materialize.DefaultSalt): Unit = {
+      ts: java.sql.Timestamp): Unit = {
     require(delete.nonEmpty || insert.nonEmpty,
       "DELETE/INSERT WHERE with no templates is a no-op")
     val M = graft.pipeline.Materialize
     val sol = bgpChain(
-      (p: String) => M.readMergedPred(spark, out, p, predBuckets),
+      (p: String) => M.readMergedPred(spark, out, p),
       where, predCounts)
     val adds = if (insert.isEmpty) None else Some(construct(sol, insert))
     val dels = (if (delete.isEmpty) None else Some(construct(sol, delete)))
@@ -1048,7 +1016,7 @@ object GraphOps {
       .withColumn("src_url", lit(srcUrl))
       .withColumn("warc_ts", lit(ts))
       .localCheckpoint()
-    M.appendDeltaOps(spark, out, batch, predBuckets, salt)
+    M.appendDeltaOps(spark, out, batch)
   }
 
   /** [[updateWhere]] scoped to ONE NAMED GRAPH of a quad LSM table —
@@ -1072,16 +1040,14 @@ object GraphOps {
       where: Seq[ChainPattern],
       predCounts: Map[String, Long],
       srcUrl: String,
-      ts: java.sql.Timestamp,
-      predBuckets: Int = graft.pipeline.Materialize.DefaultPredBuckets,
-      salt: Int = graft.pipeline.Materialize.DefaultSalt): Unit = {
+      ts: java.sql.Timestamp): Unit = {
     require(delete.nonEmpty || insert.nonEmpty,
       "DELETE/INSERT WHERE with no templates is a no-op")
     val M = graft.pipeline.Materialize
     val merged = M.readMergedQuads(spark, out)
     val sol = bgpChain(
       (p: String) => merged.filter(col("graph") === graph &&
-        col("pred_hash") === pmod(xxhash64(lit(p)), lit(predBuckets))),
+        col("pred_hash") === M.predHash(lit(p))),
       where, predCounts)
     val adds = if (insert.isEmpty) None else Some(construct(sol, insert))
     val dels = (if (delete.isEmpty) None else Some(construct(sol, delete)))
@@ -1093,7 +1059,7 @@ object GraphOps {
       .withColumn("src_url", lit(srcUrl))
       .withColumn("warc_ts", lit(ts))
       .localCheckpoint()
-    M.appendQuadDeltaOps(spark, out, batch, predBuckets, salt)
+    M.appendQuadDeltaOps(spark, out, batch)
   }
 
   // -------------------------------------------- SPARQL term functions

@@ -66,12 +66,6 @@ object SketchOps {
       .agg(max(col("rho")).as("m"))
   }
 
-  /** Merge register tables (the per-day roll-up): max per (group, bucket). */
-  def hllMerge(registerTables: DataFrame*): DataFrame =
-    registerTables.reduce(_ unionByName _)
-      .groupBy(registerTables.head.columns.take(2).map(col): _*)
-      .agg(max(col("m")).as("m"))
-
   /** Estimate per group from a register table, with the linear-counting
     * small-range branch applied exactly as the oracle does.
     */
@@ -140,12 +134,6 @@ object SketchOps {
       .groupBy(col(groupCol), col("bucket"))
       .agg(count(lit(1)).as("cnt"), min(col("v")).as("rep"))
   }
-
-  /** Merge sketch tables (per-day roll-up): sum cnt, min rep per bucket. */
-  def qsMerge(sketches: DataFrame*): DataFrame =
-    sketches.reduce(_ unionByName _)
-      .groupBy(sketches.head.columns.take(2).map(col): _*)
-      .agg(sum(col("cnt")).as("cnt"), min(col("rep")).as("rep"))
 
   /** Percent-rank estimates per group from a sketch: rank = ⌈q%·n/100⌉ in
     * exact integer arithmetic, estimate = rep of the FIRST bucket whose
@@ -239,12 +227,6 @@ object SketchOps {
       .agg(count(lit(1)).as("cnt"))
   }
 
-  /** Merge sketch cell tables (per-day roll-up): cell-wise sum. */
-  def cmMerge(sketches: DataFrame*): DataFrame =
-    sketches.reduce(_ unionByName _)
-      .groupBy(col("row"), col("cell"))
-      .agg(sum(col("cnt")).as("cnt"))
-
   /** Point-estimate frequencies for `keys` (a DataFrame with `keyCol`):
     * min over the depth rows of each key's cell count (absent cell = 0).
     * The keys side fans out ×depth and joins the (tiny) cell table —
@@ -322,9 +304,7 @@ object SketchOps {
     * positives are bounded by the standard (1 − e^{−kn/m})^k and are
     * COUNTED in the q40 output rather than hidden. The salted-md5 index
     * is the cross-engine-checkable choice (the q40 bench time is mostly
-    * the k md5 evaluations per probe row); a production deployment swaps
-    * in xxhash64 for much cheaper probes — the structure (bitmap literal,
-    * zero-exchange pure filter) is unchanged.
+    * the k md5 evaluations per probe row).
     */
   val BloomBits = 4096
   val BloomK = 3
@@ -332,37 +312,10 @@ object SketchOps {
   private def bloomIdx(keyCol: Column, j: Int): Column =
     TextOps.md5Hash60Col(concat(lit(s"bf$j:"), keyCol.cast("string"))) % BloomBits
 
-  /** PRODUCTION-hash index: `xxhash64(seed=j, key)` — one codegen'd
-    * 64-bit mix per probe instead of an md5 digest of a rendered string
-    * (q40's bench wall is ~3 md5 evaluations per probe row; this removes
-    * them). Not cross-engine-reproducible (DuckDB has no xxhash64 with
-    * Spark's seeding), so the fast family is pinned by a Spark-side
-    * no-false-negative property test while the md5 family keeps the
-    * DuckDB-checked q40 entry.
-    */
-  private def bloomIdxFast(keyCol: Column, j: Int): Column =
-    pmod(xxhash64(lit(j), keyCol), lit(BloomBits.toLong))
-
-  private def bloomBuildWith(
-      build: DataFrame, keyCol: String, idx: (Column, Int) => Column): DataFrame =
-    build.select(explode(array((0 until BloomK).map(j =>
-      idx(col(keyCol), j)): _*)).as("bf_idx")).distinct()
-
-  private def bloomProbeWith(
-      probe: DataFrame, keyCol: String, idxSet: DataFrame,
-      idx: (Column, Int) => Column): DataFrame = {
-    val bits = new Array[Int](BloomBits)
-    idxSet.collect().foreach(r => bits(r.getLong(0).toInt) = 1) // ≤ BloomBits rows
-    val bitsLit = typedLit(bits.toSeq)
-    val cond = (0 until BloomK).map { j =>
-      element_at(bitsLit, (idx(col(keyCol), j) + 1L).cast("int")) === 1
-    }.reduce(_ && _)
-    probe.filter(cond)
-  }
-
   /** Build: the distinct set-bit indexes of the build side's keys. */
   def bloomBuild(build: DataFrame, keyCol: String): DataFrame =
-    bloomBuildWith(build, keyCol, bloomIdx)
+    build.select(explode(array((0 until BloomK).map(j =>
+      bloomIdx(col(keyCol), j)): _*)).as("bf_idx")).distinct()
 
   /** Probe: keep the rows whose EVERY index is present. The index set —
     * bounded by [[BloomBits]] regardless of build cardinality — collects
@@ -371,18 +324,15 @@ object SketchOps {
     * probe side (plan-guarded) — the property that makes a pre-filter
     * ahead of a shuffle join worth anything.
     */
-  def bloomFilterProbe(probe: DataFrame, keyCol: String, idxSet: DataFrame): DataFrame =
-    bloomProbeWith(probe, keyCol, idxSet, bloomIdx)
-
-  /** [[bloomBuild]]/[[bloomFilterProbe]] with the xxhash64 index family —
-    * the variant a production deployment runs (same bitmap structure,
-    * same no-false-negative guarantee, ~free probes).
-    */
-  def bloomBuildFast(build: DataFrame, keyCol: String): DataFrame =
-    bloomBuildWith(build, keyCol, bloomIdxFast)
-
-  def bloomFilterProbeFast(probe: DataFrame, keyCol: String, idxSet: DataFrame): DataFrame =
-    bloomProbeWith(probe, keyCol, idxSet, bloomIdxFast)
+  def bloomFilterProbe(probe: DataFrame, keyCol: String, idxSet: DataFrame): DataFrame = {
+    val bits = new Array[Int](BloomBits)
+    idxSet.collect().foreach(r => bits(r.getLong(0).toInt) = 1) // ≤ BloomBits rows
+    val bitsLit = typedLit(bits.toSeq)
+    val cond = (0 until BloomK).map { j =>
+      element_at(bitsLit, (bloomIdx(col(keyCol), j) + 1L).cast("int")) === 1
+    }.reduce(_ && _)
+    probe.filter(cond)
+  }
 
   /** DuckDB twin of the q40 composition over lineitem×part: per-group
     * bloom-pass count, exact-match count, and the (counted, not hidden)

@@ -7,7 +7,8 @@ import org.apache.spark.util.CollectionAccumulator
 /** Per-partition lineage/metrics (north_rule: "per-partition lineage +
   * metrics"): a pass-through `mapPartitions` wrapper counts rows and wall
   * time per (stage, partition) into a collection accumulator; the driver
-  * persists the rows as a `lineage` Parquet table after each action.
+  * persists the rows as a `stage`-partitioned `lineage` Parquet table
+  * after each run.
   */
 object Lineage {
 
@@ -58,9 +59,17 @@ object Lineage {
         .toSeq.sortBy(r => (r.stage, r.partition_id))
     }
 
+    /** Writes the rows partitioned by `stage`, replacing only the stages
+      * this run tracked: a rerun into the same `out` recomputes some
+      * stages and resumes the rest from snapshots, so a resumed stage
+      * keeps its rows and a recomputed one gets exactly one set.
+      */
     def write(spark: SparkSession, out: String): Unit = {
       import spark.implicits._
-      spark.createDataset(rows).coalesce(1).write.mode("append").parquet(out)
+      spark.createDataset(rows).coalesce(1).write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("stage")
+        .parquet(out)
     }
   }
 

@@ -23,7 +23,7 @@ import org.apache.spark.sql.expressions.Window
   *
   * The alias-quarantine audit ([[auditQuarantine]]) is not part of
   * [[link]]: `Pipeline.run` runs it on its dictionary branch, beside the
-  * page chain, and [[block]] keeps it behind an opt-in flag.
+  * page chain.
   */
 object Linking {
 
@@ -99,15 +99,13 @@ object Linking {
     * quarantined; callers inspecting a recall regression read this table
     * offline.
     */
-  def aliasHotBands(
-      dict: Dataset[EntityAlias],
-      maxAliasBandBucket: Int = MaxAliasBandBucket): DataFrame = {
+  def aliasHotBands(dict: Dataset[EntityAlias]): DataFrame = {
     val spark = dict.sparkSession
     import spark.implicits._
     dict.flatMap(ea => bandKeys(ea.alias).map { case (b, h) => (b, h) })
       .toDF("band_id", "band_hash")
       .groupBy($"band_id", $"band_hash").agg(count(lit(1)).as("n_aliases"))
-      .filter($"n_aliases" > maxAliasBandBucket)
+      .filter($"n_aliases" > MaxAliasBandBucket)
   }
 
   private val logger = org.slf4j.LoggerFactory.getLogger("graft.pipeline.Linking")
@@ -115,32 +113,20 @@ object Linking {
   /** Runs the quarantine audit (a dictionary-sized Spark action) and
     * warns when any alias band-bucket is quarantined.
     */
-  def auditQuarantine(
-      dict: Dataset[EntityAlias],
-      maxAliasBandBucket: Int = MaxAliasBandBucket): Unit = {
-    val nHotBuckets = aliasHotBands(dict, maxAliasBandBucket).count()
+  def auditQuarantine(dict: Dataset[EntityAlias]): Unit = {
+    val nHotBuckets = aliasHotBands(dict).count()
     if (nHotBuckets > 0)
       logger.warn(s"Linking: quarantined $nHotBuckets alias band-bucket(s) " +
-        s"larger than $maxAliasBandBucket from the LSH band join " +
+        s"larger than $MaxAliasBandBucket from the LSH band join " +
         "(exact-match recall unaffected; see Linking.aliasHotBands)")
   }
 
   /** Stage 1: blocking. `mentions` needs (mention_id, surface) columns.
     * Output: (mention_id, entity_iri, exact) candidate pairs, where
     * `exact` says the surface is one of the entity's aliases verbatim. */
-  def block(
-      mentions: DataFrame,
-      dict: Dataset[EntityAlias],
-      maxAliasBandBucket: Int = MaxAliasBandBucket,
-      auditQuarantine: Boolean = false): DataFrame = {
+  def block(mentions: DataFrame, dict: Dataset[EntityAlias]): DataFrame = {
     val spark = mentions.sparkSession
     import spark.implicits._
-
-    // quarantine audit (opt-in): a flooded alias universe is a
-    // data-quality event worth surfacing, but the audit is its own Spark
-    // job over the dictionary, so the common unflooded path doesn't pay it
-    // per call — [[aliasHotBands]] stays the offline surface either way.
-    if (auditQuarantine) this.auditQuarantine(dict, maxAliasBandBucket)
 
     // distinct surfaces only — the band fan-out runs once per unique string,
     // not once per occurrence (mentions of hot entities are heavily skewed).
@@ -162,7 +148,7 @@ object Linking {
     val wBand = Window.partitionBy($"band_id", $"band_hash")
     val aliasCapped = aliasBands
       .withColumn("_bucket_n", count(lit(1)).over(wBand))
-      .filter($"_bucket_n" <= maxAliasBandBucket)
+      .filter($"_bucket_n" <= MaxAliasBandBucket)
       .drop("_bucket_n")
 
     // dictionary side is the small side → broadcast hash join, no shuffle
@@ -185,7 +171,8 @@ object Linking {
       .localCheckpoint()
     // blocking: the default async removal races any storage accounting the
     // caller does right after return (surfaced as PipelineSpec flakiness
-    // once the opt-in audit stopped adding a job between persist and here)
+    // once the quarantine audit stopped adding a job between persist and
+    // here)
     distinctSurfaces.unpersist(blocking = true)
 
     // broadcast so the (big, skewed) mention table never shuffles on the
@@ -197,13 +184,15 @@ object Linking {
 
   /** Stage 2+3: TF-IDF cosine scoring + top-1 argmax.
     * `candidates`: [[block]]'s (mention_id, entity_iri, exact) pairs;
-    * `profiles`: (entity_iri, token) exploded entity profiles.
+    * `profiles`: (entity_iri, token) exploded entity profiles;
+    * `nMentions`: |mentions|, the IDF's document count (the orchestrator
+    * knows it from its stage manifest, so it costs no scan here).
     */
   def scoreAndRank(
       mentions: DataFrame,
       candidates: DataFrame,
       profiles: DataFrame,
-      knownMentionCount: Option[Long] = None): Dataset[Candidate] = {
+      nMentions: Long): Dataset[Candidate] = {
     val spark = mentions.sparkSession
     import spark.implicits._
 
@@ -225,11 +214,6 @@ object Linking {
       .filter(length($"token") > 0)
       .select($"mention_id", xxhash64($"token").as("tid"))
 
-    // the orchestrator already knows |mentions| from its stage manifest —
-    // don't pay another scan when provided
-    val nMentions = knownMentionCount
-      .getOrElse(mentions.select($"mention_id").distinct().count()).toDouble
-
     // ONE pass over the exploded token table (the widest data in the
     // stage): pre-aggregate (mention_id, tid) → tf, then derive BOTH the
     // per-mention weights and the document frequencies from it. Before,
@@ -245,7 +229,7 @@ object Linking {
     // broadcasts (mention weights + entity weights) and is tiny.
     val idf = tf
       .groupBy($"tid").agg(count(lit(1)).as("df"))
-      .withColumn("idf", log(lit(1.0) + lit(nMentions) / $"df"))
+      .withColumn("idf", log(lit(1.0) + lit(nMentions.toDouble) / $"df"))
       .cache()
 
     // cheap projection over the cached tf (broadcast join) — recomputing it
@@ -306,6 +290,6 @@ object Linking {
       mentions: DataFrame,
       dict: Dataset[EntityAlias],
       profiles: DataFrame,
-      knownMentionCount: Option[Long] = None): Dataset[Candidate] =
-    scoreAndRank(mentions, block(mentions, dict), profiles, knownMentionCount)
+      nMentions: Long): Dataset[Candidate] =
+    scoreAndRank(mentions, block(mentions, dict), profiles, nMentions)
 }

@@ -13,9 +13,22 @@ import org.apache.spark.sql.functions._
   * hot predicate fans out across S tasks. S is DATA-DRIVEN per predicate
   * (see [[saltPlan]]): a cheap `groupBy(pred).count` sketch (or
   * caller-provided estimates) sizes each predicate's fan-out to
-  * `targetRowsPerSalt` rows per write task, floored so total write
+  * [[TargetRowsPerSalt]] rows per write task, floored so total write
   * parallelism never collapses for small pred vocabularies, capped at
   * [[MaxSalt]]. AQE remains on as the backstop for residual skew.
+  *
+  * The bucket count [[DefaultPredBuckets]] is the TABLE FORMAT, not a
+  * tuning knob: every writer and every pruned reader ([[readPred]],
+  * [[readMergedPred]], anything filtering on [[predHash]]) must agree on
+  * it, so no public function takes it — or the fixed salt
+  * [[DefaultSalt]] — as a parameter. Changing it invalidates every table
+  * already written: pruned reads would look in the wrong bucket and
+  * silently return nothing.
+  *
+  * A table holds triples (subj, pred, obj, …) or quads (graph, subj,
+  * pred, obj, …) for its whole lifetime. Each operation has ONE body for
+  * both: its content key columns ([[contentKeys]]) come from the schema
+  * of its input or of the base table.
   */
 object Materialize {
 
@@ -33,8 +46,19 @@ object Materialize {
     */
   val MaxSalt = 256
 
-  def withPredHash(df: DataFrame, predBuckets: Int = DefaultPredBuckets): DataFrame =
-    df.withColumn("pred_hash", pmod(xxhash64(col("pred")), lit(predBuckets)))
+  /** The layout's partition key of a predicate column or literal — the
+    * one pred_hash expression every writer and pruned reader shares.
+    */
+  def predHash(pred: Column): Column = pmod(xxhash64(pred), lit(DefaultPredBuckets))
+
+  private def withPredHash(df: DataFrame): DataFrame =
+    df.withColumn("pred_hash", predHash(col("pred")))
+
+  /** Content key columns of graph rows: (subj, pred, obj), with `graph`
+    * in front for a quad table.
+    */
+  private def contentKeys(df: DataFrame): Seq[String] =
+    (if (df.columns.contains("graph")) Seq("graph") else Nil) ++ Seq("subj", "pred", "obj")
 
   /** Cheap predicate-frequency sketch: a column-pruned, map-side-combined
     * aggregate whose shuffle is |distinct preds| rows. Only the top
@@ -52,7 +76,7 @@ object Materialize {
     * at most [[MaxSalt]]. Estimates are fine — S only needs the order of
     * magnitude.
     */
-  def saltPlan(
+  private[pipeline] def saltPlan(
       predCounts: Map[String, Long],
       targetRowsPerSalt: Long = TargetRowsPerSalt,
       maxSalt: Int = MaxSalt,
@@ -74,6 +98,13 @@ object Materialize {
     pmod(xxhash64(col("subj")), s)
   }
 
+  /** Rows hashed to their pred_hash and clustered by (pred_hash,
+    * subj_salt) — the one exchange of every write path.
+    */
+  private def salted(rows: DataFrame, plan: Map[String, Int], defaultSalt: Int): DataFrame =
+    withPredHash(rows).withColumn("subj_salt", saltCol(plan, defaultSalt))
+      .repartition(col("pred_hash"), col("subj_salt"))
+
   /** Dedup + partition — ONE shuffle of the triple table (the largest
     * table in the job; round 1 shuffled it twice: a dropDuplicates
     * exchange on hash(s,p,o) followed by the salted repartition).
@@ -87,29 +118,32 @@ object Materialize {
     * shuffle→aggregate→write pipeline is one exchange, and the write
     * stays clustered by pred_hash. Provenance per (s,p,o) is the MIN
     * (src_url, warc_ts) pair — deterministic, unlike dropDuplicates-first.
+    *
+    * Quads dedup the same way with `graph` in the group keys, and delta
+    * rows with their `op` (an add and a del of one triple are two rows).
     */
   private[pipeline] def saltedDeduped(
-      triples: DataFrame,
-      predBuckets: Int,
+      rows: DataFrame,
       plan: Map[String, Int],
       defaultSalt: Int): DataFrame = {
-    val df = withPredHash(triples, predBuckets)
-      .withColumn("subj_salt", saltCol(plan, defaultSalt))
-    df.repartition(col("pred_hash"), col("subj_salt"))
-      .groupBy(col("pred_hash"), col("subj_salt"), col("subj"), col("pred"), col("obj"))
+    val content = contentKeys(rows)
+    val op = rows.columns.filter(_ == "op").toSeq
+    salted(rows, plan, defaultSalt)
+      .groupBy((Seq("pred_hash", "subj_salt") ++ content ++ op).map(col): _*)
       .agg(min(struct(col("src_url"), col("warc_ts"))).as("prov"))
-      .select(col("subj"), col("pred"), col("obj"),
-        col("prov.src_url").as("src_url"), col("prov.warc_ts").as("warc_ts"),
-        col("pred_hash"))
+      .select(content.map(col) ++ Seq(
+        col("prov.src_url").as("src_url"), col("prov.warc_ts").as("warc_ts")) ++
+        op.map(col) :+ col("pred_hash"): _*)
   }
 
-  /** Fixed-salt write (every predicate fans out ×`salt`). */
-  def write(
-      triples: Dataset[TripleRow],
-      out: String,
-      predBuckets: Int = DefaultPredBuckets,
-      salt: Int = DefaultSalt): Unit =
-    saltedDeduped(triples.toDF(), predBuckets, Map.empty, salt)
+  /** Fixed-salt write (every predicate fans out ×[[DefaultSalt]]). */
+  def write(triples: Dataset[TripleRow], out: String): Unit = writeRows(triples.toDF(), out)
+
+  /** [[write]] for quads (graph, subj, pred, obj, src_url, warc_ts). */
+  def writeQuads(quads: DataFrame, out: String): Unit = writeRows(quads, out)
+
+  private def writeRows(rows: DataFrame, out: String): Unit =
+    saltedDeduped(rows, Map.empty, DefaultSalt)
       .write.mode("overwrite")
       .partitionBy("pred_hash")
       .parquet(out)
@@ -126,22 +160,19 @@ object Materialize {
   def writeAdaptive(
       triples: Dataset[TripleRow],
       out: String,
-      predBuckets: Int = DefaultPredBuckets,
-      predCounts: Option[Map[String, Long]] = None,
-      targetRowsPerSalt: Long = TargetRowsPerSalt,
-      maxSalt: Int = MaxSalt): Long = {
+      predCounts: Option[Map[String, Long]] = None): Long = {
     val df = triples.toDF()
     val counts = predCounts.getOrElse(sketchPredCounts(df))
     val shuffleP = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
     // the parallelism floor obeys the same ceiling the plan does — a
     // 1-predicate sketch under a large shuffle-partition setting must not
-    // fan unplanned predicates out beyond maxSalt
-    val baseSalt = math.min(maxSalt,
+    // fan unplanned predicates out beyond MaxSalt
+    val baseSalt = math.min(MaxSalt,
       math.max(1, (2 * shuffleP + counts.size - 1) / math.max(counts.size, 1)))
-    val plan = saltPlan(counts, targetRowsPerSalt, maxSalt, baseSalt)
+    val plan = saltPlan(counts, baseSalt = baseSalt)
     val obs = new org.apache.spark.sql.Observation(
       s"materialize.write.${java.util.UUID.randomUUID()}")
-    saltedDeduped(df, predBuckets, plan, baseSalt)
+    saltedDeduped(df, plan, baseSalt)
       .observe(obs, count(lit(1)).as("n"))
       .write.mode("overwrite")
       .partitionBy("pred_hash")
@@ -157,7 +188,7 @@ object Materialize {
     * partition overwrite) — the incremental-update path at 100 TB, where a
     * daily crawl delta is ≪ the graph and a full rewrite is the thing to
     * avoid. Steps: (1) the touched partition set — bounded by
-    * `predBuckets`, never by data — prunes the existing-side read to those
+    * [[DefaultPredBuckets]], never by data — prunes the existing-side read to those
     * partitions (PartitionFilters); (2) existing ∪ delta goes through the
     * same one-exchange [[saltedDeduped]] as a full write, so merged
     * duplicates collapse with the same deterministic min-provenance rule;
@@ -181,25 +212,34 @@ object Materialize {
       spark: org.apache.spark.sql.SparkSession,
       out: String,
       delta: Dataset[TripleRow],
-      predBuckets: Int = DefaultPredBuckets,
-      salt: Int = DefaultSalt,
       checkpoint: CheckpointPolicy = CheckpointPolicy.Local): Unit = {
     // the delta subtree is consumed twice (touched-set collect + the
     // merge union) — materialize it once through the policy
     val deltaDf = checkpoint.truncate(delta.toDF())
-    val touched = withPredHash(deltaDf, predBuckets)
-      .select(col("pred_hash")).distinct()
-      .collect().map(_.getLong(0))
+    val touched = touchedBuckets(withPredHash(deltaDf))
     val existing = read(spark, out)
       .filter(col("pred_hash").isin(touched: _*))
       .select(col("subj"), col("pred"), col("obj"), col("src_url"), col("warc_ts"))
-    val merged = checkpoint.truncate(
-      saltedDeduped(existing.unionByName(deltaDf), predBuckets, Map.empty, salt))
-    merged.write.mode("overwrite")
+    overwritePartitions(
+      checkpoint.truncate(saltedDeduped(existing.unionByName(deltaDf), Map.empty, DefaultSalt)),
+      out)
+  }
+
+  /** The distinct pred_hash values of `rows` — bounded by
+    * [[DefaultPredBuckets]], never by data. Partition discovery types
+    * pred_hash as int, so it is cast before collecting.
+    */
+  private def touchedBuckets(rows: DataFrame): Array[Long] =
+    rows.select(col("pred_hash").cast("long")).distinct().collect().map(_.getLong(0))
+
+  /** Dynamic partition overwrite: replaces only the pred_hash partitions
+    * present in `rows`; every other partition is never listed or rewritten.
+    */
+  private def overwritePartitions(rows: DataFrame, out: String): Unit =
+    rows.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("pred_hash")
       .parquet(out)
-  }
 
   // -------------------------------------------------- LSM-style delta path
   //
@@ -274,28 +314,22 @@ object Materialize {
   def appendDelta(
       spark: org.apache.spark.sql.SparkSession,
       out: String,
-      delta: Dataset[TripleRow],
-      predBuckets: Int = DefaultPredBuckets,
-      salt: Int = DefaultSalt): Unit =
-    appendDeltaOps(spark, out, delta.toDF().withColumn("op", lit(OpAdd)),
-      predBuckets, salt)
+      delta: Dataset[TripleRow]): Unit =
+    appendDeltaOps(spark, out, delta.toDF().withColumn("op", lit(OpAdd)))
 
   /** [[appendDelta]] for mixed assertions + retractions: `deltaOps` rows
     * are (subj, pred, obj, src_url, warc_ts, op) with op ∈ {add, del}
     * (a del's provenance columns are carried but never surface — only
-    * live assertions contribute provenance).
+    * live assertions contribute provenance). Quad deltas carry `graph`
+    * too, and their tombstones retract within that graph only.
     */
   def appendDeltaOps(
       spark: org.apache.spark.sql.SparkSession,
       out: String,
-      deltaOps: DataFrame,
-      predBuckets: Int = DefaultPredBuckets,
-      salt: Int = DefaultSalt): Unit = {
-    val ops = deltaOps.select(col("subj"), col("pred"), col("obj"),
-      col("src_url"), col("warc_ts"), col("op"))
+      deltaOps: DataFrame): Unit = {
+    val ops = deltaOps.select(
+      (contentKeys(deltaOps) ++ Seq("src_url", "warc_ts", "op")).map(col): _*)
     val seq = deltaBatchCount(spark, out) + 1L
-    val df = withPredHash(ops, predBuckets)
-      .withColumn("subj_salt", saltCol(Map.empty, salt))
     // count rows DURING the write (observe rides the job) instead of a
     // separate isEmpty pre-check — the former shape evaluated the caller's
     // delta subtree twice per append (once for the probe, once for the
@@ -305,13 +339,8 @@ object Materialize {
     // phantom batches.
     val obs = new org.apache.spark.sql.Observation(
       s"lsm.append.${java.util.UUID.randomUUID()}")
-    df.repartition(col("pred_hash"), col("subj_salt"))
-      .groupBy(col("pred_hash"), col("subj_salt"),
-        col("subj"), col("pred"), col("obj"), col("op"))
-      .agg(min(struct(col("src_url"), col("warc_ts"))).as("prov"))
-      .select(col("subj"), col("pred"), col("obj"),
-        col("prov.src_url").as("src_url"), col("prov.warc_ts").as("warc_ts"),
-        col("op"), lit(seq).as("batch_seq"), col("pred_hash"))
+    saltedDeduped(ops, Map.empty, DefaultSalt)
+      .withColumn("batch_seq", lit(seq))
       .observe(obs, count(lit(1)).as("n"))
       .write.mode("append").partitionBy("pred_hash").parquet(deltaDir(out))
     if (obs.get("n").asInstanceOf[Long] > 0L) {
@@ -335,16 +364,17 @@ object Materialize {
   }
 
   /** Tombstone resolution over (…, op, batch_seq) rows already clustered
-    * by a hash partitioning whose expressions are a subset of `keys`: a
-    * window over `keys` finds each triple's latest retraction seq, adds
-    * strictly newer than it survive, and the surviving assertions collapse
-    * to the MIN provenance — window + filter + aggregate all ride the
-    * SAME clustering, so the whole resolution costs the ONE exchange the
+    * by a hash partitioning whose expressions are a subset of the keys
+    * `clustering` ++ [[contentKeys]]: a window over the keys finds each
+    * triple's (or quad's) latest retraction seq, adds strictly newer than
+    * it survive, and the surviving assertions collapse to the MIN
+    * provenance — window + filter + aggregate all ride the SAME
+    * clustering, so the whole resolution costs the ONE exchange the
     * caller already paid.
     */
-  private def resolveOps(
-      rows: DataFrame, keys: Seq[String],
-      carry: Seq[String] = Seq("subj", "pred", "obj")): DataFrame = {
+  private def resolveOps(rows: DataFrame, clustering: Seq[String]): DataFrame = {
+    val carry = contentKeys(rows)
+    val keys = clustering ++ carry
     val w = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
     rows
       .withColumn("_dseq",
@@ -364,7 +394,9 @@ object Materialize {
     * the (vast, at 100 TB) untouched remainder of the base streams through
     * as a plain pruned scan — merge-on-read, not shuffle-the-world
     * (plan-guarded: the untouched branch has no Exchange). The touched set
-    * is bounded by predBuckets, never by data.
+    * is bounded by [[DefaultPredBuckets]], never by data. On a quad table
+    * `graph` joins the resolution keys, so retractions stay scoped to
+    * their named graph.
     */
   def readMerged(spark: org.apache.spark.sql.SparkSession, out: String): DataFrame =
     mergedView(spark, out, None)
@@ -393,21 +425,18 @@ object Materialize {
     else {
       val deltas = asOf.foldLeft(spark.read.parquet(deltaDir(out)))(
         (d, seq) => d.filter(col("batch_seq") <= seq))
-      // partition discovery types pred_hash as int — align before isin;
       // under an asOf cut the touched set shrinks to the CUT's partitions
-      val touched = deltas.select(col("pred_hash").cast("int")).distinct()
-        .collect().map(_.getInt(0)) // bounded by predBuckets, never by data
-      val outCols = Seq("subj", "pred", "obj", "src_url", "warc_ts", "pred_hash").map(col)
+      val touched = touchedBuckets(deltas)
+      val content = contentKeys(base)
       if (touched.isEmpty) base // the asOf cut excludes every pending batch
       else {
-        val untouched = base.filter(!col("pred_hash").isin(touched: _*)).select(outCols: _*)
+        val untouched = base.filter(!col("pred_hash").isin(touched: _*))
+          .select((content ++ Seq("src_url", "warc_ts", "pred_hash")).map(col): _*)
         val rows = base.filter(col("pred_hash").isin(touched: _*))
           .withColumn("op", lit(OpAdd)).withColumn("batch_seq", lit(0L))
           .unionByName(deltas)
-        val merged = resolveOps(
-          rows.repartition(col("pred_hash"), col("subj"), col("pred"), col("obj")),
-          Seq("pred_hash", "subj", "pred", "obj"))
-        untouched.unionByName(merged)
+        untouched.unionByName(
+          resolveOps(rows.repartition(("pred_hash" +: content).map(col): _*), Seq("pred_hash")))
       }
     }
   }
@@ -419,38 +448,28 @@ object Materialize {
     * partitions never listed or rewritten), then drop the delta log.
     * Tombstones are consumed here: the rewritten base IS the resolved
     * state, so retractions cost nothing after compaction. No-op when no
-    * deltas are pending.
+    * deltas are pending. A quad table resolves per (graph, s, p, o).
     */
   def compact(
       spark: org.apache.spark.sql.SparkSession,
       out: String,
-      predBuckets: Int = DefaultPredBuckets,
-      salt: Int = DefaultSalt,
       checkpoint: CheckpointPolicy = CheckpointPolicy.Local): Unit = {
     if (!pendingDeltas(spark, out)) return
     val (fs, dd) = fsOf(spark, deltaDir(out))
     val deltas = spark.read.parquet(deltaDir(out))
-    // partition discovery types pred_hash as int — cast before collecting
-    val touched = deltas.select(col("pred_hash").cast("long")).distinct()
-      .collect().map(_.getLong(0)) // bounded by predBuckets, never by data
-    val opCols = Seq("subj", "pred", "obj", "src_url", "warc_ts", "op", "batch_seq")
+    val touched = touchedBuckets(deltas)
     val existing = read(spark, out)
       .filter(col("pred_hash").isin(touched: _*))
       .withColumn("op", lit(OpAdd)).withColumn("batch_seq", lit(0L))
-    val rows = existing.select(opCols.map(col): _*)
-      .unionByName(deltas.select(opCols.map(col): _*))
-    val salted = withPredHash(rows, predBuckets)
-      .withColumn("subj_salt", saltCol(Map.empty, salt))
-      .repartition(col("pred_hash"), col("subj_salt"))
+    val opCols = (contentKeys(existing) ++
+      Seq("src_url", "warc_ts", "op", "batch_seq")).map(col)
+    val rows = existing.select(opCols: _*).unionByName(deltas.select(opCols: _*))
     val merged = checkpoint.truncate(
-      resolveOps(salted, Seq("pred_hash", "subj_salt", "subj", "pred", "obj")))
+      resolveOps(salted(rows, Map.empty, DefaultSalt), Seq("pred_hash", "subj_salt")))
     val obs = new org.apache.spark.sql.Observation(
       s"lsm.compact.${java.util.UUID.randomUUID()}")
-    merged.observe(obs, collect_set(col("pred_hash").cast("long")).as("ph"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("pred_hash")
-      .parquet(out)
+    overwritePartitions(
+      merged.observe(obs, collect_set(col("pred_hash").cast("long")).as("ph")), out)
     // a touched pred_hash partition whose triples were ALL retracted emits
     // no resolved rows; dynamic overwrite would keep its stale base files
     // while the delta log is dropped below, resurrecting the retractions.
@@ -463,17 +482,17 @@ object Materialize {
     bfs.delete(bd, true)
   }
 
-  /** Explicitly delete `pred_hash=N` partition dirs that were touched by a
-    * compaction but absent from its resolved output (dynamic overwrite
-    * only replaces partitions present in the written data).
+  /** Explicitly delete `column=N` partition dirs that were touched by a
+    * rewrite but absent from its output (dynamic overwrite only replaces
+    * partitions present in the written data). Shared with [[ViewStore]].
     */
-  private def deleteEmptiedPartitions(
+  private[pipeline] def deleteEmptiedPartitions(
       spark: org.apache.spark.sql.SparkSession, out: String,
-      touched: Array[Long], surviving: Set[Long]): Unit = {
+      touched: Array[Long], surviving: Set[Long], column: String = "pred_hash"): Unit = {
     val root = new org.apache.hadoop.fs.Path(out)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touched.filterNot(surviving).foreach { ph =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"pred_hash=$ph"), true)
+    touched.filterNot(surviving).foreach { n =>
+      fs.delete(new org.apache.hadoop.fs.Path(root, s"$column=$n"), true)
     }
   }
 
@@ -486,13 +505,11 @@ object Materialize {
       spark: org.apache.spark.sql.SparkSession,
       out: String,
       delta: Dataset[TripleRow],
-      predBuckets: Int = DefaultPredBuckets,
-      salt: Int = DefaultSalt,
       maxDeltaBatches: Int = 8,
       checkpoint: CheckpointPolicy = CheckpointPolicy.Local): Unit = {
-    appendDelta(spark, out, delta, predBuckets, salt)
+    appendDelta(spark, out, delta)
     if (deltaBatchCount(spark, out) >= maxDeltaBatches)
-      compact(spark, out, predBuckets, salt, checkpoint)
+      compact(spark, out, checkpoint)
   }
 
   /** Snapshot DIFF between two materialized graphs — the KG-ops audit
@@ -508,9 +525,8 @@ object Materialize {
     */
   def graphDiff(
       spark: org.apache.spark.sql.SparkSession,
-      oldOut: String, newOut: String,
-      predBuckets: Int = DefaultPredBuckets): DataFrame =
-    graphDiffProv(spark, oldOut, newOut, predBuckets)
+      oldOut: String, newOut: String): DataFrame =
+    graphDiffProv(spark, oldOut, newOut)
       .select(col("op"), col("subj"), col("pred"), col("obj"))
 
   /** [[graphDiff]] carrying provenance — the DIRECTLY APPLYABLE form: adds
@@ -518,20 +534,15 @@ object Materialize {
     * snapshot's (retractions never surface provenance; the columns just
     * keep the row shape uniform). Feed the result to [[applyDiff]] to
     * bring an LSM table holding the old snapshot to the new one. The join
-    * key includes pred_hash RECOMPUTED from pred on both sides (not the
-    * stored partition column), so two snapshots written with different
-    * predBuckets layouts still diff exactly — while snapshots sharing the
-    * layout keep the co-clustered join.
+    * key includes pred_hash, so both sides keep the co-clustered join.
     */
   def graphDiffProv(
       spark: org.apache.spark.sql.SparkSession,
-      oldOut: String, newOut: String,
-      predBuckets: Int = DefaultPredBuckets): DataFrame = {
+      oldOut: String, newOut: String): DataFrame = {
     def side(p: String) =
       withPredHash(
         read(spark, p).select(col("subj"), col("pred"), col("obj"),
-          col("src_url"), col("warc_ts")),
-        predBuckets)
+          col("src_url"), col("warc_ts")))
     val o = side(oldOut)
     val n = side(newOut)
     val keys = Seq("pred_hash", "subj", "pred", "obj")
@@ -552,39 +563,34 @@ object Materialize {
   def applyDiff(
       spark: org.apache.spark.sql.SparkSession,
       out: String,
-      diffProv: DataFrame,
-      predBuckets: Int = DefaultPredBuckets,
-      salt: Int = DefaultSalt): Unit =
-    appendDeltaOps(spark, out, diffProv, predBuckets, salt)
+      diffProv: DataFrame): Unit =
+    appendDeltaOps(spark, out, diffProv)
 
   /** Single-predicate read that EXPLOITS the layout: the `pred_hash`
-    * equality folds to a constant and prunes the scan to 1/predBuckets of
-    * the partition directories (PartitionFilters in the plan), then the
+    * equality folds to a constant and prunes the scan to
+    * 1/[[DefaultPredBuckets]] of the partition directories (PartitionFilters in the plan), then the
     * row-level `pred` filter pushes into parquet. This is the access path
     * a downstream "all triples of predicate P" query takes at 100 TB.
     */
   def readPred(
       spark: org.apache.spark.sql.SparkSession,
       out: String,
-      pred: String,
-      predBuckets: Int = DefaultPredBuckets): DataFrame =
+      pred: String): DataFrame =
     read(spark, out)
-      .filter(col("pred_hash") === pmod(xxhash64(lit(pred)), lit(predBuckets)) &&
-        col("pred") === pred)
+      .filter(col("pred_hash") === predHash(lit(pred)) && col("pred") === pred)
 
   /** [[readPred]] against the MERGED view: both the base and the pending
     * delta log prune to the predicate's single pred_hash partition before
     * anything shuffles (PartitionFilters on both scans), tombstones
     * resolve over just those rows. The per-predicate access path between
-    * compactions — a 1/predBuckets read plus a delta-sized dedup, never a
-    * whole-table merge.
+    * compactions — a 1/[[DefaultPredBuckets]] read plus a delta-sized
+    * dedup, never a whole-table merge.
     */
   def readMergedPred(
       spark: org.apache.spark.sql.SparkSession,
       out: String,
-      pred: String,
-      predBuckets: Int = DefaultPredBuckets): DataFrame = {
-    val ph = pmod(xxhash64(lit(pred)), lit(predBuckets))
+      pred: String): DataFrame = {
+    val ph = predHash(lit(pred))
     val base = read(spark, out)
       .filter(col("pred_hash") === ph && col("pred") === pred)
     if (!pendingDeltas(spark, out)) base
@@ -595,147 +601,19 @@ object Materialize {
         .withColumn("op", lit(OpAdd)).withColumn("batch_seq", lit(0L))
         .unionByName(deltas)
       resolveOps(
-        rows.repartition(col("pred_hash"), col("subj"), col("pred"), col("obj")),
-        Seq("pred_hash", "subj", "pred", "obj"))
+        rows.repartition(("pred_hash" +: contentKeys(base)).map(col): _*), Seq("pred_hash"))
     }
   }
 
-  // ----------------------------------------------------- QUAD (named-graph)
-  // tables: the triple layout with a `graph` column riding every content
-  // row AND every dedup/resolution key — named graphs share pred_hash
-  // partitions (the layout stays predicate-driven: BGPs prune the same
-  // way), but a (graph, s, p, o) quad is a distinct fact from its sibling
-  // graphs' (s, p, o), so tombstones retract WITHIN one graph only. The
-  // delta log, batch markers, and LSM discipline are shared with the
-  // triple path — a table is either triples or quads for its lifetime.
+  // [[writeQuads]] and these two entry points name the quad form of the
+  // same bodies for callers that handle named graphs.
 
-  private val QuadKeys = Seq("pred_hash", "graph", "subj", "pred", "obj")
-  private val QuadCarry = Seq("graph", "subj", "pred", "obj")
-
-  /** [[write]] for quads (graph, subj, pred, obj, src_url, warc_ts):
-    * the same ONE-exchange dedup+write — graph joins the group keys,
-    * which stay a superset of the (pred_hash, subj_salt) partitioning.
-    */
-  def writeQuads(
-      quads: DataFrame,
-      out: String,
-      predBuckets: Int = DefaultPredBuckets,
-      salt: Int = DefaultSalt): Unit = {
-    val df = withPredHash(quads, predBuckets)
-      .withColumn("subj_salt", saltCol(Map.empty, salt))
-    df.repartition(col("pred_hash"), col("subj_salt"))
-      .groupBy(col("pred_hash"), col("subj_salt"),
-        col("graph"), col("subj"), col("pred"), col("obj"))
-      .agg(min(struct(col("src_url"), col("warc_ts"))).as("prov"))
-      .select(col("graph"), col("subj"), col("pred"), col("obj"),
-        col("prov.src_url").as("src_url"), col("prov.warc_ts").as("warc_ts"),
-        col("pred_hash"))
-      .write.mode("overwrite")
-      .partitionBy("pred_hash")
-      .parquet(out)
-  }
-
-  /** [[appendDeltaOps]] for quad deltas (…, graph, op): one delta-sized
-    * salted exchange, bytes written ∝ delta; tombstones are graph-scoped.
-    */
+  /** [[appendDeltaOps]] for quad deltas (…, graph, op). */
   def appendQuadDeltaOps(
-      spark: org.apache.spark.sql.SparkSession,
-      out: String,
-      deltaOps: DataFrame,
-      predBuckets: Int = DefaultPredBuckets,
-      salt: Int = DefaultSalt): Unit = {
-    val ops = deltaOps.select(col("graph"), col("subj"), col("pred"), col("obj"),
-      col("src_url"), col("warc_ts"), col("op"))
-    val seq = deltaBatchCount(spark, out) + 1L
-    val df = withPredHash(ops, predBuckets)
-      .withColumn("subj_salt", saltCol(Map.empty, salt))
-    // row count observed DURING the write replaces the isEmpty pre-check
-    // (which evaluated the delta subtree twice) — see appendDeltaOps
-    val obs = new org.apache.spark.sql.Observation(
-      s"lsm.appendq.${java.util.UUID.randomUUID()}")
-    df.repartition(col("pred_hash"), col("subj_salt"))
-      .groupBy(col("pred_hash"), col("subj_salt"),
-        col("graph"), col("subj"), col("pred"), col("obj"), col("op"))
-      .agg(min(struct(col("src_url"), col("warc_ts"))).as("prov"))
-      .select(col("graph"), col("subj"), col("pred"), col("obj"),
-        col("prov.src_url").as("src_url"), col("prov.warc_ts").as("warc_ts"),
-        col("op"), lit(seq).as("batch_seq"), col("pred_hash"))
-      .observe(obs, count(lit(1)).as("n"))
-      .write.mode("append").partitionBy("pred_hash").parquet(deltaDir(out))
-    if (obs.get("n").asInstanceOf[Long] > 0L) {
-      val (fs, dir) = fsOf(spark, batchMarkerDir(out))
-      fs.mkdirs(dir)
-      fs.create(new org.apache.hadoop.fs.Path(dir,
-        s"batch-${java.util.UUID.randomUUID()}"), false).close()
-    } else {
-      val (fs, dd) = fsOf(spark, deltaDir(out))
-      if (fs.exists(dd) && !hasDataFiles(fs, dd)) fs.delete(dd, true)
-    }
-  }
+      spark: org.apache.spark.sql.SparkSession, out: String, deltaOps: DataFrame): Unit =
+    appendDeltaOps(spark, out, deltaOps)
 
-  /** [[readMerged]] for quad tables: identical bounded merge-on-read —
-    * only delta-touched pred_hash partitions pay the resolution exchange,
-    * with `graph` in the window/group keys so retractions stay scoped to
-    * their named graph.
-    */
-  def readMergedQuads(
-      spark: org.apache.spark.sql.SparkSession, out: String): DataFrame = {
-    val base = read(spark, out)
-    if (!pendingDeltas(spark, out)) base
-    else {
-      val deltas = spark.read.parquet(deltaDir(out))
-      val touched = deltas.select(col("pred_hash").cast("int")).distinct()
-        .collect().map(_.getInt(0)) // bounded by predBuckets, never by data
-      val outCols = (QuadCarry ++ Seq("src_url", "warc_ts", "pred_hash")).map(col)
-      val untouched = base.filter(!col("pred_hash").isin(touched: _*)).select(outCols: _*)
-      val rows = base.filter(col("pred_hash").isin(touched: _*))
-        .withColumn("op", lit(OpAdd)).withColumn("batch_seq", lit(0L))
-        .unionByName(deltas)
-      val merged = resolveOps(
-        rows.repartition(QuadKeys.map(col): _*), QuadKeys, QuadCarry)
-      untouched.unionByName(merged)
-    }
-  }
-
-  /** [[compact]] for quad tables: fold the delta log into the base with
-    * the graph-scoped resolution riding the one salted exchange, then
-    * drop the log.
-    */
-  def compactQuads(
-      spark: org.apache.spark.sql.SparkSession,
-      out: String,
-      predBuckets: Int = DefaultPredBuckets,
-      salt: Int = DefaultSalt,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): Unit = {
-    if (!pendingDeltas(spark, out)) return
-    val (fs, dd) = fsOf(spark, deltaDir(out))
-    val deltas = spark.read.parquet(deltaDir(out))
-    val touched = deltas.select(col("pred_hash").cast("long")).distinct()
-      .collect().map(_.getLong(0))
-    val opCols = QuadCarry ++ Seq("src_url", "warc_ts", "op", "batch_seq")
-    val existing = read(spark, out)
-      .filter(col("pred_hash").isin(touched: _*))
-      .withColumn("op", lit(OpAdd)).withColumn("batch_seq", lit(0L))
-    val rows = existing.select(opCols.map(col): _*)
-      .unionByName(deltas.select(opCols.map(col): _*))
-    val salted = withPredHash(rows, predBuckets)
-      .withColumn("subj_salt", saltCol(Map.empty, salt))
-      .repartition(col("pred_hash"), col("subj_salt"))
-    val merged = checkpoint.truncate(
-      resolveOps(salted,
-        Seq("pred_hash", "subj_salt", "graph", "subj", "pred", "obj"), QuadCarry))
-    val obsQ = new org.apache.spark.sql.Observation(
-      s"lsm.compactq.${java.util.UUID.randomUUID()}")
-    merged.observe(obsQ, collect_set(col("pred_hash").cast("long")).as("ph"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("pred_hash")
-      .parquet(out)
-    // same emptied-partition gap as the triple compact(): see there
-    deleteEmptiedPartitions(spark, out, touched,
-      obsQ.get("ph").asInstanceOf[Seq[Long]].toSet)
-    fs.delete(dd, true)
-    val (bfs, bd) = fsOf(spark, batchMarkerDir(out))
-    bfs.delete(bd, true)
-  }
+  /** [[readMerged]] for quad tables. */
+  def readMergedQuads(spark: org.apache.spark.sql.SparkSession, out: String): DataFrame =
+    readMerged(spark, out)
 }

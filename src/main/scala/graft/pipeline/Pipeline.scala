@@ -30,7 +30,6 @@ object Pipeline {
   final case class Summary(
       stageRows: Map[String, Long],
       graphRows: Long,
-      rejects: Long,
       stageWallMs: Map[String, Long] = Map.empty)
 
   /** A committed stage: its read-back frame, rows and wall time. */
@@ -104,7 +103,7 @@ object Pipeline {
       rows += name -> c.rows
       walls += name -> c.wallMs
       if (stopAfter.contains(name))
-        throw new PipelineStopped(name, Summary(rows, -1, -1, walls))
+        throw new PipelineStopped(name, Summary(rows, -1, walls))
       c.df
     }
 
@@ -149,7 +148,7 @@ object Pipeline {
       val mentionsSlim = mentions.select($"mention_id", $"surface", $"context").cache()
       val links = stage("links") {
         Linking.link(mentionsSlim, dictDf.as[EntityAlias], profiles(spark, nEntities),
-          knownMentionCount = rows.get("mentions")).toDF()
+          rows("mentions")).toDF()
       }
       mentionsSlim.unpersist(blocking = false)
 
@@ -186,7 +185,7 @@ object Pipeline {
 
       lineage.write(spark, s"$out/lineage")
 
-      Summary(rows, graphRows, 0L, walls)
+      Summary(rows, graphRows, walls)
     } finally branch.join() // on every exit path: no job of this run outlives it
   }
 

@@ -21,24 +21,26 @@ import org.apache.spark.sql.functions._
   * aggregate is ∝ diff; only diff-touched `key_hash` partitions are read
   * and dynamically overwritten — work ∝ diff + touched partitions, never
   * ∝ view. Keys folding to n ≤ 0 leave the view.
+  *
+  * The bucket count [[DefaultKeyBuckets]] is the view's TABLE FORMAT:
+  * build and every fold must hash a key to the same bucket, so no
+  * function takes it as a parameter. Changing it invalidates every view
+  * already written (a fold would split one key over two buckets).
   */
 object ViewStore {
 
   val DefaultKeyBuckets = 64
 
-  private def withKeyHash(df: DataFrame, buckets: Int): DataFrame =
-    df.withColumn("key_hash", pmod(xxhash64(col("key")), lit(buckets)))
+  private def withKeyHash(df: DataFrame): DataFrame =
+    df.withColumn("key_hash", pmod(xxhash64(col("key")), lit(DefaultKeyBuckets)))
 
   /** Build (or rebuild) the view from a triple frame: per-object counts
     * of `pred` — one map-side-combined aggregate, one write.
     */
-  def buildCountView(
-      triples: DataFrame, pred: String, out: String,
-      keyBuckets: Int = DefaultKeyBuckets): Unit = {
+  def buildCountView(triples: DataFrame, pred: String, out: String): Unit = {
     withKeyHash(
       triples.filter(col("pred") === pred)
-        .groupBy(col("obj").as("key")).agg(count(lit(1)).as("n")),
-      keyBuckets)
+        .groupBy(col("obj").as("key")).agg(count(lit(1)).as("n")))
       .write.mode("overwrite").partitionBy("key_hash").parquet(out)
     clearLedger(triples.sparkSession, out) // a rebuild voids the fold history
   }
@@ -50,12 +52,10 @@ object ViewStore {
     * maintenance stays exact.
     */
   def buildSumView(
-      triples: DataFrame, keyPred: String, valuePred: String, out: String,
-      keyBuckets: Int = DefaultKeyBuckets): Unit = {
+      triples: DataFrame, keyPred: String, valuePred: String, out: String): Unit = {
     withKeyHash(
       keyed(triples, keyPred, valuePred)
-        .groupBy(col("key")).agg(sum(col("v")).as("n")),
-      keyBuckets)
+        .groupBy(col("key")).agg(sum(col("v")).as("n")))
       .write.mode("overwrite").partitionBy("key_hash").parquet(out)
     clearLedger(triples.sparkSession, out)
   }
@@ -95,7 +95,6 @@ object ViewStore {
     */
   def maintainCountView(
       spark: SparkSession, out: String, diff: DataFrame, pred: String,
-      keyBuckets: Int = DefaultKeyBuckets,
       checkpoint: CheckpointPolicy = CheckpointPolicy.Local,
       foldId: Option[String] = None): Unit =
     foldInto(spark, out,
@@ -103,7 +102,7 @@ object ViewStore {
         .groupBy(col("obj").as("key"))
         .agg(sum(when(col("op") === Materialize.OpAdd, lit(1L))
           .otherwise(lit(-1L))).as("dn")),
-      keyBuckets, checkpoint, foldId)
+      checkpoint, foldId)
 
   /** Maintain a [[buildSumView]] view under an effective diff — the
     * join-view IVM decomposition, exact on signed multisets:
@@ -121,12 +120,10 @@ object ViewStore {
       spark: SparkSession, out: String, diff: DataFrame,
       keyPred: String, valuePred: String,
       postTriples: String => DataFrame,
-      keyBuckets: Int = DefaultKeyBuckets,
       checkpoint: CheckpointPolicy = CheckpointPolicy.Local,
       foldId: Option[String] = None): Unit =
     foldInto(spark, out,
-      sumViewDeltas(diff, keyPred, valuePred, postTriples), keyBuckets,
-      checkpoint, foldId)
+      sumViewDeltas(diff, keyPred, valuePred, postTriples), checkpoint, foldId)
 
   /** The decomposition's per-key deltas, exposed for plan guards: both
     * terms join the (big) pred-pruned scans against BROADCAST diff-sized
@@ -172,12 +169,10 @@ object ViewStore {
     * integer lexical forms under `keyPred` grouping.
     */
   def buildMaxView(
-      triples: DataFrame, keyPred: String, valuePred: String, out: String,
-      keyBuckets: Int = DefaultKeyBuckets): Unit = {
+      triples: DataFrame, keyPred: String, valuePred: String, out: String): Unit = {
     withKeyHash(
       keyed(triples, keyPred, valuePred)
-        .groupBy(col("key")).agg(max(col("v")).as("n")),
-      keyBuckets)
+        .groupBy(col("key")).agg(max(col("v")).as("n")))
       .write.mode("overwrite").partitionBy("key_hash").parquet(out)
     clearLedger(triples.sparkSession, out)
   }
@@ -198,7 +193,6 @@ object ViewStore {
       spark: SparkSession, out: String, diff: DataFrame,
       keyPred: String, valuePred: String,
       postTriples: String => DataFrame,
-      keyBuckets: Int = DefaultKeyBuckets,
       checkpoint: CheckpointPolicy = CheckpointPolicy.Local,
       foldId: Option[String] = None): Unit = {
     if (foldId.exists(alreadyApplied(spark, out, _))) return
@@ -221,15 +215,15 @@ object ViewStore {
       .groupBy(col("key")).agg(max(col("v")).as("n"))
     // fold: affected keys REPLACE their view rows (or vanish if their
     // group emptied); co-located unaffected keys carry through
-    val d = checkpoint.truncate(withKeyHash(affected, keyBuckets))
+    val d = checkpoint.truncate(withKeyHash(affected))
     val touched = d.select(col("key_hash")).distinct()
       .collect().map(_.getLong(0))
     if (touched.isEmpty) return
     val existing = readExisting(spark, out, touched)
     val carried = existing.join(broadcast(affected), Seq("key"), "left_anti")
     val updated = checkpoint.truncate( // materialize before overwriting the input dir
-      carried.unionByName(withKeyHash(recomputed, keyBuckets)))
-    // surviving-bucket set observed DURING the write (≤ keyBuckets
+      carried.unionByName(withKeyHash(recomputed)))
+    // surviving-bucket set observed DURING the write (≤ DefaultKeyBuckets
     // values) instead of a separate post-write job
     val obsM = new org.apache.spark.sql.Observation(
       s"view.max.${java.util.UUID.randomUUID()}")
@@ -238,12 +232,8 @@ object ViewStore {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("key_hash")
       .parquet(out)
-    val surviving = obsM.get("kh").asInstanceOf[Seq[Long]].toSet
-    val root = new org.apache.hadoop.fs.Path(out)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touched.filterNot(surviving).foreach { kh =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"key_hash=$kh"), true)
-    }
+    Materialize.deleteEmptiedPartitions(spark, out, touched,
+      obsM.get("kh").asInstanceOf[Seq[Long]].toSet, "key_hash")
     foldId.foreach(markApplied(spark, out, _))
   }
 
@@ -253,14 +243,12 @@ object ViewStore {
     */
   private def foldInto(
       spark: SparkSession, out: String, deltas: DataFrame,
-      keyBuckets: Int,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local,
-      foldId: Option[String] = None): Unit = {
+      checkpoint: CheckpointPolicy, foldId: Option[String]): Unit = {
     if (foldId.exists(alreadyApplied(spark, out, _))) return
     val d = checkpoint.truncate( // materialized ONCE: sized ∝ diff, read twice below
-      withKeyHash(deltas.filter(col("dn") =!= 0L), keyBuckets))
+      withKeyHash(deltas.filter(col("dn") =!= 0L)))
     val touched = d.select(col("key_hash")).distinct()
-      .collect().map(_.getLong(0)) // bounded by keyBuckets, never by data
+      .collect().map(_.getLong(0)) // bounded by DefaultKeyBuckets, never by data
     if (touched.isEmpty) { foldId.foreach(markApplied(spark, out, _)); return }
     val existing = readExisting(spark, out, touched)
     val updated = existing
@@ -271,7 +259,7 @@ object ViewStore {
       .filter(col("n") > 0)
       .transform(checkpoint.truncate _) // materialize before the dynamic
                                           // overwrite reads its own input dir
-    // surviving-bucket set observed DURING the write (≤ keyBuckets values)
+    // surviving-bucket set observed DURING the write (≤ DefaultKeyBuckets values)
     val obsF = new org.apache.spark.sql.Observation(
       s"view.fold.${java.util.UUID.randomUUID()}")
     updated.observe(obsF, collect_set(col("key_hash")).as("kh"))
@@ -282,12 +270,8 @@ object ViewStore {
     // dynamic overwrite only replaces partitions PRESENT in the written
     // data — a touched bucket whose keys all folded to zero emits no rows
     // and would keep its stale files; delete those partitions explicitly
-    val surviving = obsF.get("kh").asInstanceOf[Seq[Long]].toSet
-    val root = new org.apache.hadoop.fs.Path(out)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touched.filterNot(surviving).foreach { kh =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"key_hash=$kh"), true)
-    }
+    Materialize.deleteEmptiedPartitions(spark, out, touched,
+      obsF.get("kh").asInstanceOf[Seq[Long]].toSet, "key_hash")
     foldId.foreach(markApplied(spark, out, _))
   }
 

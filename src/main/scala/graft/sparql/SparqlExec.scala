@@ -153,9 +153,7 @@ object SparqlExec {
       predCounts: Map[String, Long],
       srcUrl: String,
       ts: java.sql.Timestamp,
-      quadTable: Boolean = false,
-      predBuckets: Int = graft.pipeline.Materialize.DefaultPredBuckets,
-      salt: Int = graft.pipeline.Materialize.DefaultSalt): Unit = {
+      quadTable: Boolean = false): Unit = {
     val M = graft.pipeline.Materialize
     SparqlParser.parseUpdate(u) match {
       case UpdateOp.Data(insert, triples) =>
@@ -171,14 +169,14 @@ object SparqlExec {
             .toDF("graph", "subj", "pred", "obj")
             .withColumn("op", lit(op))
             .withColumn("src_url", lit(srcUrl)).withColumn("warc_ts", lit(ts))
-          M.appendQuadDeltaOps(spark, out, batch, predBuckets, salt)
+          M.appendQuadDeltaOps(spark, out, batch)
         } else {
           val batch = triples
             .map { case (_, s, p, o) => (s, p, o) }
             .toDF("subj", "pred", "obj")
             .withColumn("op", lit(op))
             .withColumn("src_url", lit(srcUrl)).withColumn("warc_ts", lit(ts))
-          M.appendDeltaOps(spark, out, batch, predBuckets, salt)
+          M.appendDeltaOps(spark, out, batch)
         }
       case UpdateOp.Modify(withGraph, del, ins, where, start, end) =>
         if (quadTable && withGraph.isEmpty)
@@ -190,9 +188,9 @@ object SparqlExec {
         val chains = whereChains(where, start, end)
         try withGraph match {
           case Some(g) => GraphOps.updateWhereGraph(spark, out, s"<$g>",
-            delT, insT, chains, predCounts, srcUrl, ts, predBuckets, salt)
+            delT, insT, chains, predCounts, srcUrl, ts)
           case None => GraphOps.updateWhere(spark, out,
-            delT, insT, chains, predCounts, srcUrl, ts, predBuckets, salt)
+            delT, insT, chains, predCounts, srcUrl, ts)
         } catch {
           // algebra-contract violations surface as spanned diagnostics,
           // the same channel as syntax rejects

@@ -572,33 +572,6 @@ class OpsSpec extends AnyFunSuite {
       s"exact rerank did not lift recall: $rr vs ADC-only $raw")
   }
 
-  test("xxhash64 bloom: no false negatives (property), zero-exchange probe, sane fp rate") {
-    val s = spark
-    import s.implicits._
-    // property sweep: three key universes (dense, strided, negative)
-    for (mkKeys <- Seq[Int => Long](i => i.toLong, i => i * 7919L, i => -i * 13L)) {
-      val members = (0 until 500).map(mkKeys).toDF("key")
-      val bf = graft.ops.SketchOps.bloomBuildFast(members, "key")
-      val probe = (0 until 5000).map(mkKeys).toDF("key")
-      val passed = graft.ops.SketchOps.bloomFilterProbeFast(probe, "key", bf)
-      // NO FALSE NEGATIVES: every member passes
-      assert(passed.filter($"key".isin((0 until 500).map(mkKeys): _*)).count() == 500)
-      // fp rate within 5× the standard (1 − e^{−kn/m})^k bound
-      val fp = passed.count() - 500
-      val theory = math.pow(1 - math.exp(-3.0 * 500 / 4096), 3)
-      assert(fp <= 5 * theory * 4500,
-        s"false-positive rate off: $fp of 4500 vs theory ${theory * 4500}")
-    }
-    // plan guard: the probe is a pure filter — zero joins, zero exchanges
-    val members = (0 until 500).map(_.toLong).toDF("key")
-    val bf = graft.ops.SketchOps.bloomBuildFast(members, "key")
-    val plan = graft.ops.SketchOps.bloomFilterProbeFast(
-      (0 until 5000).map(_.toLong).toDF("key"), "key", bf)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange") && !plan.contains("Join"),
-      s"fast bloom probe is not exchange-free:\n${plan.take(1200)}")
-  }
-
   test("srp bucketed ANN puts identical vectors in one bucket") {
     val s = spark
     import s.implicits._
@@ -805,26 +778,6 @@ class OpsSpec extends AnyFunSuite {
     val got = MultimodalOps.audioFeatures(d).collect()(0).getLong(1)
     assert(got == MultimodalOps.audioEnergy(7L))
     assert(got > 0)
-  }
-
-  test("N-Triples sink/source: escape-bearing triples round-trip through text files") {
-    val s = spark
-    import s.implicits._
-    val ts = new java.sql.Timestamp(0L)
-    // literals in CANONICAL TripleRow term syntax (the reference escape
-    // table: quote → ", backslash → \, control chars short-form)
-    val rows = Seq(
-      graft.pipeline.TripleRow("<http://x/s1>", "http://x/p", "\"a\\nb\\tc\"", "u", ts),
-      graft.pipeline.TripleRow("<http://x/s2>", "http://x/p",
-        "\"say \\u0022hi\\u0022 \\u005c done\"@en", "u", ts),
-      graft.pipeline.TripleRow("_:b0", "http://x/q",
-        "\"42\"^^<http://www.w3.org/2001/XMLSchema#integer>", "u", ts)).toDS()
-    val dir = java.nio.file.Files.createTempDirectory("graft-nt").toString
-    GraphOps.writeNTriples(rows, s"$dir/g.nt")
-    val back = GraphOps.readNTriples(spark, s"$dir/g.nt").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-    assert(back == rows.collect().map(t => (t.subj, t.pred, t.obj)).toSet)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   test("doc components: forest ground truth (root = min of component)") {
@@ -1252,23 +1205,7 @@ class OpsSpec extends AnyFunSuite {
     assert(TextOps.simHash("ab", memo) == TextOps.md5Hash60("ab"))
   }
 
-  test("hll registers merge: estimate(merge(A, B)) == estimate(A ∪ B)") {
-    val s = spark
-    import s.implicits._
-    val a = (0 until 2000).map(i => ("g", i.toLong)).toDF("g", "v")
-    val b = (1000 until 3000).map(i => ("g", i.toLong)).toDF("g", "v") // overlaps A
-    val merged = SketchOps.hllEstimate(
-      SketchOps.hllMerge(
-        SketchOps.hllRegisters(a, "g", "v"),
-        SketchOps.hllRegisters(b, "g", "v")), "g")
-      .collect().head.getDouble(1)
-    val direct = SketchOps.hllEstimate(
-      SketchOps.hllRegisters(a.union(b), "g", "v"), "g")
-      .collect().head.getDouble(1)
-    assert(merged == direct, s"merge broke the sketch algebra: $merged vs $direct")
-  }
-
-  test("quantile sketch: estimates within the ~4.4% bucket width; merge == direct") {
+  test("quantile sketch: estimates within the ~4.4% bucket width") {
     val s = spark
     import s.implicits._
     val rows = (1L to 1000L).map(v => ("g", v))
@@ -1279,13 +1216,6 @@ class OpsSpec extends AnyFunSuite {
     val (p50, p95) = (est.getLong(2), est.getLong(3))
     assert(math.abs(p50 - 500.0) / 500.0 <= 0.05, s"p50_est=$p50")
     assert(math.abs(p95 - 950.0) / 950.0 <= 0.05, s"p95_est=$p95")
-    // merge law: sketch(A) ⊕ sketch(B) == sketch(A ∪ B)
-    val (a, b) = (rows.take(600).toDF("g", "v"), rows.drop(600).toDF("g", "v"))
-    val merged = SketchOps.qsMerge(
-      SketchOps.quantileSketch(a, "g", col("v")),
-      SketchOps.quantileSketch(b, "g", col("v")))
-    assert(merged.collect().map(_.toString).sorted.sameElements(
-      sk.collect().map(_.toString).sorted))
     // non-positive values are excluded on both engines by contract
     val withZero = (Seq(("g", 0L), ("g", -5L)) ++ rows).toDF("g", "v")
     assert(SketchOps.qsEstimate(SketchOps.quantileSketch(withZero, "g", col("v")), "g", Seq(50))
@@ -1475,7 +1405,7 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("count-min: never under-counts, mostly exact at low load; merge == direct") {
+  test("count-min: never under-counts, mostly exact at low load") {
     val s = spark
     import s.implicits._
     val rows = (1L to 100L).flatMap(k => Seq.fill((k % 5).toInt + 1)(k))
@@ -1493,12 +1423,6 @@ class OpsSpec extends AnyFunSuite {
     // nearly every estimate should be exact
     val exactHits = freqs.count { case (_, est, exact) => est == exact }
     assert(exactHits >= 90, s"only $exactHits/100 exact")
-    // merge law: cell-wise sum of split sketches == sketch of the union
-    val merged = SketchOps.cmMerge(
-      SketchOps.cmSketch(df.filter(col("k") <= 50), "k"),
-      SketchOps.cmSketch(df.filter(col("k") > 50), "k"))
-    assert(merged.collect().map(_.toString).sorted.sameElements(
-      SketchOps.cmSketch(df, "k").collect().map(_.toString).sorted))
   }
 
   test("hllDistinct: estimate within 3 standard errors on known cardinalities") {
@@ -1888,12 +1812,6 @@ class OpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(got == want, s"missing=${want -- got} extra=${got -- want}")
     assert(want.exists(_._2 == 3L), "fixture must produce full-depth ranks")
-    // the cell-colocated variant is IDENTICAL (both exact within-cell kNN
-    // under the (dist2, id) order) — only the shuffle/memory trade differs
-    val colocated = EmbeddingOps
-      .knnGraphCellsColocated(vecs, k = 3, cells = 4, dims = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(colocated == want, s"missing=${want -- colocated} extra=${colocated -- want}")
   }
 
   test("sccBounded: mutual reachability labels cycles, one-way reach stays singleton") {

@@ -289,7 +289,8 @@ class PipelineSpec extends AnyFunSuite {
     val pages = PageGen.pages(spark, NPages, NEntities)
     val dict = PageGen.dictionary(spark, NEntities)
     val mentions = Mentions.detect(pages.toDF(), PageGen.entityDictionary(NEntities).map(_.alias))
-    val linked = Linking.link(mentions.toDF(), dict, Pipeline.profiles(spark, NEntities)).collect()
+    val linked = Linking.link(mentions.toDF(), dict, Pipeline.profiles(spark, NEntities),
+      mentions.count()).collect()
 
     // Every unambiguous full-name mention must link to its own entity.
     val nameToEntity = (0 until NEntities).map(k => PageGen.entityName(k) -> PageGen.entityIri(k)).toMap
@@ -319,7 +320,7 @@ class PipelineSpec extends AnyFunSuite {
     val cands = Linking.block(mentions, dict).collect().map(_.getString(1)).toSet
     assert(Set(13, 1053).map(PageGen.entityIri).subsetOf(cands), cands)
 
-    val got = Linking.link(mentions, dict, Pipeline.profiles(spark, n)).collect()
+    val got = Linking.link(mentions, dict, Pipeline.profiles(spark, n), mentions.count()).collect()
     assert(got.map(_.entity_iri).toSeq == Seq(PageGen.entityIri(13)), got.toSeq)
   }
 
@@ -328,13 +329,14 @@ class PipelineSpec extends AnyFunSuite {
     val pages = PageGen.pages(spark, NPages, NEntities)
     val dict = PageGen.dictionary(spark, NEntities)
     val mentions = Mentions.detect(pages.toDF(), PageGen.entityDictionary(NEntities).map(_.alias))
+    val nMentions = mentions.count()
 
     val before = spark.sparkContext.getPersistentRDDs.size
     // two back-to-back link jobs: the tf/idf working caches must be gone
     // after each returns; only the (small) localCheckpoint of each RESULT
     // may remain until its Dataset is garbage-collected
-    Linking.link(mentions.toDF(), dict, Pipeline.profiles(spark, NEntities)).count()
-    Linking.link(mentions.toDF(), dict, Pipeline.profiles(spark, NEntities)).count()
+    Linking.link(mentions.toDF(), dict, Pipeline.profiles(spark, NEntities), nMentions).count()
+    Linking.link(mentions.toDF(), dict, Pipeline.profiles(spark, NEntities), nMentions).count()
     val after = spark.sparkContext.getPersistentRDDs.size
     assert(after - before <= 2,
       s"storage grew by ${after - before} blocks across 2 link jobs (caches leaked)")
@@ -449,6 +451,20 @@ class PipelineSpec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(base)
   }
 
+  test("a rerun into the same out dir leaves one lineage row per (stage, partition)") {
+    val out = Files.createTempDirectory("graft-kg-rerun").toString
+    try {
+      Pipeline.run(spark, NPages, NEntities, out)
+      // the rerun resumes every snapshotted stage and recomputes emit
+      Pipeline.run(spark, NPages, NEntities, out)
+      val keys = spark.read.parquet(s"$out/lineage")
+        .select("stage", "partition_id").collect().map(r => (r.getString(0), r.getInt(1)))
+      assert(keys.toSet.map((k: (String, Int)) => k._1) == Set("extracted", "mentions", "emit"))
+      val dups = keys.groupBy(identity).collect { case (k, v) if v.length > 1 => k -> v.length }
+      assert(dups.isEmpty, s"duplicate lineage rows after a rerun: $dups")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+  }
+
   test("lineage dedups retried/speculative task attempts to one row per partition") {
     val c = Lineage.collector(spark)
     // simulate a retried partition: attempt 0 ran (partially), attempt 1 reran
@@ -473,7 +489,7 @@ class PipelineSpec extends AnyFunSuite {
     // the adaptive per-pred salt (map lookup on pred) must keep the
     // one-exchange property: subj_salt stays a function of the group keys
     val df = Materialize.saltedDeduped(
-      triples.toDF(), Materialize.DefaultPredBuckets, Map("<p1>" -> 4), defaultSalt = 2)
+      triples.toDF(), Map("<p1>" -> 4), defaultSalt = 2)
     val plan = df.queryExecution.executedPlan.toString
     val exchanges = "Exchange".r.findAllIn(plan).size
     assert(exchanges == 1, s"expected 1 exchange, got $exchanges:\n$plan")
@@ -518,7 +534,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(plan.filterKeys(_ != rdfType).values.forall(_ == 2))
 
     val perPartition = Materialize
-      .saltedDeduped(triples.toDF(), Materialize.DefaultPredBuckets, plan, defaultSalt = 2)
+      .saltedDeduped(triples.toDF(), plan, defaultSalt = 2)
       .rdd.mapPartitions(it => Iterator(it.size)).collect().filter(_ > 0).sorted
     val median = perPartition(perPartition.length / 2)
     assert(perPartition.max <= 4 * median,
@@ -966,7 +982,7 @@ class PipelineSpec extends AnyFunSuite {
         Materialize.appendQuadDeltaOps(spark, qout, Seq(
           ("<g1>", "<s1>", "<p:solo>", "\"a\"", "u1", ts, "del"))
           .toDF("graph", "subj", "pred", "obj", "src_url", "warc_ts", "op"))
-        Materialize.compactQuads(spark, qout)
+        Materialize.compact(spark, qout)
         val qbase = Materialize.read(spark, qout)
           .select("subj", "pred").as[(String, String)].collect().toSet
         assert(qbase == Set(("<c>", "<p:cold>")),
@@ -1008,7 +1024,7 @@ class PipelineSpec extends AnyFunSuite {
       assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1,
         s"untouched quad partitions must bypass the dedup exchange:\n${plan.take(2000)}")
       // compact folds the log; the merged view is now the base
-      Materialize.compactQuads(spark, out)
+      Materialize.compact(spark, out)
       assert(!new java.io.File(s"$out/_delta").exists())
       assert(view() == Set(("<g:2>", "<s>", "\"a\""), ("<g:2>", "<t>", "\"b\""),
         ("<g:1>", "<c>", "\"c\"")))
