@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.util.concurrent.{Callable, ExecutionException, FutureTask}
+import java.util.concurrent.{ExecutionException, FutureTask}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,11 +14,13 @@ import org.apache.spark.sql.functions._
   * Two chains run side by side. The PAGE chain (pages → extracted →
   * mentions → links) runs on the caller's thread. The DICTIONARY branch —
   * everything that reads only the entity dictionary: the linker's
-  * alias-quarantine audit and the whole `canonical` stage — runs on one
-  * dedicated driver thread started before `pages`, so Spark schedules its
-  * jobs beside the page chain's. The chains meet at `linked`, the first
-  * stage that reads both, and the branch is joined on every exit path
-  * (return, stop, failure), so no job of a run outlives `run`.
+  * dictionary side ([[Linking.prepare]], one driver-side pass that also
+  * audits the alias quarantine) and the whole `canonical` stage — runs on
+  * one dedicated driver thread started before `pages`, so Spark schedules
+  * its jobs beside the page chain's. It prepares the linker's side first
+  * and hands it to `links` at once; the chains meet again at `linked`,
+  * the first stage that reads both, and the branch is joined on every
+  * exit path (return, stop, failure), so no job of a run outlives `run`.
   */
 object Pipeline {
 
@@ -54,14 +56,12 @@ object Pipeline {
     b.getOrCreate()
   }
 
-  /** Entity profile table (entity_iri, token) for the linker. */
-  def profiles(spark: SparkSession, nEntities: Int): DataFrame = {
-    import spark.implicits._
+  /** Entity profile rows (entity_iri, token) for the linker. */
+  def profiles(nEntities: Int): Seq[(String, String)] =
     (0 until nEntities).flatMap { k =>
       Linking.entityProfile(PageGen.entityIri(k), PageGen.entityName(k), PageGen.topicTokens(k))
         .map(t => (PageGen.entityIri(k), t))
-    }.toDF("entity_iri", "token")
-  }
+    }
 
   /** entity_iri → primary label (the weight-1.0 alias). */
   def labels(dict: DataFrame): DataFrame =
@@ -113,14 +113,17 @@ object Pipeline {
 
     // the dictionary branch (see the object doc). The thread inherits a
     // copy of the caller's local properties (job group, scheduler pool),
-    // and its jobs, the audit's included, carry the `canonical` label.
-    val dictBranch = new FutureTask[Committed](new Callable[Committed] {
-      def call(): Committed = {
-        spark.sparkContext.setLocalProperty("graft.stage", "canonical")
-        Linking.auditQuarantine(dictDf.as[EntityAlias])
-        commit("canonical")(Canonical.canonicalMapping(dictDf, checkpoint = checkpoint))
-      }
+    // and its jobs carry the `canonical` label. `linkDict` is run first,
+    // on the branch, and holds its own result or failure for `links`.
+    val linkDict = new FutureTask[Linking.Dictionary](() =>
+      Linking.prepare(spark, PageGen.entityDictionary(nEntities), profiles(nEntities)))
+    val dictBranch = new FutureTask[Committed](() => {
+      linkDict.run()
+      spark.sparkContext.setLocalProperty("graft.stage", "canonical")
+      commit("canonical")(Canonical.canonicalMapping(dictDf, checkpoint = checkpoint))
     })
+    def await[T](f: FutureTask[T]): T =
+      try f.get() catch { case e: ExecutionException => throw e.getCause }
     val branch = new Thread(dictBranch, "graft-dictionary-branch")
     branch.setDaemon(true)
     branch.start()
@@ -142,18 +145,11 @@ object Pipeline {
           Mentions.detect(extracted.select($"url", $"text"), aliasSurfaces)).toDF()
       }
 
-      // the linker scans the mention table ~6 times (distinct surfaces, token
-      // explode, tf, norms, candidate join) — cache the slim columns once
-      // instead of re-reading the snapshot per scan
-      val mentionsSlim = mentions.select($"mention_id", $"surface", $"context").cache()
       val links = stage("links") {
-        Linking.link(mentionsSlim, dictDf.as[EntityAlias], profiles(spark, nEntities),
-          rows("mentions")).toDF()
+        Linking.link(mentions, await(linkDict), rows("mentions")).toDF()
       }
-      mentionsSlim.unpersist(blocking = false)
 
-      val canonical = record("canonical",
-        try dictBranch.get() catch { case e: ExecutionException => throw e.getCause })
+      val canonical = record("canonical", await(dictBranch))
 
       val linked = stage("linked") {
         links
@@ -186,7 +182,10 @@ object Pipeline {
       lineage.write(spark, s"$out/lineage")
 
       Summary(rows, graphRows, walls)
-    } finally branch.join() // on every exit path: no job of this run outlives it
+    } finally {
+      branch.join() // on every exit path: no job of this run outlives it
+      dictDf.unpersist()
+    }
   }
 
   final class PipelineStopped(val stage: String, val partial: Summary)

@@ -103,5 +103,5 @@ object SnapshotStore {
     * schemas, emission rules, linking ranks — so stale-format snapshots
     * recompute instead of silently serving.
     */
-  val FormatVersion = 3
+  val FormatVersion = 4
 }

@@ -21,11 +21,16 @@ class PipelineSpec extends AnyFunSuite {
   private val NPages = 200L
   private val NEntities = 120
   /** Spark jobs of one fresh `Pipeline.run(spark, NPages, NEntities, _)`
-    * on local[4] with 8 shuffle partitions: 61 to 64 measured, plus 2 for
-    * the run-to-run spread of `canonical`'s job count (20 to 22 per run at
-    * 2,000 entities). A read-back count and a schema-inference job per
-    * stage would take it to 83. */
-  private val RunJobBudget = 66
+    * on local[4] with 8 shuffle partitions: 38 to 40 measured over eight
+    * runs in one session (`links` 7, `canonical` 19 to 21), plus 2 for the
+    * run-to-run spread of `canonical`'s job count (20 to 22 per run at
+    * 2,000 entities). With `links` as 29 jobs of blocking and scoring
+    * caches and checkpoints, a run took 61 to 64; a read-back count and a
+    * schema-inference job per stage would take that to 83. */
+  private val RunJobBudget = 42
+  /** Jobs of the `links` stage: the one plan's exchanges and broadcasts
+    * and its snapshot write (7 measured). */
+  private val LinksJobs = 12
   /** Jobs of the graph write alone (its AQE query stages and the write);
     * a read-back count of the graph would add 3. */
   private val EmitJobs = 4
@@ -60,6 +65,10 @@ class PipelineSpec extends AnyFunSuite {
     val active = spark.sparkContext.statusTracker.getActiveJobIds
     assert(active.isEmpty, s"jobs still running: ${active.mkString(",")}")
   }
+
+  /** The linker's dictionary side for `n` synthetic entities. */
+  private def linkDict(n: Int): Linking.Dictionary =
+    Linking.prepare(spark, PageGen.entityDictionary(n), Pipeline.profiles(n))
 
   private def graph(out: String): Array[String] =
     Materialize.read(spark, s"$out/graph").select("subj", "pred", "obj")
@@ -244,9 +253,8 @@ class PipelineSpec extends AnyFunSuite {
   test("LSH blocking recalls every exact alias match") {
     import spark.implicits._
     val pages = PageGen.pages(spark, NPages, NEntities)
-    val dict = PageGen.dictionary(spark, NEntities)
     val mentions = Mentions.detect(pages.toDF(), PageGen.entityDictionary(NEntities).map(_.alias))
-    val cands = Linking.block(mentions.toDF(), dict).collect()
+    val cands = Linking.block(mentions.toDF(), linkDict(NEntities)).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
 
     // expected: for each mention whose surface is exactly an alias of k,
@@ -269,13 +277,13 @@ class PipelineSpec extends AnyFunSuite {
     val flood = (0 until 1500).map(k =>
       EntityAlias(s"http://kg.example/flood/$k", "Flood Corp", 0.5))
     val normal = Seq(EntityAlias("http://kg.example/ok/1", "Acme Widgets", 1.0))
-    val dict = (flood ++ normal).toDS()
+    val dict = Linking.prepare(spark, flood ++ normal, Nil)
 
-    val audit = Linking.aliasHotBands(dict).collect()
+    val audit = dict.quarantined
     assert(audit.nonEmpty, "no audit rows for a flooded alias universe")
-    assert(audit.forall(_.getLong(2) > Linking.MaxAliasBandBucket))
+    assert(audit.forall(_.n_aliases > Linking.MaxAliasBandBucket))
 
-    // exact-match union: a mention with the flooded surface still gets
+    // exact keys: a mention with the flooded surface still gets
     // EVERY candidate; the unflooded alias is untouched
     val mentions = Seq((1L, "Flood Corp"), (2L, "Acme Widgets")).toDF("mention_id", "surface")
     val cands = Linking.block(mentions, dict).collect()
@@ -287,10 +295,8 @@ class PipelineSpec extends AnyFunSuite {
   test("linking resolves shared-alias mentions to the context-matching entity") {
     import spark.implicits._
     val pages = PageGen.pages(spark, NPages, NEntities)
-    val dict = PageGen.dictionary(spark, NEntities)
     val mentions = Mentions.detect(pages.toDF(), PageGen.entityDictionary(NEntities).map(_.alias))
-    val linked = Linking.link(mentions.toDF(), dict, Pipeline.profiles(spark, NEntities),
-      mentions.count()).collect()
+    val linked = Linking.link(mentions.toDF(), linkDict(NEntities), mentions.count()).collect()
 
     // Every unambiguous full-name mention must link to its own entity.
     val nameToEntity = (0 until NEntities).map(k => PageGen.entityName(k) -> PageGen.entityIri(k)).toMap
@@ -316,29 +322,28 @@ class PipelineSpec extends AnyFunSuite {
     val context = (Seq("market", "village", surface) ++ PageGen.topicTokens(13) :+ "garden")
       .mkString(" ")
     val mentions = Seq((1L, surface, context)).toDF("mention_id", "surface", "context")
-    val dict = PageGen.dictionary(spark, n)
+    val dict = linkDict(n)
     val cands = Linking.block(mentions, dict).collect().map(_.getString(1)).toSet
     assert(Set(13, 1053).map(PageGen.entityIri).subsetOf(cands), cands)
 
-    val got = Linking.link(mentions, dict, Pipeline.profiles(spark, n), mentions.count()).collect()
+    val got = Linking.link(mentions, dict, mentions.count()).collect()
     assert(got.map(_.entity_iri).toSeq == Seq(PageGen.entityIri(13)), got.toSeq)
   }
 
   test("link() releases its working caches — no storage accumulation across jobs") {
     import spark.implicits._
     val pages = PageGen.pages(spark, NPages, NEntities)
-    val dict = PageGen.dictionary(spark, NEntities)
+    val dict = linkDict(NEntities)
     val mentions = Mentions.detect(pages.toDF(), PageGen.entityDictionary(NEntities).map(_.alias))
     val nMentions = mentions.count()
 
     val before = spark.sparkContext.getPersistentRDDs.size
-    // two back-to-back link jobs: the tf/idf working caches must be gone
-    // after each returns; only the (small) localCheckpoint of each RESULT
-    // may remain until its Dataset is garbage-collected
-    Linking.link(mentions.toDF(), dict, Pipeline.profiles(spark, NEntities), nMentions).count()
-    Linking.link(mentions.toDF(), dict, Pipeline.profiles(spark, NEntities), nMentions).count()
+    // two back-to-back link jobs: link is one lazy plan that holds no
+    // cache or checkpoint, so no storage may remain after either
+    Linking.link(mentions.toDF(), dict, nMentions).count()
+    Linking.link(mentions.toDF(), dict, nMentions).count()
     val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after - before <= 2,
+    assert(after == before,
       s"storage grew by ${after - before} blocks across 2 link jobs (caches leaked)")
   }
 
@@ -398,6 +403,8 @@ class PipelineSpec extends AnyFunSuite {
       }
       // the write's own jobs only: the graph's row count rides the write
       assert(jobs.get("emit+materialize").exists(_ <= EmitJobs), jobs)
+      // one plan: its exchanges, its broadcasts and the snapshot write
+      assert(jobs.get("links").exists(_ <= LinksJobs), jobs)
       assert(summary.graphRows == Materialize.read(spark, s"$out/graph").count())
       assert(jobs.values.sum <= RunJobBudget, s"${jobs.values.sum} jobs: $jobs")
     } finally
@@ -426,6 +433,17 @@ class PipelineSpec extends AnyFunSuite {
         assertNoActiveJobs()
         assert(graph(out).sameElements(graph(whole)), s"resumed after $st differs")
       }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(base)
+  }
+
+  test("two runs in one session leave no cached entity dictionary behind") {
+    val base = Files.createTempDirectory("graft-kg-dictcache").toFile
+    try {
+      Seq("a", "b").foreach(d => Pipeline.run(spark, 40L, NEntities, s"$base/$d"))
+      // the same plan as the run's dictionary: its storage level is the
+      // CacheManager's entry for it
+      val level = PageGen.dictionary(spark, NEntities).toDF().storageLevel
+      assert(level == org.apache.spark.storage.StorageLevel.NONE, s"dictionary still cached: $level")
     } finally org.apache.commons.io.FileUtils.deleteQuietly(base)
   }
 
