@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
 import graft.ops.{EmbeddingOps, GraphAnalytics, GraphOps, MultimodalOps, RdfsOps, TextOps}
+import graft.pipeline.TableLog
 import graft.streaming.StreamingOps
 
 /** Driver contract: one entry per implemented operator, each paired (where
@@ -607,8 +608,8 @@ object SparkEntry {
           emb.filter(col("vec_id") % 3 === 0))
         graft.ops.IvfStore.deleteVectors(s, s"$dir/ivf",
           emb.filter(col("vec_id") % 5 === 0).select(col("vec_id")))
-        // one fused resolution pass for all three cuts (row-identical to
-        // unioning readAsOf(0|1|2) — IvfStore.readEvolution)
+        // one fused resolution pass for all three as-of cuts
+        // (IvfStore.readEvolution)
         graft.ops.IvfStore.readEvolution(s, s"$dir/ivf", upTo = 2L)
           .select(col("as_of"), col("vec_id"), col("cell"))
           .localCheckpoint() // eager — the scratch index dir is deleted below
@@ -1203,7 +1204,7 @@ object SparkEntry {
         M.appendDelta(s, s"$dir/g", rows(tri.filter(col("doc_id") % 3 === 0)))
         M.appendDeltaOps(s, s"$dir/g",
           rows(tri.filter(col("doc_id") % 5 === 0)).toDF()
-            .withColumn("op", lit(M.OpDel)))
+            .withColumn("op", lit(TableLog.OpDel)))
         def view(seq: Long) = M.readAsOf(s, s"$dir/g", seq)
           .select(lit(seq).as("as_of"), col("subj"), col("pred"), col("obj"))
         view(0).unionByName(view(1)).unionByName(view(2))
@@ -1838,9 +1839,9 @@ object SparkEntry {
       val keys = Seq("subj", "pred", "obj")
       val kc = keys.map(col)
       val diff = v2.join(v1.select(kc: _*), keys, "left_anti")
-        .withColumn("op", lit(graft.pipeline.Materialize.OpAdd))
+        .withColumn("op", lit(TableLog.OpAdd))
         .unionByName(v1.join(v2.select(kc: _*), keys, "left_anti")
-          .withColumn("op", lit(graft.pipeline.Materialize.OpDel)))
+          .withColumn("op", lit(TableLog.OpDel)))
       GraphAnalytics.degreesDelta(GraphAnalytics.outDegrees(v1), diff)
     }),
 
@@ -1866,9 +1867,9 @@ object SparkEntry {
       val keys = Seq("subj", "pred", "obj")
       val kc = keys.map(col)
       val diff = v2.join(v1.select(kc: _*), keys, "left_anti")
-        .withColumn("op", lit(graft.pipeline.Materialize.OpAdd))
+        .withColumn("op", lit(TableLog.OpAdd))
         .unionByName(v1.join(v2.select(kc: _*), keys, "left_anti")
-          .withColumn("op", lit(graft.pipeline.Materialize.OpDel)))
+          .withColumn("op", lit(TableLog.OpDel)))
       GraphOps.validateGraphDelta(v2, diff, GraphOps.validateGraph(v1, rules), rules)
     }),
 
@@ -2420,7 +2421,7 @@ object SparkEntry {
     */
   private val ivfOracle: String = ivfOracleWhere("TRUE")
 
-  /** DuckDB twin of [[graft.ops.IvfStore.readAsOf]] (emb20): the three
+  /** DuckDB twin of [[graft.ops.IvfStore.readEvolution]] (emb20): the three
     * as-of states in closed form — base (%3≠0), +appends (all), +delete
     * tombstones (%5≠0) — with the same grid cell assignment the store
     * computes (exact integer argmin, ties to the lowest k).

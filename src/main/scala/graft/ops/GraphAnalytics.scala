@@ -96,7 +96,7 @@ object GraphAnalytics {
   def degreesDelta(oldDegrees: DataFrame, diff: DataFrame): DataFrame = {
     val d = diff
       .groupBy(col("subj"))
-      .agg(sum(when(col("op") === graft.pipeline.Materialize.OpAdd, 1L)
+      .agg(sum(when(col("op") === graft.pipeline.TableLog.OpAdd, 1L)
         .otherwise(-1L)).as("_d"))
     oldDegrees.join(d, Seq("subj"), "full_outer")
       .select(col("subj"),

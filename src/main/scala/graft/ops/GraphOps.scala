@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
-import graft.pipeline.{Canonical, Extract, TripleEmit}
+import graft.pipeline.{Canonical, Extract, TableLog, TripleEmit}
 import graft.turtle.NTriples
 
 /** KG operators exposed over the shared test tables: Turtle parsing at
@@ -1010,8 +1010,8 @@ object GraphOps {
     // materialize the delta-sized batch ONCE: appendDeltaOps probes
     // isEmpty then writes (two actions), and the write must not re-run a
     // solution plan whose scans read the very delta log being appended to
-    val batch = (dels.map(_.withColumn("op", lit(M.OpDel))).toSeq ++
-      adds.map(_.withColumn("op", lit(M.OpAdd))))
+    val batch = (dels.map(_.withColumn("op", lit(TableLog.OpDel))).toSeq ++
+      adds.map(_.withColumn("op", lit(TableLog.OpAdd))))
       .reduce(_.unionByName(_))
       .withColumn("src_url", lit(srcUrl))
       .withColumn("warc_ts", lit(ts))
@@ -1052,8 +1052,8 @@ object GraphOps {
     val adds = if (insert.isEmpty) None else Some(construct(sol, insert))
     val dels = (if (delete.isEmpty) None else Some(construct(sol, delete)))
       .map(d => adds.fold(d)(a => d.join(a, Seq("subj", "pred", "obj"), "left_anti")))
-    val batch = (dels.map(_.withColumn("op", lit(M.OpDel))).toSeq ++
-      adds.map(_.withColumn("op", lit(M.OpAdd))))
+    val batch = (dels.map(_.withColumn("op", lit(TableLog.OpDel))).toSeq ++
+      adds.map(_.withColumn("op", lit(TableLog.OpAdd))))
       .reduce(_.unionByName(_))
       .withColumn("graph", lit(graph))
       .withColumn("src_url", lit(srcUrl))

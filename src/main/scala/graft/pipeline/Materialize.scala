@@ -196,8 +196,8 @@ object Materialize {
     * (Spark refuses to overwrite a path it is still reading from; at
     * cluster scale pass [[CheckpointPolicy.Reliable]] so the staged merge
     * lives on DFS, or swap this class for a real table format — Iceberg/
-    * Delta snapshots are exactly this operation) and written with
-    * per-write `partitionOverwriteMode=dynamic` (no session conf
+    * Delta snapshots are exactly this operation) and written by
+    * [[TableLog.rewrite]]'s per-write dynamic overwrite (no session conf
     * mutation): untouched partitions are never listed, read, or replaced
     * (PipelineSpec pins byte-identical untouched partition files).
     * Operational caveats at cluster scale: run dynamic overwrite under
@@ -216,30 +216,13 @@ object Materialize {
     // the delta subtree is consumed twice (touched-set collect + the
     // merge union) — materialize it once through the policy
     val deltaDf = checkpoint.truncate(delta.toDF())
-    val touched = touchedBuckets(withPredHash(deltaDf))
-    val existing = read(spark, out)
-      .filter(col("pred_hash").isin(touched: _*))
-      .select(col("subj"), col("pred"), col("obj"), col("src_url"), col("warc_ts"))
-    overwritePartitions(
-      checkpoint.truncate(saltedDeduped(existing.unionByName(deltaDf), Map.empty, DefaultSalt)),
-      out)
+    TableLog.rewrite(out, "pred_hash", withPredHash(deltaDf), checkpoint) { touched =>
+      val existing = read(spark, out)
+        .filter(col("pred_hash").isin(touched: _*))
+        .select(col("subj"), col("pred"), col("obj"), col("src_url"), col("warc_ts"))
+      saltedDeduped(existing.unionByName(deltaDf), Map.empty, DefaultSalt)
+    }
   }
-
-  /** The distinct pred_hash values of `rows` — bounded by
-    * [[DefaultPredBuckets]], never by data. Partition discovery types
-    * pred_hash as int, so it is cast before collecting.
-    */
-  private def touchedBuckets(rows: DataFrame): Array[Long] =
-    rows.select(col("pred_hash").cast("long")).distinct().collect().map(_.getLong(0))
-
-  /** Dynamic partition overwrite: replaces only the pred_hash partitions
-    * present in `rows`; every other partition is never listed or rewritten.
-    */
-  private def overwritePartitions(rows: DataFrame, out: String): Unit =
-    rows.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("pred_hash")
-      .parquet(out)
 
   // -------------------------------------------------- LSM-style delta path
   //
@@ -266,41 +249,8 @@ object Materialize {
   // warc_ts) among the adds since it last came into existence — the same
   // deterministic rule a full build applies, now windowed to the live
   // assertions. [[compact]] resolves and DROPS tombstones (the rewritten
-  // base is the resolved state). The batch sequence comes from the marker
-  // log — the delta log has a single writer per table (the standard LSM
-  // assumption; concurrent writers need a real table format's commit
-  // protocol).
-
-  private def deltaDir(out: String) = s"$out/_delta"
-  private def batchMarkerDir(out: String) = s"$out/_delta_batches"
-
-  val OpAdd = "add"
-  val OpDel = "del"
-
-  private def fsOf(spark: org.apache.spark.sql.SparkSession, p: String) = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    (path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
-  }
-
-  /** True iff `dir` contains at least one non-hidden data file — guards
-    * readers against a `_delta` dir holding only `_SUCCESS` (an empty
-    * append), which parquet schema inference would otherwise reject.
-    */
-  private def hasDataFiles(
-      fs: org.apache.hadoop.fs.FileSystem, dir: org.apache.hadoop.fs.Path): Boolean = {
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val name = it.next().getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".")) return true
-    }
-    false
-  }
-
-  /** Pending deltas exist (dir present AND holds real data files). */
-  private def pendingDeltas(spark: org.apache.spark.sql.SparkSession, out: String): Boolean = {
-    val (fs, dd) = fsOf(spark, deltaDir(out))
-    fs.exists(dd) && hasDataFiles(fs, dd)
-  }
+  // base is the resolved state). The log itself — its directories, batch
+  // sequence, empty-append rule and tombstone rule — is [[TableLog]]'s.
 
   /** Append one delta batch under `out/_delta` (same schema + pred_hash
     * partition layout as the base, plus `op`/`batch_seq`) plus a batch
@@ -315,7 +265,7 @@ object Materialize {
       spark: org.apache.spark.sql.SparkSession,
       out: String,
       delta: Dataset[TripleRow]): Unit =
-    appendDeltaOps(spark, out, delta.toDF().withColumn("op", lit(OpAdd)))
+    appendDeltaOps(spark, out, delta.toDF().withColumn("op", lit(TableLog.OpAdd)))
 
   /** [[appendDelta]] for mixed assertions + retractions: `deltaOps` rows
     * are (subj, pred, obj, src_url, warc_ts, op) with op ∈ {add, del}
@@ -329,57 +279,24 @@ object Materialize {
       deltaOps: DataFrame): Unit = {
     val ops = deltaOps.select(
       (contentKeys(deltaOps) ++ Seq("src_url", "warc_ts", "op")).map(col): _*)
-    val seq = deltaBatchCount(spark, out) + 1L
-    // count rows DURING the write (observe rides the job) instead of a
-    // separate isEmpty pre-check — the former shape evaluated the caller's
-    // delta subtree twice per append (once for the probe, once for the
-    // write). An empty append writes no data files (readers' hasDataFiles
-    // guard already ignores a _SUCCESS-only _delta dir); it must not leave
-    // a batch marker, or the compaction trigger and batch_seq would count
-    // phantom batches.
-    val obs = new org.apache.spark.sql.Observation(
-      s"lsm.append.${java.util.UUID.randomUUID()}")
-    saltedDeduped(ops, Map.empty, DefaultSalt)
-      .withColumn("batch_seq", lit(seq))
-      .observe(obs, count(lit(1)).as("n"))
-      .write.mode("append").partitionBy("pred_hash").parquet(deltaDir(out))
-    if (obs.get("n").asInstanceOf[Long] > 0L) {
-      val (fs, dir) = fsOf(spark, batchMarkerDir(out))
-      fs.mkdirs(dir)
-      fs.create(new org.apache.hadoop.fs.Path(dir,
-        s"batch-${java.util.UUID.randomUUID()}"), false).close()
-    } else {
-      // restore the exact no-op: an empty append must leave no _delta dir
-      // behind (spec-pinned) — but only when the dir holds no earlier
-      // batches' data files
-      val (fs, dd) = fsOf(spark, deltaDir(out))
-      if (fs.exists(dd) && !hasDataFiles(fs, dd)) fs.delete(dd, true)
-    }
+    TableLog.append(spark, out, saltedDeduped(ops, Map.empty, DefaultSalt), "pred_hash")
   }
 
   /** Number of delta batches appended since the last [[compact]]. */
-  def deltaBatchCount(spark: org.apache.spark.sql.SparkSession, out: String): Int = {
-    val (fs, dir) = fsOf(spark, batchMarkerDir(out))
-    if (fs.exists(dir)) fs.listStatus(dir).length else 0
-  }
+  def deltaBatchCount(spark: org.apache.spark.sql.SparkSession, out: String): Int =
+    TableLog.batchCount(spark, out)
 
   /** Tombstone resolution over (…, op, batch_seq) rows already clustered
     * by a hash partitioning whose expressions are a subset of the keys
-    * `clustering` ++ [[contentKeys]]: a window over the keys finds each
-    * triple's (or quad's) latest retraction seq, adds strictly newer than
-    * it survive, and the surviving assertions collapse to the MIN
-    * provenance — window + filter + aggregate all ride the SAME
-    * clustering, so the whole resolution costs the ONE exchange the
-    * caller already paid.
+    * `clustering` ++ [[contentKeys]]: [[TableLog.liveAdds]] over the keys,
+    * then the surviving assertions collapse to the MIN provenance —
+    * window + filter + aggregate all ride the SAME clustering, so the
+    * whole resolution costs the ONE exchange the caller already paid.
     */
   private def resolveOps(rows: DataFrame, clustering: Seq[String]): DataFrame = {
     val carry = contentKeys(rows)
     val keys = clustering ++ carry
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
-    rows
-      .withColumn("_dseq",
-        coalesce(max(when(col("op") === OpDel, col("batch_seq"))).over(w), lit(-1L)))
-      .filter(col("op") === OpAdd && col("batch_seq") > col("_dseq"))
+    TableLog.liveAdds(rows, keys)
       .groupBy(keys.map(col): _*)
       .agg(min(struct(col("src_url"), col("warc_ts"))).as("prov"))
       .select(carry.map(col) ++ Seq(
@@ -421,19 +338,18 @@ object Materialize {
       spark: org.apache.spark.sql.SparkSession, out: String,
       asOf: Option[Long]): DataFrame = {
     val base = read(spark, out)
-    if (!pendingDeltas(spark, out) || asOf.contains(0L)) base
+    if (!TableLog.hasPending(spark, out) || asOf.contains(0L)) base
     else {
-      val deltas = asOf.foldLeft(spark.read.parquet(deltaDir(out)))(
+      val deltas = asOf.foldLeft(TableLog.deltas(spark, out))(
         (d, seq) => d.filter(col("batch_seq") <= seq))
       // under an asOf cut the touched set shrinks to the CUT's partitions
-      val touched = touchedBuckets(deltas)
+      val touched = TableLog.touched(deltas, "pred_hash")
       val content = contentKeys(base)
       if (touched.isEmpty) base // the asOf cut excludes every pending batch
       else {
         val untouched = base.filter(!col("pred_hash").isin(touched: _*))
           .select((content ++ Seq("src_url", "warc_ts", "pred_hash")).map(col): _*)
-        val rows = base.filter(col("pred_hash").isin(touched: _*))
-          .withColumn("op", lit(OpAdd)).withColumn("batch_seq", lit(0L))
+        val rows = TableLog.asBaseOps(base.filter(col("pred_hash").isin(touched: _*)))
           .unionByName(deltas)
         untouched.unionByName(
           resolveOps(rows.repartition(("pred_hash" +: content).map(col): _*), Seq("pred_hash")))
@@ -441,59 +357,29 @@ object Materialize {
     }
   }
 
-  /** Fold all pending deltas into the base: one [[mergeDelta]]-shaped
-    * touched-partition rewrite (existing ∪ deltas resolved inside the one
-    * salted exchange — the resolution window/filter/aggregate all ride the
-    * repartition's clustering — then dynamic partition overwrite; untouched
-    * partitions never listed or rewritten), then drop the delta log.
-    * Tombstones are consumed here: the rewritten base IS the resolved
-    * state, so retractions cost nothing after compaction. No-op when no
-    * deltas are pending. A quad table resolves per (graph, s, p, o).
+  /** Fold all pending deltas into the base: one [[TableLog.rewrite]] of
+    * the touched pred_hash partitions (existing ∪ deltas resolved inside
+    * the one salted exchange — the resolution window/filter/aggregate all
+    * ride the repartition's clustering), then drop the delta log. A
+    * touched partition whose triples were ALL retracted is deleted, not
+    * resurrected. Tombstones are consumed here: the rewritten base IS the
+    * resolved state, so retractions cost nothing after compaction. No-op
+    * when no deltas are pending. A quad table resolves per (graph, s, p, o).
     */
   def compact(
       spark: org.apache.spark.sql.SparkSession,
       out: String,
       checkpoint: CheckpointPolicy = CheckpointPolicy.Local): Unit = {
-    if (!pendingDeltas(spark, out)) return
-    val (fs, dd) = fsOf(spark, deltaDir(out))
-    val deltas = spark.read.parquet(deltaDir(out))
-    val touched = touchedBuckets(deltas)
-    val existing = read(spark, out)
-      .filter(col("pred_hash").isin(touched: _*))
-      .withColumn("op", lit(OpAdd)).withColumn("batch_seq", lit(0L))
-    val opCols = (contentKeys(existing) ++
-      Seq("src_url", "warc_ts", "op", "batch_seq")).map(col)
-    val rows = existing.select(opCols: _*).unionByName(deltas.select(opCols: _*))
-    val merged = checkpoint.truncate(
-      resolveOps(salted(rows, Map.empty, DefaultSalt), Seq("pred_hash", "subj_salt")))
-    val obs = new org.apache.spark.sql.Observation(
-      s"lsm.compact.${java.util.UUID.randomUUID()}")
-    overwritePartitions(
-      merged.observe(obs, collect_set(col("pred_hash").cast("long")).as("ph")), out)
-    // a touched pred_hash partition whose triples were ALL retracted emits
-    // no resolved rows; dynamic overwrite would keep its stale base files
-    // while the delta log is dropped below, resurrecting the retractions.
-    // Delete emptied partitions explicitly (the ViewStore invariant); the
-    // surviving set rides the write job as an observed metric.
-    deleteEmptiedPartitions(spark, out, touched,
-      obs.get("ph").asInstanceOf[Seq[Long]].toSet)
-    fs.delete(dd, true)
-    val (bfs, bd) = fsOf(spark, batchMarkerDir(out))
-    bfs.delete(bd, true)
-  }
-
-  /** Explicitly delete `column=N` partition dirs that were touched by a
-    * rewrite but absent from its output (dynamic overwrite only replaces
-    * partitions present in the written data). Shared with [[ViewStore]].
-    */
-  private[pipeline] def deleteEmptiedPartitions(
-      spark: org.apache.spark.sql.SparkSession, out: String,
-      touched: Array[Long], surviving: Set[Long], column: String = "pred_hash"): Unit = {
-    val root = new org.apache.hadoop.fs.Path(out)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touched.filterNot(surviving).foreach { n =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"$column=$n"), true)
+    if (!TableLog.hasPending(spark, out)) return
+    val deltas = TableLog.deltas(spark, out)
+    TableLog.rewrite(out, "pred_hash", deltas, checkpoint) { touched =>
+      val existing = TableLog.asBaseOps(read(spark, out).filter(col("pred_hash").isin(touched: _*)))
+      val opCols = (contentKeys(existing) ++
+        Seq("src_url", "warc_ts", "op", "batch_seq")).map(col)
+      val rows = existing.select(opCols: _*).unionByName(deltas.select(opCols: _*))
+      resolveOps(salted(rows, Map.empty, DefaultSalt), Seq("pred_hash", "subj_salt"))
     }
+    TableLog.drop(spark, out)
   }
 
   /** The LSM merge entry point: append the batch (cheap — bytes ∝ delta),
@@ -547,9 +433,9 @@ object Materialize {
     val n = side(newOut)
     val keys = Seq("pred_hash", "subj", "pred", "obj")
     val keyCols = keys.map(col)
-    n.join(o.select(keyCols: _*), keys, "left_anti").withColumn("op", lit(OpAdd))
+    n.join(o.select(keyCols: _*), keys, "left_anti").withColumn("op", lit(TableLog.OpAdd))
       .unionByName(
-        o.join(n.select(keyCols: _*), keys, "left_anti").withColumn("op", lit(OpDel)))
+        o.join(n.select(keyCols: _*), keys, "left_anti").withColumn("op", lit(TableLog.OpDel)))
       .select(col("op"), col("subj"), col("pred"), col("obj"),
         col("src_url"), col("warc_ts"))
   }
@@ -593,13 +479,11 @@ object Materialize {
     val ph = predHash(lit(pred))
     val base = read(spark, out)
       .filter(col("pred_hash") === ph && col("pred") === pred)
-    if (!pendingDeltas(spark, out)) base
+    if (!TableLog.hasPending(spark, out)) base
     else {
-      val deltas = spark.read.parquet(deltaDir(out))
+      val deltas = TableLog.deltas(spark, out)
         .filter(col("pred_hash") === ph && col("pred") === pred)
-      val rows = base
-        .withColumn("op", lit(OpAdd)).withColumn("batch_seq", lit(0L))
-        .unionByName(deltas)
+      val rows = TableLog.asBaseOps(base).unionByName(deltas)
       resolveOps(
         rows.repartition(("pred_hash" +: contentKeys(base)).map(col): _*), Seq("pred_hash"))
     }

@@ -17,10 +17,10 @@ import org.apache.spark.sql.functions._
   * on duplicate adds (the LSM store is a set; the view is a multiplicity
   * ledger), so the API takes the diff, not the batch.
   *
-  * Scale shape (the [[Materialize.mergeDelta]] discipline): the delta
-  * aggregate is ∝ diff; only diff-touched `key_hash` partitions are read
-  * and dynamically overwritten — work ∝ diff + touched partitions, never
-  * ∝ view. Keys folding to n ≤ 0 leave the view.
+  * Scale shape (a [[TableLog.rewrite]], like [[Materialize.mergeDelta]]):
+  * the delta aggregate is ∝ diff; only diff-touched `key_hash` partitions
+  * are read and dynamically overwritten — work ∝ diff + touched
+  * partitions, never ∝ view. Keys folding to n ≤ 0 leave the view.
   *
   * The bucket count [[DefaultKeyBuckets]] is the view's TABLE FORMAT:
   * build and every fold must hash a key to the same bucket, so no
@@ -100,7 +100,7 @@ object ViewStore {
     foldInto(spark, out,
       diff.filter(col("pred") === pred)
         .groupBy(col("obj").as("key"))
-        .agg(sum(when(col("op") === Materialize.OpAdd, lit(1L))
+        .agg(sum(when(col("op") === TableLog.OpAdd, lit(1L))
           .otherwise(lit(-1L))).as("dn")),
       checkpoint, foldId)
 
@@ -132,7 +132,7 @@ object ViewStore {
   private[pipeline] def sumViewDeltas(
       diff: DataFrame, keyPred: String, valuePred: String,
       postTriples: String => DataFrame): DataFrame = {
-    val sign = when(col("op") === Materialize.OpAdd, lit(1L)).otherwise(lit(-1L))
+    val sign = when(col("op") === TableLog.OpAdd, lit(1L)).otherwise(lit(-1L))
     val lex = regexp_extract(col("obj"), "^\"(-?\\d+)\"", 1)
     // Δv per subject (signed value movement; non-integer objects drop,
     // matching buildSumView)
@@ -187,7 +187,9 @@ object ViewStore {
     * scans, semi-joined to the affected-key/subject sets (broadcast,
     * diff-sized) — work ∝ affected keys' rows + touched view partitions,
     * never ∝ graph or view. Unaffected keys in touched partitions carry
-    * through; keys whose groups emptied leave the view.
+    * through; keys whose groups emptied leave the view. A fold that
+    * touches no key still enters its `foldId` in the ledger, like
+    * [[maintainCountView]]'s.
     */
   def maintainMaxView(
       spark: SparkSession, out: String, diff: DataFrame,
@@ -216,30 +218,17 @@ object ViewStore {
     // fold: affected keys REPLACE their view rows (or vanish if their
     // group emptied); co-located unaffected keys carry through
     val d = checkpoint.truncate(withKeyHash(affected))
-    val touched = d.select(col("key_hash")).distinct()
-      .collect().map(_.getLong(0))
-    if (touched.isEmpty) return
-    val existing = readExisting(spark, out, touched)
-    val carried = existing.join(broadcast(affected), Seq("key"), "left_anti")
-    val updated = checkpoint.truncate( // materialize before overwriting the input dir
-      carried.unionByName(withKeyHash(recomputed)))
-    // surviving-bucket set observed DURING the write (≤ DefaultKeyBuckets
-    // values) instead of a separate post-write job
-    val obsM = new org.apache.spark.sql.Observation(
-      s"view.max.${java.util.UUID.randomUUID()}")
-    updated.observe(obsM, collect_set(col("key_hash")).as("kh"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("key_hash")
-      .parquet(out)
-    Materialize.deleteEmptiedPartitions(spark, out, touched,
-      obsM.get("kh").asInstanceOf[Seq[Long]].toSet, "key_hash")
+    TableLog.rewrite(out, "key_hash", d, checkpoint) { touched =>
+      readExisting(spark, out, touched)
+        .join(broadcast(affected), Seq("key"), "left_anti")
+        .unionByName(withKeyHash(recomputed))
+    }
     foldId.foreach(markApplied(spark, out, _))
   }
 
-  /** The shared fold tail: apply per-key deltas to the stored view —
-    * touched-partition read, full-outer merge, dynamic overwrite, explicit
-    * delete of emptied buckets.
+  /** The shared fold tail: apply per-key deltas to the stored view — a
+    * [[TableLog.rewrite]] of the touched key_hash partitions as a
+    * full-outer merge; buckets whose keys all folded to zero are deleted.
     */
   private def foldInto(
       spark: SparkSession, out: String, deltas: DataFrame,
@@ -247,31 +236,14 @@ object ViewStore {
     if (foldId.exists(alreadyApplied(spark, out, _))) return
     val d = checkpoint.truncate( // materialized ONCE: sized ∝ diff, read twice below
       withKeyHash(deltas.filter(col("dn") =!= 0L)))
-    val touched = d.select(col("key_hash")).distinct()
-      .collect().map(_.getLong(0)) // bounded by DefaultKeyBuckets, never by data
-    if (touched.isEmpty) { foldId.foreach(markApplied(spark, out, _)); return }
-    val existing = readExisting(spark, out, touched)
-    val updated = existing
-      .join(d, Seq("key_hash", "key"), "full_outer")
-      .select(col("key"),
-        (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n"),
-        col("key_hash"))
-      .filter(col("n") > 0)
-      .transform(checkpoint.truncate _) // materialize before the dynamic
-                                          // overwrite reads its own input dir
-    // surviving-bucket set observed DURING the write (≤ DefaultKeyBuckets values)
-    val obsF = new org.apache.spark.sql.Observation(
-      s"view.fold.${java.util.UUID.randomUUID()}")
-    updated.observe(obsF, collect_set(col("key_hash")).as("kh"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("key_hash")
-      .parquet(out)
-    // dynamic overwrite only replaces partitions PRESENT in the written
-    // data — a touched bucket whose keys all folded to zero emits no rows
-    // and would keep its stale files; delete those partitions explicitly
-    Materialize.deleteEmptiedPartitions(spark, out, touched,
-      obsF.get("kh").asInstanceOf[Seq[Long]].toSet, "key_hash")
+    TableLog.rewrite(out, "key_hash", d, checkpoint) { touched =>
+      readExisting(spark, out, touched)
+        .join(d, Seq("key_hash", "key"), "full_outer")
+        .select(col("key"),
+          (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n"),
+          col("key_hash"))
+        .filter(col("n") > 0)
+    }
     foldId.foreach(markApplied(spark, out, _))
   }
 
@@ -281,30 +253,25 @@ object ViewStore {
   // silently corrupts the view. Callers that can replay pass a stable
   // foldId (e.g. the checkpointed micro-batch id) and the fold becomes
   // idempotent: a marker per applied fold lives beside the view (the
-  // Materialize._delta_batches / snapshot-log discipline), and a fold
-  // whose marker exists is skipped. MAX-view folds are idempotent in
-  // value but skip too — cheaper and uniform.
+  // TableLog batch-marker / snapshot-log discipline), and a fold whose
+  // marker exists is skipped. MAX-view folds are idempotent in value but
+  // skip too — cheaper and uniform.
 
   private def ledgerDir(out: String) = s"$out/_applied"
 
-  private def fsOf(spark: SparkSession, p: String) = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    (path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
-  }
-
   private def alreadyApplied(spark: SparkSession, out: String, id: String): Boolean = {
-    val (fs, dir) = fsOf(spark, ledgerDir(out))
+    val (fs, dir) = TableLog.fsOf(spark, ledgerDir(out))
     fs.exists(new org.apache.hadoop.fs.Path(dir, s"fold-$id"))
   }
 
   private def markApplied(spark: SparkSession, out: String, id: String): Unit = {
-    val (fs, dir) = fsOf(spark, ledgerDir(out))
+    val (fs, dir) = TableLog.fsOf(spark, ledgerDir(out))
     fs.mkdirs(dir)
     fs.create(new org.apache.hadoop.fs.Path(dir, s"fold-$id"), false).close()
   }
 
   private def clearLedger(spark: SparkSession, out: String): Unit = {
-    val (fs, dir) = fsOf(spark, ledgerDir(out))
+    val (fs, dir) = TableLog.fsOf(spark, ledgerDir(out))
     fs.delete(dir, true)
   }
 }

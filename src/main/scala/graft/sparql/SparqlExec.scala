@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.ops.GraphOps
-import graft.pipeline.CheckpointPolicy
+import graft.pipeline.{CheckpointPolicy, TableLog}
 import SparqlAst._
 
 /** Lowers a parsed SPARQL query ([[SparqlAst]]) onto the graft BGP algebra
@@ -161,7 +161,7 @@ object SparqlExec {
           throw Diag("quad tables take every DATA triple inside GRAPH <iri> { … }", 0, 0)
         if (!quadTable && triples.exists(_._1.isDefined))
           throw Diag("GRAPH blocks in DATA need a quad table (quadTable = true)", 0, 0)
-        val op = if (insert) M.OpAdd else M.OpDel
+        val op = if (insert) TableLog.OpAdd else TableLog.OpDel
         import spark.implicits._
         if (quadTable) {
           val batch = triples

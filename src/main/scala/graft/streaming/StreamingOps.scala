@@ -3,6 +3,7 @@ package graft.streaming
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.pipeline.TableLog
 
 /** State-v2 processor for [[StreamingOps.userStatsTws]]: counts a user's
   * events in a ValueState and their distinct event types in a MapState
@@ -505,10 +506,10 @@ object StreamingOps {
             val keyCols = keys.map(col)
             val ops = news
               .join(olds.select(keyCols: _*), keys, "left_anti")
-              .withColumn("op", lit(graft.pipeline.Materialize.OpAdd))
+              .withColumn("op", lit(TableLog.OpAdd))
               .unionByName(olds
                 .join(news.select(keyCols: _*), keys, "left_anti")
-                .withColumn("op", lit(graft.pipeline.Materialize.OpDel)))
+                .withColumn("op", lit(TableLog.OpDel)))
             graft.pipeline.Materialize.applyDiff(spark, graph, ops)
             if (graft.pipeline.Materialize.deltaBatchCount(spark, graph) >= 2)
               graft.pipeline.Materialize.compact(spark, graph)
@@ -761,7 +762,7 @@ object StreamingOps {
                 .join(M.readMergedPred(spark, graph, keyPred)
                   .select(col("subj"), col("pred"), col("obj")),
                   Seq("subj", "pred", "obj"), "left_anti")
-                .withColumn("op", lit(M.OpAdd))
+                .withColumn("op", lit(TableLog.OpAdd))
                 .localCheckpoint() // consumed after the merge overwrites the store
               M.mergeDeltaLsm(spark, graph, rows, maxDeltaBatches = 2)
               // foldId = the checkpointed micro-batch id: an at-least-once
@@ -836,14 +837,14 @@ object StreamingOps {
             // consumed twice (applyDiff + the count fold) — persist once
             val ops = news
               .join(olds.select(keyCols: _*), keys, "left_anti")
-              .withColumn("op", lit(M.OpAdd))
+              .withColumn("op", lit(TableLog.OpAdd))
               .unionByName(olds
                 .join(news.select(keyCols: _*), keys, "left_anti")
-                .withColumn("op", lit(M.OpDel)))
+                .withColumn("op", lit(TableLog.OpDel)))
               .localCheckpoint()
             M.applyDiff(spark, graph, ops)
             ops.groupBy(col("pred"))
-              .agg(sum(when(col("op") === M.OpAdd, lit(1L)).otherwise(lit(-1L)))
+              .agg(sum(when(col("op") === TableLog.OpAdd, lit(1L)).otherwise(lit(-1L)))
                 .as("dn"))
               .collect().foreach { r =>
                 val p = r.getString(0)

@@ -2003,7 +2003,8 @@ class OpsSpec extends AnyFunSuite {
       // 0 = base; 1 = +append(4,5); 2 = +delete(1,3); 3 = +resurrect 1;
       // the latest as-of equals the merged read
       def liveAt(asOf: Long): Map[Long, Long] =
-        IvfStore.readAsOf(s, s"$out/i", asOf)
+        IvfStore.readEvolution(s, s"$out/i", upTo = 3L)
+          .filter(col("as_of") === asOf)
           .select("vec_id", "cell").collect()
           .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(liveAt(0L) == Map(0L -> 0L, 1L -> 0L, 2L -> 1L, 3L -> 1L))
@@ -2020,6 +2021,30 @@ class OpsSpec extends AnyFunSuite {
       // post-compaction the history is gone by design: every as-of reads
       // the folded base
       assert(liveAt(0L) == live)
+    } finally
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+  }
+
+  test("IvfStore merged read: with a delta in one cell, the untouched cell bypasses the exchange") {
+    val s = spark
+    import s.implicits._
+    def emb(rows: (Long, Seq[Double])*) = rows.toDF("vec_id", "embedding")
+    val out = java.nio.file.Files.createTempDirectory("graft_ivfplan_").toString
+    try {
+      // cell 0 holds 0 and 1, cell 1 holds 2; the delta touches cell 0 only
+      IvfStore.write(emb(
+        0L -> Seq(1.0, 0.1), 1L -> Seq(0.9, -0.1), 2L -> Seq(-1.0, 0.1)),
+        s"$out/i", Array(Array(1000L, 0L), Array(-1000L, 0L)), dims = 2)
+      IvfStore.appendVectors(s, s"$out/i", emb(3L -> Seq(0.95, 0.0)))
+      IvfStore.deleteVectors(s, s"$out/i", Seq(1L).toDF("vec_id"))
+      val merged = IvfStore.readMerged(s, s"$out/i")
+      val plan = merged.queryExecution.executedPlan.toString
+      assert(plan.contains("Union"), plan.take(800))
+      assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1,
+        s"the untouched cell must bypass the resolution exchange:\n${plan.take(2000)}")
+      val live = merged.select("vec_id", "cell").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(live == Map(0L -> 0L, 2L -> 1L, 3L -> 0L), live.toString)
     } finally
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }

@@ -809,6 +809,98 @@ class PipelineSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 
+  test("ViewStore max view: a fold that touches no key still enters its foldId in the ledger") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val (kp, vp) = ("p:lang", "p:nchars")
+    val v1 = Seq(("<d1>", kp, "\"en\""), ("<d1>", vp, "\"100\"^^<x:int>"))
+      .toDF("subj", "pred", "obj")
+    val out = Files.createTempDirectory("graft_maxview_empty_").toString
+    try {
+      ViewStore.buildMaxView(v1, kp, vp, s"$out/v")
+      val empty = Seq.empty[(String, String, String, String)].toDF("op", "subj", "pred", "obj")
+      ViewStore.maintainMaxView(spark, s"$out/v", empty, kp, vp,
+        (p: String) => v1.filter(col("pred") === p), foldId = Some("x"))
+      assert(new java.io.File(s"$out/v/_applied/fold-x").exists(),
+        "an empty max-view fold left no ledger entry")
+      assert(ViewStore.readView(spark, s"$out/v").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap == Map("\"en\"" -> 100L))
+    } finally
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+  }
+
+  test("store commit protocols stay within their job budgets; deleteVectors runs no emptiness job") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit}
+    import graft.ops.IvfStore
+    val ts = new java.sql.Timestamp(0L)
+    def jobs(body: => Unit): Int = jobsPerStage(body)._2.values.sum
+    // Jobs of each call on the fixtures below (local[4], 8 shuffle
+    // partitions), measured with the same fixtures when each store still
+    // kept its own copy of the log and rewrite protocols: appendDelta 2,
+    // applyDiff 2, compact 7, mergeDelta 7, appendVectors 5,
+    // deleteVectors 9 (one of them an isEmpty probe before the append),
+    // IvfStore.compact 7, maintainSumView 15, maintainMaxView 12.
+    val budget = Map("appendDelta" -> 2, "applyDiff" -> 2, "compact" -> 7,
+      "mergeDelta" -> 7, "appendVectors" -> 5, "deleteVectors" -> 8,
+      "ivfCompact" -> 7, "maintainSumView" -> 15, "maintainMaxView" -> 12)
+    val dir = Files.createTempDirectory("graft_store_jobs_").toString
+    try {
+      val g = s"$dir/g"
+      Materialize.write(Seq(
+        TripleRow("<s1>", "<p:a>", "\"a\"", "u1", ts),
+        TripleRow("<s2>", "<p:b>", "\"b\"", "u2", ts)).toDS(), g)
+      val counts = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+      counts("appendDelta") = jobs(Materialize.appendDelta(spark, g,
+        Seq(TripleRow("<s3>", "<p:a>", "\"c\"", "u3", ts)).toDS()))
+      counts("applyDiff") = jobs(Materialize.applyDiff(spark, g,
+        Seq(("del", "<s1>", "<p:a>", "\"a\"", "u1", ts))
+          .toDF("op", "subj", "pred", "obj", "src_url", "warc_ts")))
+      counts("compact") = jobs(Materialize.compact(spark, g))
+      counts("mergeDelta") = jobs(Materialize.mergeDelta(spark, g,
+        Seq(TripleRow("<s4>", "<p:b>", "\"d\"", "u4", ts)).toDS()))
+
+      def emb(rows: (Long, Seq[Double])*) = rows.toDF("vec_id", "embedding")
+      val i = s"$dir/i"
+      IvfStore.write(emb(0L -> Seq(1.0, 0.1), 1L -> Seq(0.9, -0.1),
+        2L -> Seq(-1.0, 0.1)), i, Array(Array(1000L, 0L), Array(-1000L, 0L)), dims = 2)
+      counts("appendVectors") = jobs(IvfStore.appendVectors(spark, i, emb(3L -> Seq(0.95, 0.0))))
+      counts("deleteVectors") = jobs(IvfStore.deleteVectors(spark, i, Seq(1L).toDF("vec_id")))
+      counts("ivfCompact") = jobs(IvfStore.compact(spark, i))
+
+      val (kp, vp) = ("p:lang", "p:nchars")
+      def nlit(n: Int) = s""""$n"^^<x:int>"""
+      val v1 = Seq(("<d1>", kp, "\"en\""), ("<d1>", vp, nlit(100)),
+        ("<d2>", kp, "\"fr\""), ("<d2>", vp, nlit(300))).toDF("subj", "pred", "obj")
+      val v2 = Seq(("<d1>", kp, "\"en\""), ("<d1>", vp, nlit(150)),
+        ("<d2>", kp, "\"fr\""), ("<d2>", vp, nlit(300))).toDF("subj", "pred", "obj")
+      val keys = Seq("subj", "pred", "obj")
+      val diff = v2.join(v1, keys, "left_anti").withColumn("op", lit("add"))
+        .unionByName(v1.join(v2, keys, "left_anti").withColumn("op", lit("del")))
+        .localCheckpoint()
+      ViewStore.buildSumView(v1, kp, vp, s"$dir/sum")
+      counts("maintainSumView") = jobs(ViewStore.maintainSumView(spark, s"$dir/sum", diff,
+        kp, vp, (p: String) => v2.filter(col("pred") === p)))
+      ViewStore.buildMaxView(v1, kp, vp, s"$dir/max")
+      counts("maintainMaxView") = jobs(ViewStore.maintainMaxView(spark, s"$dir/max", diff,
+        kp, vp, (p: String) => v2.filter(col("pred") === p)))
+
+      info(s"jobs per call: $counts")
+      val over = counts.filter { case (op, n) => n > budget(op) }
+      assert(over.isEmpty, s"jobs over budget: $over (all: $counts)")
+      // the results stay those of the calls
+      assert(Materialize.read(spark, g).select("subj").as[String].collect().toSet ==
+        Set("<s2>", "<s3>", "<s4>"))
+      assert(IvfStore.readMerged(spark, i).select("vec_id").as[Long].collect().toSet ==
+        Set(0L, 2L, 3L))
+      assert(ViewStore.readView(spark, s"$dir/sum").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap == Map("\"en\"" -> 150L, "\"fr\"" -> 300L))
+      assert(ViewStore.readView(spark, s"$dir/max").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap == Map("\"en\"" -> 150L, "\"fr\"" -> 300L))
+    } finally
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
   test("graphDiff: adds/dels exact, joins keyed on pred_hash, no cartesian") {
     import spark.implicits._
     val ts = new java.sql.Timestamp(0L)
