@@ -448,44 +448,45 @@ object SparkEntry {
 
     // REAL BPE apply: the td10 pre-tokenizer followed by the deterministic
     // merge table — token counts a trainer budgets with, not piece counts
-    "td13_bpe_merges" -> ((s, d) => TextOps.bpeMergeCounts(t(s, d, "documents"))),
+    "td13_bpe_merges" -> ((s, d) => TextOps.bpeApply(t(s, d, "documents"), TextOps.BpeMerges)),
 
-    // BPE tokenizer TRAINING: the iterative corpus-scale pair-count →
-    // arg-max → re-segment loop (Sennrich et al.); the LEARNED merge
-    // table itself is the value-checked result — the oracle unrolls all
-    // 8 iterations in SQL (placeholder-symbol space, like td13's chain)
-    "td22_bpe_train" -> ((s, d) => TextOps.bpeTrainTable(t(s, d, "documents"), BpeTrainK)),
+    // BPE tokenizer TRAINING (Sennrich et al.): one vocabulary collect,
+    // then the local pair-count → arg-max → re-segment loop; the LEARNED
+    // merge table itself is the value-checked result — the oracle unrolls
+    // all 8 iterations in SQL
+    "td22_bpe_train" -> ((s, d) =>
+      TextOps.bpeTrainTable(TextOps.bpeVocab(t(s, d, "documents")), BpeTrainK)),
 
     // train-then-tokenize end-to-end: per-doc token counts under the
-    // table td22 just learned (the learned rules ride the plan as K
-    // codegen'd literal replaces — zero shuffle on the apply side)
+    // table td22 just learned, applied lowest-rank-first by the same
+    // applier as td13 (zero shuffle on the apply side)
     "td23_bpe_train_apply" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      TextOps.bpeApplyLearnedCounts(docs, TextOps.bpeTrain(docs, BpeTrainK))
+      val rules = TextOps.bpeTrain(TextOps.bpeVocab(docs), BpeTrainK)
+      TextOps.bpeApply(docs, rules.map(m => m.lhs -> m.rhs))
+        .select(col("doc_id"), col("n_bpe_tokens"))
     }),
 
-    // BPE past the 256-merge placeholder ceiling: the scalable trainer
-    // (one distributed vocab pass + exact local incremental training) runs
-    // 560 merges over a PLANTED vocabulary derived from the corpus — 560
-    // two-letter words with strictly decreasing corpus-derived frequencies,
-    // so every learned rule has a closed form the oracle states directly
-    // (rank k merges word k's letters with count (600−k)·|documents|)
+    // BPE training at 560 merges over a PLANTED vocabulary derived from the
+    // corpus — 560 two-letter words with strictly decreasing corpus-derived
+    // frequencies, so every learned rule has a closed form the oracle
+    // states directly (rank k merges word k's letters with count
+    // (600−k)·|documents|)
     "td26_bpe_train_512" -> ((s, d) =>
-      TextOps.bpeTrainVocabTable(SparkEntry.plantedBpeVocab(t(s, d, "documents")),
-        numMerges = 560)),
+      TextOps.bpeTrainTable(SparkEntry.plantedBpeVocab(t(s, d, "documents")), 560)),
 
-    // ...and the broadcast merge-table tokenizer APPLIES that 560-rule
-    // table: planted per-doc texts hold words 0..559+(doc_id%90) — ranks
-    // 0..559 merge to one token each, the tail words (no rule) stay two —
-    // so per-doc counts are closed-form: 560 + 2·(doc_id % 90)
+    // ...and the applier APPLIES that 560-rule table: planted per-doc
+    // texts hold words 0..559+(doc_id%90) — ranks 0..559 merge to one
+    // token each, the tail words (no rule) stay two — so per-doc counts
+    // are closed-form: 560 + 2·(doc_id % 90)
     "td27_bpe_apply_512" -> ((s, d) => {
       val docsT = t(s, d, "documents")
-      val rules = TextOps.bpeTrainVocabRules(
-        SparkEntry.plantedBpeVocab(docsT), numMerges = 560)
+      val rules = TextOps.bpeTrain(SparkEntry.plantedBpeVocab(docsT), 560)
       val planted = docsT.select(col("doc_id"),
         expr("array_join(transform(sequence(0, 559 + CAST(doc_id % 90 AS INT)), " +
           "k -> char(97 + k div 26) || char(97 + k % 26)), ' ')").as("text"))
-      TextOps.bpeApplyRules(planted, rules)
+      TextOps.bpeApply(planted, rules.map(m => m.lhs -> m.rhs))
+        .select(col("doc_id"), col("n_bpe_tokens"))
     }),
 
     "td11_rolling_fingerprint" -> ((s, d) => TextOps.rollingFingerprints(t(s, d, "documents"))),
@@ -2170,13 +2171,13 @@ object SparkEntry {
        |$selects""".stripMargin
   }
 
-  /** DuckDB twin of [[TextOps.bpeMergeCounts]], GENERATED from the same
-    * merge table so impl and oracle cannot drift. Each merged symbol is
-    * one private-use placeholder char, so every symbol — original or
-    * merged — is exactly one char: a nested `replace` chain in rank order
-    * IS the BPE apply (the table is well-formed — see
-    * [[TextOps.BpeMerges]]), and `len()` counts tokens. The corpus is
-    * ASCII, so placeholders cannot collide with document text.
+  /** DuckDB twin of [[TextOps.bpeApply]] over [[TextOps.BpeMerges]],
+    * GENERATED from the same merge table so impl and oracle cannot drift.
+    * Each merged symbol is one private-use placeholder char, so every
+    * symbol — original or merged — is exactly one char: a nested
+    * `replace` chain in rank order IS the BPE apply (the table is
+    * well-formed — see [[TextOps.BpeMerges]]), and `len()` counts tokens.
+    * The corpus is ASCII, so placeholders cannot collide with document text.
     */
   private val bpeOracle: String = {
     val repr = scala.collection.mutable.Map.empty[String, String]
@@ -2208,8 +2209,7 @@ object SparkEntry {
     * frequencies f_k = (600−k)·|documents|. Each word IS its own pair, no
     * two words share a pair, and a merged word has no further pairs, so
     * the full 560-rule training run has a closed form — the trainer
-    * demonstrably runs far past the placeholder path's 256-merge ceiling
-    * while the oracle stays one generate_series.
+    * runs hundreds of merges while the oracle stays one generate_series.
     */
   private def plantedBpeVocab(documents: DataFrame): DataFrame =
     documents.select(explode(sequence(lit(0), lit(559))).as("k"))
@@ -2221,9 +2221,9 @@ object SparkEntry {
     """regexp_extract_all(text, '[\p{L}]+|[\p{N}]+|[^\s\p{L}\p{N}]+')"""
 
   /** Shared CTE chain of the BPE-training oracles: the same vocabulary →
-    * pair-count → arg-max → re-segment loop as [[TextOps.bpeTrain]],
+    * pair-count → arg-max → re-segment loop as [[TextOps.bpeTrainLocal]],
     * unrolled `k` times in placeholder-symbol space (merged symbol `i` =
-    * `chr(0xE000 + i)`, exactly the trainer's private-use chars). CTEs are
+    * `chr(0xE000 + i)`, the oracle's own one-char encoding). CTEs are
     * MATERIALIZED: each level is referenced by every later level and
     * DuckDB would otherwise inline the chain exponentially.
     */
@@ -2274,7 +2274,7 @@ object SparkEntry {
        |$branches""".stripMargin
   }
 
-  /** DuckDB twin of [[TextOps.bpeApplyLearnedCounts]] over the table the
+  /** DuckDB twin of [[TextOps.bpeApply]] over the table the
     * training CTEs just learned: per-doc token counts via the same
     * symbol-space replace chain in rank order (the 1-row `b$i` CTEs cross
     * join in as literal columns the list lambda captures).

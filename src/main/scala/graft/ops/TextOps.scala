@@ -79,7 +79,8 @@ object TextOps {
     */
   // explicit separator set in the symbol class (not Java's `\s`, which
   // adds \x0B over the oracles' RE2 class — see [[TokenSepChars]])
-  val BpePattern = "[\\p{L}]+|[\\p{N}]+|[^ \\t\\n\\f\\r\\p{L}\\p{N}]+"
+  private val BpeSymPattern = "[^ \\t\\n\\f\\r\\p{L}\\p{N}]+"
+  val BpePattern = s"[\\p{L}]+|[\\p{N}]+|$BpeSymPattern"
 
   def bpeTokenCounts(documents: DataFrame): DataFrame = {
     val pieces = regexp_extract_all(col("text"), lit(BpePattern), lit(0))
@@ -88,10 +89,14 @@ object TextOps {
       size(pieces).cast("long").as("n_pieces"),
       size(regexp_extract_all(col("text"), lit("[\\p{L}]+"), lit(0))).cast("long").as("n_word_pieces"),
       size(regexp_extract_all(col("text"), lit("[\\p{N}]+"), lit(0))).cast("long").as("n_num_pieces"),
-      size(regexp_extract_all(col("text"), lit("[^\\s\\p{L}\\p{N}]+"), lit(0))).cast("long").as("n_sym_pieces"))
+      size(regexp_extract_all(col("text"), lit(BpeSymPattern), lit(0))).cast("long").as("n_sym_pieces"))
   }
 
-  // ------------------------------------------------------- BPE merge apply
+  // -------------------------------------------------------------------- BPE
+  // One trainer ([[bpeTrainLocal]], reached through [[bpeTrain]]), one
+  // applier ([[bpeApply]], whose only merge loop is [[bpeSymbolCount]]) and
+  // one symbol unit: the Unicode code point, the string unit of DuckDB and
+  // Spark SQL. A merge table is its (lhs, rhs) pairs in rank order.
 
   /** Deterministic BPE merge table, rank order (the artifact a trained
     * tokenizer ships; this one is a fixed English-digram table so the op
@@ -107,48 +112,37 @@ object TextOps {
     "e" -> "r", "o" -> "n", "r" -> "e", "o" -> "u", "s" -> "t", "e" -> "n",
     "a" -> "t", "e" -> "s", "o" -> "r", "l" -> "e")
 
-  private val BpeRanks: Map[(String, String), Int] =
-    BpeMerges.zipWithIndex.toMap
-
   /** Textbook BPE apply over one pre-tokenized piece: start from single
     * code points, repeatedly merge ALL occurrences (left-to-right,
     * non-overlapping) of the LOWEST-rank adjacent pair present, until no
     * pair is mergeable. Returns the final symbol count — the token count
-    * a trainer budgets with.
+    * a trainer budgets with. `ranks` maps (lhs, rhs) to its rank. For a
+    * table [[bpeTrainLocal]] learned (or any well-formed one, like
+    * [[BpeMerges]]) this equals applying each rule once in rank order,
+    * the oracles' replace chain.
     */
-  def bpeSymbolCount(piece: String): Int = {
-    var syms = new scala.collection.mutable.ArrayBuffer[String](piece.length)
-    var ci = 0
-    while (ci < piece.length) {
-      val cp = piece.codePointAt(ci)
-      val n = Character.charCount(cp)
-      syms += piece.substring(ci, ci + n)
-      ci += n
-    }
+  def bpeSymbolCount(piece: String, ranks: Map[(String, String), Int]): Int = {
+    var syms = piece.codePoints().toArray.map(cp => new String(Character.toChars(cp)))
     var done = false
     while (!done && syms.length > 1) {
-      var best = Int.MaxValue
+      var best = Int.MaxValue; var at = -1
       var i = 0
       while (i < syms.length - 1) {
-        val r = BpeRanks.getOrElse((syms(i), syms(i + 1)), Int.MaxValue)
-        if (r < best) best = r
+        val r = ranks.getOrElse((syms(i), syms(i + 1)), Int.MaxValue)
+        if (r < best) { best = r; at = i }
         i += 1
       }
-      if (best == Int.MaxValue) done = true
+      if (at < 0) done = true
       else {
-        val (l, r) = BpeMerges(best)
+        val (l, r) = (syms(at), syms(at + 1))
         val next = new scala.collection.mutable.ArrayBuffer[String](syms.length)
         var j = 0
         while (j < syms.length) {
           if (j < syms.length - 1 && syms(j) == l && syms(j + 1) == r) {
-            next += l + r
-            j += 2
-          } else {
-            next += syms(j)
-            j += 1
-          }
+            next += l + r; j += 2
+          } else { next += syms(j); j += 1 }
         }
-        syms = next
+        syms = next.toArray
       }
     }
     syms.length
@@ -156,16 +150,18 @@ object TextOps {
 
   private val BpePiecePattern = java.util.regex.Pattern.compile(BpePattern)
 
-  /** (doc_id, n_bpe_tokens, n_merges): real BPE token counts — the
-    * pre-tokenizer regex of [[bpeTokenCounts]] followed by the
-    * [[BpeMerges]] merge loop per piece. Per-partition piece memo: corpus
-    * pieces repeat heavily (shared vocabulary), so the merge loop runs
-    * once per distinct piece per partition; bounded reset keeps executor
-    * memory flat on adversarial input.
+  /** (doc_id, n_bpe_tokens, n_merges) under `merges` (rank order): the
+    * pre-tokenizer regex of [[bpeTokenCounts]], then [[bpeSymbolCount]]
+    * per piece; `n_merges` = code points − tokens. Per-partition piece
+    * memo: corpus pieces repeat heavily (shared vocabulary), so the merge
+    * loop runs once per distinct piece per partition; bounded reset keeps
+    * executor memory flat on adversarial input. Zero shuffle; the rank
+    * map rides the task closure.
     */
-  def bpeMergeCounts(documents: DataFrame): DataFrame = {
+  def bpeApply(documents: DataFrame, merges: Seq[(String, String)]): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
+    val ranks = merges.zipWithIndex.toMap
     documents.select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions { it =>
         val memo = new java.util.HashMap[String, Integer](1 << 14)
@@ -178,7 +174,7 @@ object TextOps {
             var c = memo.get(piece)
             if (c == null) {
               if (memo.size >= (1 << 20)) memo.clear()
-              c = Integer.valueOf(bpeSymbolCount(piece))
+              c = Integer.valueOf(bpeSymbolCount(piece, ranks))
               memo.put(piece, c)
             }
             tokens += c.intValue()
@@ -189,227 +185,78 @@ object TextOps {
       }.toDF("doc_id", "n_bpe_tokens", "n_merges")
   }
 
-  // ---------------------------------------------------- BPE tokenizer TRAINING
-
-  /** One learned BPE merge rule. `lhsSym`/`rhsSym`/`ph` are in SYMBOL space
-    * (each earlier merged symbol is one private-use char, `ph` = the fresh
-    * char this rule introduces — the same 0xE000+rank placeholders the
-    * DuckDB oracle uses); `lhs`/`rhs` are the decoded original-character
-    * strings a tokenizer artifact ships; `n` is the corpus pair count the
-    * rule won with.
+  /** One learned merge: decoded symbol strings (the artifact shape real
+    * tokenizers ship) and the corpus pair count the rule won with.
     */
-  final case class LearnedMerge(
-      rank: Int, lhsSym: String, rhsSym: String,
-      lhs: String, rhs: String, n: Long, ph: Char)
+  final case class BpeMergeRule(rank: Int, lhs: String, rhs: String, n: Long)
 
-  /** Distributed BPE tokenizer TRAINING — the iterative corpus-scale loop
-    * every real tokenizer build runs (Sennrich et al., "Neural Machine
-    * Translation of Rare Words with Subword Units"): count adjacent symbol
-    * pairs over the corpus, merge the arg-max pair, re-segment, repeat.
-    *
-    * Scale shape: the corpus is touched ONCE — the initial pre-tokenized
-    * piece count (map-side-combined groupBy) collapses it to a (word,
-    * freq) VOCABULARY table, and every subsequent iteration is
-    * vocabulary-bounded: pair extraction explodes each distinct word into
-    * its ≤ len−1 adjacent pairs (weighted by freq), one map-side-combined
-    * aggregate shuffles |distinct pairs| rows, and the driver collects
-    * exactly ONE row (the arg-max, deterministic tiebreak count DESC then
-    * pair ASC). Re-segmentation is a single codegen'd `replace` over the
-    * vocabulary (merged symbols are fresh private-use chars, so every
-    * symbol — original or merged — is exactly one char and adjacency stays
-    * a 2-char substring). Each round's vocabulary threads `checkpoint`
-    * ([[graft.pipeline.CheckpointPolicy]]) like every other iterative loop
-    * in the engine, so lineage stays O(1) and a cluster run survives
-    * executor loss with `Reliable(dir)`.
-    *
-    * Applying rules once each in ascending rank order equals the textbook
-    * lowest-rank-first loop for ANY table this trainer emits: a merge only
-    * creates longer fresh symbols, so an already-processed pair's
-    * adjacency can never reappear — the well-formedness argument of
-    * [[BpeMerges]], now guaranteed by construction rather than by
-    * inspection.
-    *
-    * Stops early (returns < `numMerges` rules) only if the vocabulary runs
-    * out of adjacent pairs.
+  /** First merged-symbol id of [[bpeTrainLocal]]: above every code point,
+    * so a corpus symbol can never read as a merge however many merges
+    * train.
     */
-  /** The merged-symbol placeholder range ([[bpeTrain]] allocates
-    * U+E000+rank). Corpus text already containing these private-use chars
-    * would collide with the placeholders — vocabulary words would carry
-    * chars `decode()` misreads as expansions and the apply-side replace
-    * chain could merge across them — so BOTH the trainer's vocabulary
-    * construction and [[bpeApplyLearnedCounts]]'s input strip the range
-    * (rare-to-absent in real text; a PUA char contributes zero tokens).
-    * The array-symbol path ([[bpeTrainScalable]]) has no placeholder space
-    * and strips only to keep the two trainers' tiebreak order identical.
-    */
-  val PuaGuardClass = "[-]"
+  val MergeBase: Int = Character.MAX_CODE_POINT + 1
 
-  def bpeTrain(
-      documents: DataFrame,
-      numMerges: Int = 8,
-      checkpoint: graft.pipeline.CheckpointPolicy = graft.pipeline.CheckpointPolicy.Local)
-      : Seq[LearnedMerge] = {
-    require(numMerges >= 1 && numMerges <= 256, s"numMerges=$numMerges out of range")
-    var words = checkpoint.truncate(
-      documents
-        .select(explode(regexp_extract_all(col("text"), lit(BpePattern), lit(0))).as("w"))
-        .select(regexp_replace(col("w"), lit(PuaGuardClass), lit("")).as("w"))
-        .filter(length(col("w")) >= 1)
-        .groupBy(col("w")).agg(count(lit(1)).as("f")))
-    val learned = Vector.newBuilder[LearnedMerge]
-    val expansions = new scala.collection.mutable.ArrayBuffer[String](numMerges)
-    def decode(c: Char): String =
-      if (c >= 0xE000 && c < 0xE000 + expansions.length) expansions(c - 0xE000)
-      else c.toString
-    var rank = 0
-    var exhausted = false
-    while (rank < numMerges && !exhausted) {
-      val top = words
-        .filter(length(col("w")) >= 2)
-        .select(
-          explode(transform(sequence(lit(1), length(col("w")) - 1),
-            i => col("w").substr(i, lit(2)))).as("pair"),
-          col("f"))
-        .groupBy(col("pair")).agg(sum(col("f")).as("n"))
-        .orderBy(col("n").desc, col("pair").asc)
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val pair = top(0).getString(0)
-        val n = top(0).getLong(1)
-        val ph = (0xE000 + rank).toChar
-        val (l, r) = (pair.charAt(0), pair.charAt(1))
-        val (lhs, rhs) = (decode(l), decode(r))
-        expansions += lhs + rhs
-        learned += LearnedMerge(rank, l.toString, r.toString, lhs, rhs, n, ph)
-        words = checkpoint.truncate(
-          words.withColumn("w", replace(col("w"), lit(pair), lit(ph.toString))))
-        rank += 1
-      }
-    }
-    learned.result()
-  }
-
-  /** The learned merge table as a DataFrame — (rank, lhs, rhs, n), decoded
-    * strings — the artifact a trained tokenizer ships (td22's surface).
+  /** The vocabulary cut of [[bpeTrain]]: the most frequent words it
+    * trains over. The collect is bounded by this constant, never by data.
     */
-  def bpeTrainTable(documents: DataFrame, numMerges: Int = 8): DataFrame = {
-    val spark = documents.sparkSession
+  val MaxVocab: Int = 1 << 20
+
+  /** Corpus → lazy (w, f) vocabulary: the [[BpePattern]] pieces, counted
+    * by one map-side-combined aggregate.
+    */
+  def bpeVocab(documents: DataFrame): DataFrame =
+    documents
+      .select(explode(regexp_extract_all(col("text"), lit(BpePattern), lit(0))).as("w"))
+      .groupBy(col("w")).agg(count(lit(1)).as("f"))
+
+  /** BPE tokenizer TRAINING (Sennrich et al., "Neural Machine Translation
+    * of Rare Words with Subword Units") from a (w, f) vocabulary table:
+    * the [[MaxVocab]] most frequent words (count DESC, word ASC — a
+    * deterministic cut) are collected ONCE and trained locally by
+    * [[bpeTrainLocal]]. The corpus is touched by one job; merges cost no
+    * Spark work, however many are asked for.
+    */
+  def bpeTrain(vocab: DataFrame, numMerges: Int): Seq[BpeMergeRule] =
+    bpeTrainLocal(
+      vocab.select(col("w").cast("string"), col("f").cast("long"))
+        .orderBy(col("f").desc, col("w").asc).limit(MaxVocab)
+        .collect().map(r => (r.getString(0), r.getLong(1))),
+      numMerges)
+
+  /** [[bpeTrain]] as a (rank, lhs, rhs, n) DataFrame (td22's surface). */
+  def bpeTrainTable(vocab: DataFrame, numMerges: Int): DataFrame = {
+    val spark = vocab.sparkSession
     import spark.implicits._
-    bpeTrain(documents, numMerges)
+    bpeTrain(vocab, numMerges)
       .map(m => (m.rank.toLong, m.lhs, m.rhs, m.n))
       .toDF("rank", "lhs", "rhs", "n")
   }
 
-  /** Apply a LEARNED merge table: per-document BPE token counts under the
-    * rules [[bpeTrain]] emitted — train-then-tokenize end-to-end. Pure
-    * codegen'd built-ins: the symbol-space replace chain in rank order IS
-    * the BPE apply (see [[bpeTrain]]'s well-formedness note), so each
-    * piece's token count is the length of its fully-merged symbol string;
-    * zero shuffle, zero UDF, the merge table rides the plan as K literal
-    * `replace` calls.
-    */
-  def bpeApplyLearnedCounts(documents: DataFrame, merges: Seq[LearnedMerge]): DataFrame = {
-    // PUA guard mirrors the trainer's exactly: pieces are extracted from
-    // the ORIGINAL text (a PUA char splits runs the same way in both) and
-    // each piece sheds placeholder-range chars BEFORE the replace chain —
-    // they'd otherwise read as merged symbols. The per-element strip is a
-    // cheap scan of a short piece, not a re-run of the row-level regex, so
-    // the generate-filter inlining invariant is untouched.
-    val pieces = regexp_extract_all(col("text"), lit(BpePattern), lit(0))
-    val chain = (w: Column) =>
-      merges.foldLeft(regexp_replace(w, lit(PuaGuardClass), lit("")))((acc, m) =>
-        replace(acc, lit(m.lhsSym + m.rhsSym), lit(m.ph.toString)))
-    documents.select(
-      col("doc_id"),
-      coalesce(aggregate(transform(pieces, w => length(chain(w)).cast("long")),
-        lit(0L), (a, x) => a + x), lit(0L)).as("n_bpe_tokens"))
-  }
-
-  // ----------------------------------- scalable BPE (past the 256-merge
-  // placeholder ceiling): the industrial architecture — ONE distributed
-  // pass collapses the corpus to a frequency-cut (word, freq) vocabulary
-  // (the only data-sized object in the job), then an exact local trainer
-  // with incremental pair-count maintenance runs unlimited merges over it
-  // (HuggingFace tokenizers / SentencePiece train exactly this way: the
-  // corpus is petabytes, the distinct-pretokens table after a frequency
-  // cutoff is megabytes). [[bpeTrain]]'s job-per-merge loop costs one
-  // shuffle + collect PER RULE — fine for 8, absurd for 32k; here merges
-  // are free after the single corpus scan. Symbols are STRINGS (no
-  // private-use placeholder space), so vocabulary size is unbounded and
-  // the PUA collision class is structurally gone. Apply is a broadcast
-  // merge-table tokenizer in `mapPartitions` (the [[bpeMergeCounts]]
-  // per-partition memo discipline).
-
-  /** One learned merge of the array-symbol trainer: plain decoded symbol
-    * strings — the artifact shape real tokenizers ship.
-    */
-  final case class BpeMergeRule(rank: Int, lhs: String, rhs: String, n: Long)
-
-  /** First merge-symbol id of [[bpeTrainLocal]] — strictly above 0xFFFF so
-    * the merge-id space is disjoint from every UTF-16 code unit a corpus
-    * word can contain: a real char can never be misread as an expansion
-    * index however many merges train (the collision [[bpeTrain]] avoids by
-    * capping at 256 merges + stripping U+E000..E0FF).
-    */
-  val MergeBase = 0x10000
-
-  /** The distributed half: corpus → (word, freq) vocabulary, frequency-cut
-    * to `maxVocab` rows (count DESC, word ASC — deterministic cut). The
-    * collect is bounded by the PARAMETER, never by data; at 100 TB the
-    * vocabulary after this cut is the same few-hundred-MB table a
-    * single-node trainer would build, delivered by one map-side-combined
-    * aggregate instead of a single-node corpus scan.
-    */
-  def bpeVocab(documents: DataFrame, maxVocab: Int): Array[(String, Long)] = {
-    require(maxVocab >= 1 && maxVocab <= (1 << 22), s"maxVocab=$maxVocab out of range")
-    documents
-      .select(explode(regexp_extract_all(col("text"), lit(BpePattern), lit(0))).as("w"))
-      .select(regexp_replace(col("w"), lit(PuaGuardClass), lit("")).as("w"))
-      .filter(length(col("w")) >= 1)
-      .groupBy(col("w")).agg(count(lit(1)).as("f"))
-      .orderBy(col("f").desc, col("w").asc).limit(maxVocab)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-  }
-
-  /** The local half: exact textbook BPE training over a weighted
-    * vocabulary with INCREMENTAL pair-count maintenance — each merge
-    * touches only the words containing the winning pair (inverted index),
-    * so a full train is O(Σ touched-word lengths), not O(V × merges).
+  /** Exact textbook BPE training over a weighted vocabulary with
+    * INCREMENTAL pair-count maintenance — each merge touches only the
+    * words containing the winning pair (inverted index), so a full train
+    * is O(Σ touched-word lengths), not O(V × merges).
     *
-    * Semantics match [[bpeTrain]] rule-for-rule on any corpus whose chars
-    * are below U+E000 (OpsSpec cross-validates the two implementations):
-    * symbols start as UTF-16 code units, every adjacent POSITION counts
-    * (overlapping), re-segmentation merges left-to-right non-overlapping,
-    * and the argmax tiebreak is count DESC then pair ASC — original chars
-    * order as themselves and merge #r orders after every original char in
-    * rank order, which below U+E000 is exactly [[bpeTrain]]'s 2-char
-    * string comparison (its placeholders sit at U+E000+r, above the
-    * corpus alphabet). Chars in (U+E0FF, U+FFFF] — upper private-use,
-    * CJK-compat, fullwidth forms — are REAL corpus symbols here: merge
-    * ids live at 0x10000+rank, ABOVE every UTF-16 unit, so no corpus
-    * char can ever read as an expansion index or collide with a merge
-    * (the structural fix for the placeholder-space trainers' collision
-    * class); only count-tied pairs involving such a char may order
-    * differently vs [[bpeTrain]], whose own placeholders interleave with
-    * that range.
+    * Symbols start as code points; merge r is symbol [[MergeBase]] + r.
+    * Every adjacent POSITION counts (overlapping), re-segmentation merges
+    * left-to-right non-overlapping, and the arg-max tiebreak is count
+    * DESC then (l, r) ASC: code points order as themselves (UTF-8 byte
+    * order, as in DuckDB and Spark) and merge r orders after every code
+    * point, in rank order. Stops early (returns < `numMerges` rules) only
+    * when no adjacent pair is left. A merge only creates a fresh symbol,
+    * so a processed pair never reappears: applying the rules once each in
+    * rank order equals the lowest-rank-first loop of [[bpeSymbolCount]].
     */
   def bpeTrainLocal(vocab: Array[(String, Long)], numMerges: Int): Seq[BpeMergeRule] = {
     require(numMerges >= 1, s"numMerges=$numMerges out of range")
     import scala.collection.mutable
-    // symbol ids: original UTF-16 unit = its char value; merge r = MergeBase+r
-    // (above 0xFFFF — disjoint from every possible corpus unit by construction)
     val expans = mutable.ArrayBuffer.empty[String] // merge r → decoded string
     def decode(id: Int): String =
-      if (id >= MergeBase) expans(id - MergeBase) else id.toChar.toString
+      if (id >= MergeBase) expans(id - MergeBase) else new String(Character.toChars(id))
     def pk(l: Int, r: Int): Long = (l.toLong << 32) | (r.toLong & 0xffffffffL)
 
-    val words = mutable.ArrayBuffer.empty[Array[Int]]
-    val freqs = mutable.ArrayBuffer.empty[Long]
-    vocab.foreach { case (w0, f) =>
-      val w = w0.filterNot(c => c >= 0xE000 && c <= 0xE0FF) // [[PuaGuardClass]]
-      if (w.nonEmpty) { words += w.map(_.toInt).toArray; freqs += f }
-    }
+    val words = vocab.map(_._1.codePoints().toArray)
+    val freqs = vocab.map(_._2)
     val counts = mutable.LongMap.empty[Long]
     val where = mutable.LongMap.empty[mutable.BitSet] // pair → word indices
     def addWord(wi: Int, sign: Long): Unit = {
@@ -433,7 +280,7 @@ object TextOps {
       // the scan cannot leak into the result
       var bestK = -1L; var bestN = 0L
       counts.foreachEntry { (k, n) =>
-        if (n > bestN || (n == bestN && (bestK < 0 || java.lang.Long.compareUnsigned(k, bestK) < 0))) {
+        if (n > bestN || (n == bestN && (bestK < 0 || k < bestK))) {
           bestK = k; bestN = n
         }
       }
@@ -460,95 +307,6 @@ object TextOps {
       }
     }
     learned.result()
-  }
-
-  /** Train-at-scale entry point: distributed vocabulary, local exact
-    * trainer, unlimited merges.
-    */
-  def bpeTrainScalable(
-      documents: DataFrame, numMerges: Int, maxVocab: Int = 1 << 20): Seq[BpeMergeRule] =
-    bpeTrainLocal(bpeVocab(documents, maxVocab), numMerges)
-
-  /** [[bpeTrainScalable]] from an explicit (w, f) vocabulary table —
-    * the hook for pipelines that already materialized word counts.
-    */
-  def bpeTrainVocabRules(
-      vocab: DataFrame, numMerges: Int, maxVocab: Int = 1 << 20): Seq[BpeMergeRule] =
-    bpeTrainLocal(
-      vocab.select(col("w").cast("string"), col("f").cast("long"))
-        .orderBy(col("f").desc, col("w").asc).limit(maxVocab)
-        .collect().map(r => (r.getString(0), r.getLong(1))),
-      numMerges)
-
-  /** [[bpeTrainVocabRules]] as a (rank, lhs, rhs, n) DataFrame. */
-  def bpeTrainVocabTable(
-      vocab: DataFrame, numMerges: Int, maxVocab: Int = 1 << 20): DataFrame = {
-    val spark = vocab.sparkSession
-    import spark.implicits._
-    bpeTrainVocabRules(vocab, numMerges, maxVocab)
-      .map(m => (m.rank.toLong, m.lhs, m.rhs, m.n))
-      .toDF("rank", "lhs", "rhs", "n")
-  }
-
-  /** Apply a learned merge table of ANY size: the broadcast rank map rides
-    * to each partition, every piece runs the textbook lowest-rank-first
-    * loop over string symbols, counts memoized per distinct piece (the
-    * [[bpeMergeCounts]] memo discipline — corpus pieces repeat heavily).
-    * Zero shuffle; the merge table is the only exchanged object.
-    */
-  def bpeApplyRules(documents: DataFrame, rules: Seq[BpeMergeRule]): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val ranksBc = spark.sparkContext.broadcast(
-      rules.map(m => (m.lhs, m.rhs) -> m.rank).toMap)
-    documents.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        val ranks = ranksBc.value
-        val memo = new java.util.HashMap[String, Integer](1 << 14)
-        def count(piece0: String): Int = {
-          val piece = piece0.filterNot(c => c >= 0xE000 && c <= 0xE0FF)
-          if (piece.isEmpty) return 0
-          var syms = piece.map(_.toString).toArray
-          var done = false
-          while (!done && syms.length > 1) {
-            var best = Int.MaxValue; var at = -1
-            var i = 0
-            while (i < syms.length - 1) {
-              val r = ranks.getOrElse((syms(i), syms(i + 1)), Int.MaxValue)
-              if (r < best) { best = r; at = i }
-              i += 1
-            }
-            if (at < 0) done = true
-            else {
-              val (l, r) = (syms(at), syms(at + 1))
-              val next = scala.collection.mutable.ArrayBuffer.empty[String]
-              var j = 0
-              while (j < syms.length) {
-                if (j < syms.length - 1 && syms(j) == l && syms(j + 1) == r) {
-                  next += l + r; j += 2
-                } else { next += syms(j); j += 1 }
-              }
-              syms = next.toArray
-            }
-          }
-          syms.length
-        }
-        it.map { case (id, text) =>
-          val m = BpePiecePattern.matcher(text)
-          var tokens = 0L
-          while (m.find()) {
-            val piece = m.group()
-            var c = memo.get(piece)
-            if (c == null) {
-              if (memo.size >= (1 << 20)) memo.clear()
-              c = Integer.valueOf(count(piece))
-              memo.put(piece, c)
-            }
-            tokens += c.intValue()
-          }
-          (id, tokens)
-        }
-      }.toDF("doc_id", "n_bpe_tokens")
   }
 
   // ------------------------------------------- PMI token co-occurrence

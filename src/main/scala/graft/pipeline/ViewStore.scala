@@ -205,8 +205,8 @@ object ViewStore {
     val dVsubj = diff.filter(col("pred") === valuePred).select(col("subj")).distinct()
     val kNew = postTriples(keyPred).select(col("subj"), col("obj").as("key"))
     val dVkeys = kNew.join(broadcast(dVsubj), Seq("subj"), "left_semi").select(col("key"))
-    val affected = checkpoint.truncate(
-      dKkeys.unionByName(dVkeys).distinct()) // ∝ diff; consumed twice
+    val affected = checkpoint.truncate( // ∝ diff; consumed three times
+      withKeyHash(dKkeys.unionByName(dVkeys).distinct()))
     // recompute ONLY the affected keys from the post-state
     val subjAffected = kNew.join(broadcast(affected), Seq("key"), "left_semi")
     val lex = regexp_extract(col("obj"), "^\"(-?\\d+)\"", 1)
@@ -217,8 +217,7 @@ object ViewStore {
       .groupBy(col("key")).agg(max(col("v")).as("n"))
     // fold: affected keys REPLACE their view rows (or vanish if their
     // group emptied); co-located unaffected keys carry through
-    val d = checkpoint.truncate(withKeyHash(affected))
-    TableLog.rewrite(out, "key_hash", d, checkpoint) { touched =>
+    TableLog.rewrite(out, "key_hash", affected, checkpoint) { touched =>
       readExisting(spark, out, touched)
         .join(broadcast(affected), Seq("key"), "left_anti")
         .unionByName(withKeyHash(recomputed))

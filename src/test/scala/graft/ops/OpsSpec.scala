@@ -52,106 +52,173 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("BPE merge apply: hand-computed token counts, lowest-rank-first order") {
+    val ranks = TextOps.BpeMerges.zipWithIndex.toMap
+    def count(piece: String) = TextOps.bpeSymbolCount(piece, ranks)
     // "the": (t,h)->th then (th,e)->the — one token
-    assert(TextOps.bpeSymbolCount("the") == 1)
+    assert(count("the") == 1)
     // "thin": th + in, no (th,in) rule — two tokens
-    assert(TextOps.bpeSymbolCount("thin") == 2)
+    assert(count("thin") == 2)
     // "standing": (i,n) fires before (a,n) and (s,t) (rank order), giving
     // st + and + ing
-    assert(TextOps.bpeSymbolCount("standing") == 3)
+    assert(count("standing") == 3)
     // "erere": (e,r) merges all occurrences left-to-right -> er, er, e;
     // the later (r,e) rule finds no bare r
-    assert(TextOps.bpeSymbolCount("erere") == 3)
+    assert(count("erere") == 3)
     // no applicable rules: one token per code point
-    assert(TextOps.bpeSymbolCount("xyz") == 3)
-    assert(TextOps.bpeSymbolCount("a") == 1)
+    assert(count("xyz") == 3)
+    assert(count("a") == 1)
+    assert(count("😀😀") == 2)
 
-    assert(TextOps.bpeSymbolCount("cat") == 2)   // c + at
-    assert(TextOps.bpeSymbolCount("there") == 2) // the + re
+    assert(count("cat") == 2)   // c + at
+    assert(count("there") == 2) // the + re
 
     val d = docs((1L, "the thin cat standing there", "en", "s", 0L))
-    val row = TextOps.bpeMergeCounts(d).collect()(0)
+    val row = TextOps.bpeApply(d, TextOps.BpeMerges).collect()(0)
     // the=1 thin=2 cat=2 standing=3 there=2 ; piece chars = 23
     assert(row.getLong(1) == 10L, s"tokens=${row.getLong(1)}")
     assert(row.getLong(2) == (23L - 10L), s"merges=${row.getLong(2)}")
   }
 
+  private def bpeTrainDocs(d: org.apache.spark.sql.DataFrame, numMerges: Int) =
+    TextOps.bpeTrain(TextOps.bpeVocab(d), numMerges)
+
+  private def bpeApplied(d: org.apache.spark.sql.DataFrame, rules: Seq[TextOps.BpeMergeRule]) =
+    TextOps.bpeApply(d, rules.map(m => m.lhs -> m.rhs)).collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+
   test("BPE training: learns hand-computed merges, decodes symbols, stops when dry") {
     // vocab: aa×3 ab×2 → rank0 (a,a) n=3; then ab×2 → rank1 (a,b) n=2;
     // then every word is one symbol → exhausted (2 of the 4 asked-for rules)
     val d1 = docs((1L, "aa ab aa ab aa", "en", "s", 0L))
-    val m1 = TextOps.bpeTrain(d1, numMerges = 4)
+    val m1 = bpeTrainDocs(d1, numMerges = 4)
     assert(m1.map(m => (m.rank, m.lhs, m.rhs, m.n)) ==
       Seq((0, "a", "a", 3L), (1, "a", "b", 2L)))
 
     // multi-char decode: "abab" → rank0 (a,b) n=2 (overlap-free count),
-    // word becomes ph0 ph0 → rank1 merges (ab, ab) — lhs/rhs decode to "ab"
+    // word becomes m0 m0 → rank1 merges (ab, ab) — lhs/rhs decode to "ab"
     val d2 = docs((1L, "abab", "en", "s", 0L))
-    val m2 = TextOps.bpeTrain(d2, numMerges = 2)
+    val m2 = bpeTrainDocs(d2, numMerges = 2)
     assert(m2.map(m => (m.rank, m.lhs, m.rhs, m.n)) ==
       Seq((0, "a", "b", 2L), (1, "ab", "ab", 1L)))
 
     // deterministic tiebreak: ab and ba both count 1 → lexicographic min wins
     val d3 = docs((1L, "ab ba", "en", "s", 0L))
-    assert(TextOps.bpeTrain(d3, numMerges = 1).head.lhs == "a")
+    assert(bpeTrainDocs(d3, numMerges = 1).head.lhs == "a")
 
     // applying the learned table reproduces the training segmentation:
     // abab → 1 token, aa → 2 (no (a,a) rule learned from d2)
-    val applied = TextOps.bpeApplyLearnedCounts(
-      docs((1L, "abab aa", "en", "s", 0L)), m2).collect()(0)
-    assert(applied.getLong(1) == 3L, s"tokens=${applied.getLong(1)}")
+    assert(bpeApplied(docs((1L, "abab aa", "en", "s", 0L)), m2) == Map(1L -> (3L, 3L)))
   }
 
-  test("BPE PUA guard: planted placeholder-range chars cannot corrupt train or apply") {
-    // a standalone U+E000 token and one embedded in a symbol run: the
-    // learned table must be IDENTICAL to the clean corpus's, and apply
-    // counts must not change (PUA chars contribute zero tokens)
-    val clean = docs((1L, "aa ab aa ab aa !? x", "en", "s", 0L))
-    val planted = docs((1L, "aa ab  aa ab aa !? x", "en", "s", 0L))
-    val mClean = TextOps.bpeTrain(clean, numMerges = 4)
-    val mPlanted = TextOps.bpeTrain(planted, numMerges = 4)
-    assert(mClean.map(m => (m.rank, m.lhs, m.rhs, m.n)) ==
-      mPlanted.map(m => (m.rank, m.lhs, m.rhs, m.n)))
-    assert(mPlanted.forall(m =>
-      !(m.lhs + m.rhs).exists(c => c >= 0xE000 && c <= 0xE0FF)),
-      "a learned rule leaked a placeholder-range char")
-    val aClean = TextOps.bpeApplyLearnedCounts(clean, mClean).collect()(0).getLong(1)
-    val aPlanted = TextOps.bpeApplyLearnedCounts(planted, mClean).collect()(0).getLong(1)
-    assert(aClean == aPlanted, s"$aClean vs $aPlanted")
-    // same invariants on the array-symbol path
-    val sClean = TextOps.bpeTrainScalable(clean, numMerges = 4)
-    val sPlanted = TextOps.bpeTrainScalable(planted, numMerges = 4)
-    assert(sClean == sPlanted)
-    assert(TextOps.bpeApplyRules(planted, sClean).collect()(0).getLong(1) == aClean)
+  test("BPE symbols are code points: a non-BMP corpus learns the td22 oracle's table") {
+    // 😀 (U+1F600) and 𠀀 (U+20000) are one symbol each, not two UTF-16
+    // halves; the tie at n=3 goes to (a,b), lower in code-point (UTF-8
+    // byte) order than (😀,😀). The expected rules are what the td22
+    // oracle SQL computes on this corpus.
+    val d = docs((1L, "😀😀😀 😀😀 𠀀x 𠀀x ab ab ab", "en", "s", 0L))
+    val rules = bpeTrainDocs(d, numMerges = 4)
+    assert(rules.map(m => (m.lhs, m.rhs, m.n)) ==
+      Seq(("a", "b", 3L), ("😀", "😀", 3L), ("𠀀", "x", 2L), ("😀😀", "😀", 1L)),
+      rules.toString)
+    // every piece applies to one token: 7 tokens from 15 code points
+    assert(bpeApplied(d, rules) == Map(1L -> (7L, 8L)))
   }
 
-  test("scalable BPE cross-validates the placeholder trainer rule-for-rule") {
-    // two independent implementations (distributed job-per-merge placeholder
-    // trainer vs vocab-collapse + local incremental trainer) must learn the
-    // SAME table on the same corpus — including multi-char re-merges,
-    // overlap counting, and the count-then-pair-ASC tiebreak
-    val d = docs(
-      (1L, "abab the thin stand standing in in in going gone", "en", "s", 0L),
-      (2L, "aa ab ba erere there the the cat cattle !? !? !!", "en", "s", 0L),
-      (3L, "zzz zz z mississippi banana bandana and sand standing", "en", "s", 0L))
-    val k = 12
-    val legacy = TextOps.bpeTrain(d, numMerges = k)
-      .map(m => (m.rank, m.lhs, m.rhs, m.n))
-    val scalable = TextOps.bpeTrainScalable(d, numMerges = k)
-      .map(m => (m.rank, m.lhs, m.rhs, m.n))
-    assert(legacy == scalable, s"\nlegacy:   $legacy\nscalable: $scalable")
-    // and the two apply paths agree document-for-document
-    val viaLegacy = TextOps.bpeApplyLearnedCounts(d, TextOps.bpeTrain(d, numMerges = k))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaRules = TextOps.bpeApplyRules(d, TextOps.bpeTrainScalable(d, numMerges = k))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaLegacy == viaRules)
+  test("BPE training runs one vocabulary collect: at most 2 Spark jobs") {
+    // the job-per-merge Spark loop this replaced ran 14 jobs for these 4
+    // merges (one vocabulary checkpoint, then an arg-max collect and a
+    // re-segment checkpoint per merge; local[4], 8 shuffle partitions)
+    val d = docs((1L, "😀😀😀 😀😀 𠀀x 𠀀x ab ab ab", "en", "s", 0L))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      assert(bpeTrainDocs(d, numMerges = 4).length == 4)
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get >= 1 && jobs.get <= 2, s"jobs=${jobs.get}")
+  }
+
+  test("BPE: private-use and fullwidth chars train and apply as ordinary symbols") {
+    // U+E000 (the old merge-placeholder range), U+F8FF (top of the BMP
+    // private-use area) and U+FF01 (fullwidth '!') are symbol-class chars
+    // like '!', so each run below is one symbol piece.
+    // The (!,U+E000) vs (a,b) tie at n=1 goes to the lower code point.
+    val d = docs((1L,
+      "\uE000\uE000 \uE000\uE000 \uE000\uE000 \uF8FF\uFF01 \uF8FF\uFF01 ab !\uE000",
+      "en", "s", 0L))
+    val rules = bpeTrainDocs(d, numMerges = 8)
+    assert(rules.map(m => (m.lhs, m.rhs, m.n)) == Seq(
+      ("\uE000", "\uE000", 3L), ("\uF8FF", "\uFF01", 2L), ("!", "\uE000", 1L),
+      ("a", "b", 1L)),
+      rules.toString)
+    // every piece merges to one token: 7 tokens from 14 code points
+    assert(bpeApplied(d, rules) == Map(1L -> (7L, 7L)))
+  }
+
+  test("BPE trainer equals a naive full-recount trainer (ScalaCheck, seeded)") {
+    import org.scalacheck.{Gen, Prop, Test}
+    // the textbook loop: recount every adjacent pair of every word each
+    // round; symbols are code points, merge r is MergeBase + r; arg-max by
+    // count DESC then (l, r) ASC; merge left-to-right, non-overlapping
+    def naive(vocab: Seq[(String, Long)], k: Int): Seq[(Int, String, String, Long)] = {
+      var words = vocab.map { case (w, f) => (w.codePoints().toArray.toVector, f) }
+      val expans = scala.collection.mutable.ArrayBuffer.empty[String]
+      def decode(s: Int) =
+        if (s >= TextOps.MergeBase) expans(s - TextOps.MergeBase)
+        else new String(Character.toChars(s))
+      val out = Vector.newBuilder[(Int, String, String, Long)]
+      var rank = 0
+      var dry = false
+      while (rank < k && !dry) {
+        val counts = words.flatMap { case (w, f) => w.zip(w.drop(1)).map(_ -> f) }
+          .groupMapReduce(_._1)(_._2)(_ + _)
+        if (counts.isEmpty) dry = true
+        else {
+          val ((l, r), n) = counts.toSeq.minBy { case ((l, r), n) => (-n, l, r) }
+          out += ((rank, decode(l), decode(r), n))
+          expans += decode(l) + decode(r)
+          val m = TextOps.MergeBase + rank
+          words = words.map { case (w, f) =>
+            val b = Vector.newBuilder[Int]
+            var j = 0
+            while (j < w.length) {
+              if (j < w.length - 1 && w(j) == l && w(j + 1) == r) { b += m; j += 2 }
+              else { b += w(j); j += 1 }
+            }
+            (b.result(), f)
+          }
+          rank += 1
+        }
+      }
+      out.result()
+    }
+    val alphabet = Seq("a", "b", "c", "\uE000", "\uFF01", "\uD83D\uDE00")
+    val word = Gen.choose(1, 8).flatMap(n => Gen.listOfN(n, Gen.oneOf(alphabet)).map(_.mkString))
+    val vocab = Gen.choose(1, 12).flatMap(n =>
+      Gen.listOfN(n, Gen.zip(word, Gen.choose(1L, 5L)))).map(_.toMap.toSeq)
+    // no shrinking: the default list shrinker leaves the generator's domain
+    val prop = Prop.forAllNoShrink(vocab, Gen.choose(1, 20)) { (v, k) =>
+      TextOps.bpeTrainLocal(v.toArray, k).map(m => (m.rank, m.lhs, m.rhs, m.n)) == naive(v, k)
+    }
+    val params = Test.Parameters.default
+      .withMinSuccessfulTests(300)
+      .withInitialSeed(org.scalacheck.rng.Seed(20161008L))
+    val t0 = System.nanoTime()
+    val res = Test.check(params, prop)
+    info(f"300 seeded cases in ${(System.nanoTime() - t0) / 1e6}%.0f ms")
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
 
   test("scalable BPE trains past the 256-merge placeholder ceiling") {
     // planted vocabulary: 300 distinct 2-letter words with strictly
     // decreasing frequency → merge r must be word r's pair with its exact
-    // count; rank 299 > the placeholder path's ceiling
+    // count; no merge cap, so ranks run past 256 to 299
     val vocab = Array.tabulate(300)(kk =>
       ("" + ('a' + kk / 26).toChar + ('a' + kk % 26).toChar, (1000 - kk).toLong))
     val rules = TextOps.bpeTrainLocal(vocab, numMerges = 1000)
@@ -167,21 +234,6 @@ class OpsSpec extends AnyFunSuite {
     val chain = TextOps.bpeTrainLocal(Array(("aaaa", 4L)), numMerges = 10)
     assert(chain.map(m => (m.lhs, m.rhs, m.n)) ==
       Seq(("a", "a", 12L), ("aa", "aa", 4L)))
-  }
-
-  test("scalable BPE: chars above the stripped window are real symbols, never expansion indexes") {
-    // U+F8FF (upper private use — survives the [E000, E0FF] guard strip)
-    // and U+FF01 (fullwidth '!') must train as ordinary corpus chars:
-    // merge ids live at MergeBase = 0x10000, above every UTF-16 unit, so
-    // decode can never misread a high char as an expansion index (the
-    // old 0xE000+rank id space threw or merged spuriously here)
-    val vocab = Array(("！", 10L), ("ab", 6L))
-    val rules = TextOps.bpeTrainLocal(vocab, numMerges = 4)
-    assert(rules.map(m => (m.lhs, m.rhs, m.n)) ==
-      Seq(("", "！", 10L), ("a", "b", 6L)), rules.toString)
-    // apply agrees: both pieces fully merge to one token each
-    val d = docs((1L, "！ ab x", "en", "s", 0L))
-    assert(TextOps.bpeApplyRules(d, rules).collect()(0).getLong(1) == 3L)
   }
 
   test("SPARQL UNION/VALUES/aggregate lowerings: nulls, broadcast, no-cartesian guard") {
@@ -1203,6 +1255,11 @@ class OpsSpec extends AnyFunSuite {
     val memo = new java.util.HashMap[String, java.lang.Long]()
     assert(TextOps.simHash("a b", memo) == TextOps.md5Hash60("a b"))
     assert(TextOps.simHash("ab", memo) == TextOps.md5Hash60("ab"))
+    // td10's piece classes share the class too: \x0B is a symbol piece,
+    // so the word, number and symbol pieces still partition the pieces
+    val r = TextOps.bpeTokenCounts(docs((1L, "a\u000Bb", "en", "s", 0L))).collect()(0)
+    assert(r.getLong(1) == 3L, r.toString)
+    assert(r.getLong(1) == r.getLong(2) + r.getLong(3) + r.getLong(4), r.toString)
   }
 
   test("quantile sketch: estimates within the ~4.4% bucket width") {
