@@ -144,21 +144,54 @@ class OpsSpec extends AnyFunSuite {
     assert(jobs.get >= 1 && jobs.get <= 2, s"jobs=${jobs.get}")
   }
 
-  test("BPE: private-use and fullwidth chars train and apply as ordinary symbols") {
-    // U+E000 (the old merge-placeholder range), U+F8FF (top of the BMP
-    // private-use area) and U+FF01 (fullwidth '!') are symbol-class chars
-    // like '!', so each run below is one symbol piece.
-    // The (!,U+E000) vs (a,b) tie at n=1 goes to the lower code point.
-    val d = docs((1L,
-      "\uE000\uE000 \uE000\uE000 \uE000\uE000 \uF8FF\uFF01 \uF8FF\uFF01 ab !\uE000",
-      "en", "s", 0L))
+  test("BPE PUA guard: planted placeholder-range chars cannot corrupt train or apply") {
+    // U+E000..U+E0FF was once the merge-placeholder range. Merge ids now
+    // live above Character.MAX_CODE_POINT, so chars planted from that range
+    // are ordinary symbol-class code points: they leave the clean corpus's
+    // rules in place and count as one symbol each, never as a merge.
+    // A standalone U+E000 and a U+E001 inside the symbol run "!?":
+    val clean = docs((1L, "aa ab aa ab aa !? x", "en", "s", 0L))
+    val planted = docs((1L, "aa ab \uE000 aa ab aa !\uE001? x", "en", "s", 0L))
+    val mClean = bpeTrainDocs(clean, numMerges = 4)
+    val mPlanted = bpeTrainDocs(planted, numMerges = 4)
+    assert(mClean.map(m => (m.rank, m.lhs, m.rhs, m.n)) == Seq(
+      (0, "a", "a", 3L), (1, "a", "b", 2L), (2, "!", "?", 1L)), mClean.toString)
+    // (!,U+E001) ties (U+E001,?) at n=1 and goes first: '!' < U+E001
+    assert(mPlanted.map(m => (m.rank, m.lhs, m.rhs, m.n)) == Seq(
+      (0, "a", "a", 3L), (1, "a", "b", 2L), (2, "!", "\uE001", 1L),
+      (3, "!\uE001", "?", 1L)), mPlanted.toString)
+    // clean: 13 code points → 7 tokens; planted under the clean table:
+    // 15 code points, "!\uE001?" stays 3 tokens and U+E000 is 1 → 10
+    assert(bpeApplied(clean, mClean) == Map(1L -> (7L, 6L)))
+    assert(bpeApplied(planted, mClean) == Map(1L -> (10L, 5L)))
+    assert(bpeApplied(planted, mPlanted) == Map(1L -> (8L, 7L)))
+    // runs made only of placeholder-range chars merge like any others;
+    // the (!,U+E000) vs (a,b) tie at n=1 goes to the lower code point
+    val d = docs((1L, "\uE000\uE000 \uE000\uE000 \uE000\uE000 ab !\uE000", "en", "s", 0L))
     val rules = bpeTrainDocs(d, numMerges = 8)
     assert(rules.map(m => (m.lhs, m.rhs, m.n)) == Seq(
-      ("\uE000", "\uE000", 3L), ("\uF8FF", "\uFF01", 2L), ("!", "\uE000", 1L),
-      ("a", "b", 1L)),
-      rules.toString)
-    // every piece merges to one token: 7 tokens from 14 code points
-    assert(bpeApplied(d, rules) == Map(1L -> (7L, 7L)))
+      ("\uE000", "\uE000", 3L), ("!", "\uE000", 1L), ("a", "b", 1L)), rules.toString)
+    assert(bpeApplied(d, rules) == Map(1L -> (5L, 5L)))
+  }
+
+  test("scalable BPE: chars above the stripped window are real symbols, never expansion indexes") {
+    // U+F8FF (top of the BMP private-use area) and U+FF01 (fullwidth '!')
+    // train as ordinary corpus chars: merge ids start at MergeBase, above
+    // every code point, so decode never misreads a corpus char as an
+    // expansion index
+    val vocab = Array(("\uF8FF\uFF01", 10L), ("ab", 6L))
+    val local = TextOps.bpeTrainLocal(vocab, numMerges = 4)
+    assert(local.map(m => (m.lhs, m.rhs, m.n)) ==
+      Seq(("\uF8FF", "\uFF01", 10L), ("a", "b", 6L)), local.toString)
+    // apply agrees: both pieces fully merge to one token each
+    assert(bpeApplied(docs((1L, "\uF8FF\uFF01 ab x", "en", "s", 0L)), local) ==
+      Map(1L -> (3L, 2L)))
+    // the same chars through the Spark vocabulary
+    val d = docs((1L, "\uF8FF\uFF01 \uF8FF\uFF01 ab", "en", "s", 0L))
+    val rules = bpeTrainDocs(d, numMerges = 8)
+    assert(rules.map(m => (m.lhs, m.rhs, m.n)) ==
+      Seq(("\uF8FF", "\uFF01", 2L), ("a", "b", 1L)), rules.toString)
+    assert(bpeApplied(d, rules) == Map(1L -> (3L, 3L)))
   }
 
   test("BPE trainer equals a naive full-recount trainer (ScalaCheck, seeded)") {
