@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
   * on, `.count()` after a per-query warmup at SPARK_GRAFT_WARM_DIR),
   * but with N reps per query (min + all samples printed) so one-off
   * scheduler noise is visible, and optional `.explain("formatted")`
-  * dumps to SPARK_GRAFT_PLAN_DIR (the plans/r08 evidence files).
+  * dumps to SPARK_GRAFT_PLAN_DIR (the plans/r08 evidence files). Each
+  * timed rep also reports the Spark jobs it started.
   *
   * Usage: sbt "runMain graft.BenchExtra <reps> <query> [<query>...]"
   * The measurement harness of OPTIMIZATION_r08.md; Bench.scala itself
@@ -31,6 +32,11 @@ object BenchExtra {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val jobs = new java.util.concurrent.atomic.AtomicLong(0L)
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    })
 
     val out = names.map { n =>
       val fn = SparkEntry.queries(n)
@@ -45,15 +51,20 @@ object BenchExtra {
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$pd/$n.txt"), txt.getBytes("UTF-8"))
       }
-      val ts = (1 to reps).map { _ =>
+      val (ts, js) = (1 to reps).map { _ =>
         spark.sparkContext.setJobDescription(n)
+        val j0 = jobs.get()
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count(); () }
         catch { case e: Throwable => System.err.println(s"[extra] $n failed: $e") }
-        (System.nanoTime() - t0) / 1e9
-      }
+        val t = (System.nanoTime() - t0) / 1e9
+        // listener events arrive asynchronously; let the bus drain first
+        Thread.sleep(200)
+        (t, jobs.get() - j0)
+      }.unzip
       spark.sparkContext.setJobDescription(null)
-      println(f"[extra] $n min=${ts.min}%.3f samples=${ts.map(t => f"$t%.3f").mkString(",")}")
+      println(f"[extra] $n min=${ts.min}%.3f samples=${ts.map(t => f"$t%.3f").mkString(",")}" +
+        s" jobs=${js.mkString(",")}")
       n -> ts.min
     }
     val qs = out.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")

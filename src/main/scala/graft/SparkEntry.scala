@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
 import graft.ops.{EmbeddingOps, GraphAnalytics, GraphOps, MultimodalOps, RdfsOps, TextOps}
-import graft.pipeline.TableLog
+import graft.pipeline.{Materialize => M, Scratch, TableLog}
 import graft.streaming.StreamingOps
 
 /** Driver contract: one entry per implemented operator, each paired (where
@@ -27,6 +27,17 @@ object SparkEntry {
 
   /** DECIMAL(18,2)-exact sum, surfaced as DOUBLE. */
   private def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast("double")
+
+  /** The two graph snapshots the diff and view-maintenance queries share:
+    * v1 = docs %3≠0 materialized at `dir/a`, v2 = docs %2≠0 at `dir/b`.
+    * Returns v1's (subj, pred, obj) parse, the input of a view build.
+    */
+  private def writeSnapshots(docs: DataFrame, dir: String): DataFrame = {
+    val v1 = GraphOps.docTriples(docs.filter(col("doc_id") % 3 =!= 0))
+    M.write(v1, s"$dir/a")
+    M.write(GraphOps.docTriples(docs.filter(col("doc_id") % 2 =!= 0)), s"$dir/b")
+    v1.toDF().select(col("subj"), col("pred"), col("obj"))
+  }
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0: Turtle parsing
     * at scale through the embedded conformance-tested parser.
@@ -574,8 +585,7 @@ object SparkEntry {
     // same centroids; base files stay append-only until compaction
     "emb19_ann_ivf_delta" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-      val dir = java.nio.file.Files.createTempDirectory("graft_emb19_").toString
-      try {
+      Scratch.run("graft_emb19_") { dir =>
         val cents = Array.tabulate(EmbeddingOps.IvfCells)(k =>
           EmbeddingOps.ivfCentroid(k, 64).map(_ * 1000L))
         graft.ops.IvfStore.write(
@@ -587,9 +597,7 @@ object SparkEntry {
         graft.ops.IvfStore.searchTopK(s, s"$dir/ivf", k = 5)
           .select(col("query_id"), col("rank").cast("long").as("rank"),
             col("neighbor_id"), col("cos"))
-          .localCheckpoint() // eager — the scratch index dir is deleted below
-      } finally
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      }
     }),
 
     // vector-store TIME TRAVEL (kg60's discipline on the IVF delta log):
@@ -599,8 +607,7 @@ object SparkEntry {
     // assignment arithmetic
     "emb20_ann_time_travel" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-      val dir = java.nio.file.Files.createTempDirectory("graft_emb20_").toString
-      try {
+      Scratch.run("graft_emb20_") { dir =>
         val cents = Array.tabulate(EmbeddingOps.IvfCells)(k =>
           EmbeddingOps.ivfCentroid(k, 64).map(_ * 1000L))
         graft.ops.IvfStore.write(
@@ -613,9 +620,7 @@ object SparkEntry {
         // (IvfStore.readEvolution)
         graft.ops.IvfStore.readEvolution(s, s"$dir/ivf", upTo = 2L)
           .select(col("as_of"), col("vec_id"), col("cell"))
-          .localCheckpoint() // eager — the scratch index dir is deleted below
-      } finally
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      }
     }),
 
     // multi-probe SRP ANN: each query also probes every Hamming-1 bucket
@@ -757,17 +762,14 @@ object SparkEntry {
     // export/import capstone; result must equal the direct parse
     "kg35_ttl_export" -> ((s, d) => {
       val tri = GraphOps.parseTurtle(t(s, d, "documents"))
-      val dir = java.nio.file.Files.createTempDirectory("graft_kg35_").toString
-      try {
+      Scratch.run("graft_kg35_") { dir =>
         GraphOps.exportTurtleDir(tri.repartition(8), s"$dir/ttl",
           Map("p" -> GraphOps.PropPrefix, "d" -> GraphOps.DocPrefix))
         val (rows, rejects) = GraphOps.readTurtleDir(s, s"$dir/ttl")
         if (rejects.count() > 0)
           throw new IllegalStateException(s"export produced unparseable files")
         rows.toDF().select(col("subj"), col("pred"), col("obj"))
-          .localCheckpoint() // eager — the scratch dir is deleted below
-      } finally
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      }
     }),
 
     // rich-grammar Turtle distributed: @base-relative IRIs, \u escapes,
@@ -1107,22 +1109,12 @@ object SparkEntry {
     // (only touched pred_hash partitions rewrite — OpsSpec pins the
     // untouched-partition bytes); final graph == the full-corpus build
     "kg22_delta_merge" -> ((s, d) => {
-      val tri = GraphOps.parseTurtle(t(s, d, "documents"))
-      def rows(df: DataFrame) = df.select(
-        col("subj"), col("pred"), col("obj"),
-        concat(lit("doc:"), col("doc_id").cast("string")).as("src_url"),
-        lit(new java.sql.Timestamp(0L)).as("warc_ts"))
-        .as(org.apache.spark.sql.Encoders.product[graft.pipeline.TripleRow])
-      val dir = java.nio.file.Files.createTempDirectory("graft_kg22_").toString
-      try {
-        graft.pipeline.Materialize.write(rows(tri.filter(col("doc_id") % 2 === 0)), dir)
-        graft.pipeline.Materialize.mergeDelta(s, dir,
-          rows(tri.filter(col("doc_id") % 2 =!= 0)))
-        graft.pipeline.Materialize.read(s, dir)
-          .select(col("subj"), col("pred"), col("obj"))
-          .localCheckpoint() // eager — the scratch graph dir is deleted below
-      } finally
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      val docs = t(s, d, "documents")
+      Scratch.run("graft_kg22_") { dir =>
+        M.write(GraphOps.docTriples(docs.filter(col("doc_id") % 2 === 0)), dir)
+        M.mergeDelta(s, dir, GraphOps.docTriples(docs.filter(col("doc_id") % 2 =!= 0)))
+        M.read(s, dir).select(col("subj"), col("pred"), col("obj"))
+      }
     }),
 
     // LSM incremental maintenance: three corpus deltas APPEND under
@@ -1130,43 +1122,25 @@ object SparkEntry {
     // per-partition overwrite), the third triggers compaction; the merged
     // view == the full-corpus build
     "kg28_lsm_merge" -> ((s, d) => {
-      val tri = GraphOps.parseTurtle(t(s, d, "documents"))
-      def rows(df: DataFrame) = df.select(
-        col("subj"), col("pred"), col("obj"),
-        concat(lit("doc:"), col("doc_id").cast("string")).as("src_url"),
-        lit(new java.sql.Timestamp(0L)).as("warc_ts"))
-        .as(org.apache.spark.sql.Encoders.product[graft.pipeline.TripleRow])
-      val dir = java.nio.file.Files.createTempDirectory("graft_kg28_").toString
-      try {
-        graft.pipeline.Materialize.write(rows(tri.filter(col("doc_id") % 4 === 0)), dir)
+      val docs = t(s, d, "documents")
+      Scratch.run("graft_kg28_") { dir =>
+        M.write(GraphOps.docTriples(docs.filter(col("doc_id") % 4 === 0)), dir)
         (1 to 3).foreach(i =>
-          graft.pipeline.Materialize.mergeDeltaLsm(s, dir,
-            rows(tri.filter(col("doc_id") % 4 === i)), maxDeltaBatches = 3))
-        graft.pipeline.Materialize.readMerged(s, dir)
-          .select(col("subj"), col("pred"), col("obj"))
-          .localCheckpoint() // eager — the scratch graph dir is deleted below
-      } finally
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+          M.mergeDeltaLsm(s, dir,
+            GraphOps.docTriples(docs.filter(col("doc_id") % 4 === i)), maxDeltaBatches = 3))
+        M.readMerged(s, dir).select(col("subj"), col("pred"), col("obj"))
+      }
     }),
 
     // snapshot diff: two materialized graph builds (docs %3≠0 vs %2≠0),
     // one (op, s, p, o) row per changed triple — adds = odd multiples of
     // 3, dels = evens not divisible by 3, both derived in closed form
     "kg32_graph_diff" -> ((s, d) => {
-      val tri = GraphOps.parseTurtle(t(s, d, "documents"))
-      def rows(df: DataFrame) = df.select(
-        col("subj"), col("pred"), col("obj"),
-        concat(lit("doc:"), col("doc_id").cast("string")).as("src_url"),
-        lit(new java.sql.Timestamp(0L)).as("warc_ts"))
-        .as(org.apache.spark.sql.Encoders.product[graft.pipeline.TripleRow])
-      val dir = java.nio.file.Files.createTempDirectory("graft_kg32_").toString
-      try {
-        graft.pipeline.Materialize.write(rows(tri.filter(col("doc_id") % 3 =!= 0)), s"$dir/a")
-        graft.pipeline.Materialize.write(rows(tri.filter(col("doc_id") % 2 =!= 0)), s"$dir/b")
-        graft.pipeline.Materialize.graphDiff(s, s"$dir/a", s"$dir/b")
-          .localCheckpoint() // eager — the scratch graph dirs are deleted below
-      } finally
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      val docs = t(s, d, "documents")
+      Scratch.run("graft_kg32_") { dir =>
+        writeSnapshots(docs, dir)
+        M.graphDiff(s, s"$dir/a", s"$dir/b")
+      }
     }),
 
     // characteristic sets (Neumann & Moerkotte 2011): predicate-set
@@ -1192,26 +1166,17 @@ object SparkEntry {
     // the rest, batch 2 retracts the %5=0 docs' triples; readAsOf(0/1/2)
     // must reproduce each historical state (2 == readMerged "now")
     "kg60_time_travel" -> ((s, d) => {
-      val tri = GraphOps.parseTurtle(t(s, d, "documents"))
-      def rows(df: DataFrame) = df.select(
-        col("subj"), col("pred"), col("obj"),
-        concat(lit("doc:"), col("doc_id").cast("string")).as("src_url"),
-        lit(new java.sql.Timestamp(0L)).as("warc_ts"))
-        .as(org.apache.spark.sql.Encoders.product[graft.pipeline.TripleRow])
-      val dir = java.nio.file.Files.createTempDirectory("graft_kg60_").toString
-      try {
-        val M = graft.pipeline.Materialize
-        M.write(rows(tri.filter(col("doc_id") % 3 =!= 0)), s"$dir/g")
-        M.appendDelta(s, s"$dir/g", rows(tri.filter(col("doc_id") % 3 === 0)))
+      val docs = t(s, d, "documents")
+      Scratch.run("graft_kg60_") { dir =>
+        M.write(GraphOps.docTriples(docs.filter(col("doc_id") % 3 =!= 0)), s"$dir/g")
+        M.appendDelta(s, s"$dir/g", GraphOps.docTriples(docs.filter(col("doc_id") % 3 === 0)))
         M.appendDeltaOps(s, s"$dir/g",
-          rows(tri.filter(col("doc_id") % 5 === 0)).toDF()
+          GraphOps.docTriples(docs.filter(col("doc_id") % 5 === 0)).toDF()
             .withColumn("op", lit(TableLog.OpDel)))
         def view(seq: Long) = M.readAsOf(s, s"$dir/g", seq)
           .select(lit(seq).as("as_of"), col("subj"), col("pred"), col("obj"))
         view(0).unionByName(view(1)).unionByName(view(2))
-          .localCheckpoint() // eager — the scratch graph dir is deleted below
-      } finally
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      }
     }),
 
     // TOMBSTONE deletes through the LSM path: graph v1 (docs %3≠0) gets
@@ -1219,23 +1184,12 @@ object SparkEntry {
     // batch (adds assert, dels RETRACT — the re-crawl path where a page's
     // new parse drops triples); the merged view must equal the v2 build
     "kg36_lsm_tombstones" -> ((s, d) => {
-      val tri = GraphOps.parseTurtle(t(s, d, "documents"))
-      def rows(df: DataFrame) = df.select(
-        col("subj"), col("pred"), col("obj"),
-        concat(lit("doc:"), col("doc_id").cast("string")).as("src_url"),
-        lit(new java.sql.Timestamp(0L)).as("warc_ts"))
-        .as(org.apache.spark.sql.Encoders.product[graft.pipeline.TripleRow])
-      val dir = java.nio.file.Files.createTempDirectory("graft_kg36_").toString
-      try {
-        graft.pipeline.Materialize.write(rows(tri.filter(col("doc_id") % 3 =!= 0)), s"$dir/a")
-        graft.pipeline.Materialize.write(rows(tri.filter(col("doc_id") % 2 =!= 0)), s"$dir/b")
-        val diff = graft.pipeline.Materialize.graphDiffProv(s, s"$dir/a", s"$dir/b")
-        graft.pipeline.Materialize.applyDiff(s, s"$dir/a", diff)
-        graft.pipeline.Materialize.readMerged(s, s"$dir/a")
-          .select(col("subj"), col("pred"), col("obj"))
-          .localCheckpoint() // eager — the scratch graph dirs are deleted below
-      } finally
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      val docs = t(s, d, "documents")
+      Scratch.run("graft_kg36_") { dir =>
+        writeSnapshots(docs, dir)
+        M.applyDiff(s, s"$dir/a", M.graphDiffProv(s, s"$dir/a", s"$dir/b"))
+        M.readMerged(s, s"$dir/a").select(col("subj"), col("pred"), col("obj"))
+      }
     }),
 
     // INCREMENTAL VIEW MAINTENANCE (the IVM half of the standing-query
@@ -1244,28 +1198,15 @@ object SparkEntry {
     // view must equal a fresh aggregate over v2 (kg36's two snapshots)
     "kg79_view_maintenance" -> ((s, d) => {
       val P = GraphOps.PropPrefix
-      val tri = GraphOps.parseTurtle(t(s, d, "documents"))
-      def rows(df: DataFrame) = df.select(
-        col("subj"), col("pred"), col("obj"),
-        concat(lit("doc:"), col("doc_id").cast("string")).as("src_url"),
-        lit(new java.sql.Timestamp(0L)).as("warc_ts"))
-        .as(org.apache.spark.sql.Encoders.product[graft.pipeline.TripleRow])
-      val dir = java.nio.file.Files.createTempDirectory("graft_kg79_").toString
-      try {
-        val M = graft.pipeline.Materialize
-        M.write(rows(tri.filter(col("doc_id") % 3 =!= 0)), s"$dir/a")
-        M.write(rows(tri.filter(col("doc_id") % 2 =!= 0)), s"$dir/b")
-        graft.pipeline.ViewStore.buildCountView(
-          tri.filter(col("doc_id") % 3 =!= 0)
-            .select(col("subj"), col("pred"), col("obj")),
-          s"${P}lang", s"$dir/view")
+      val docs = t(s, d, "documents")
+      Scratch.run("graft_kg79_") { dir =>
+        val v1 = writeSnapshots(docs, dir)
+        graft.pipeline.ViewStore.buildCountView(v1, s"${P}lang", s"$dir/view")
         val diff = M.graphDiffProv(s, s"$dir/a", s"$dir/b")
         graft.pipeline.ViewStore.maintainCountView(s, s"$dir/view", diff, s"${P}lang")
         graft.pipeline.ViewStore.readView(s, s"$dir/view")
           .select(col("key").as("l"), col("n"))
-          .localCheckpoint() // eager — the scratch dirs are deleted below
-      } finally
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      }
     }),
 
     // SUM-view IVM (kg79's join-view sibling): SUM(nchars) per lang — a
@@ -1275,21 +1216,10 @@ object SparkEntry {
     // fresh aggregate over v2
     "kg81_sum_view_maintenance" -> ((s, d) => {
       val P = GraphOps.PropPrefix
-      val tri = GraphOps.parseTurtle(t(s, d, "documents"))
-      def rows(df: DataFrame) = df.select(
-        col("subj"), col("pred"), col("obj"),
-        concat(lit("doc:"), col("doc_id").cast("string")).as("src_url"),
-        lit(new java.sql.Timestamp(0L)).as("warc_ts"))
-        .as(org.apache.spark.sql.Encoders.product[graft.pipeline.TripleRow])
-      val dir = java.nio.file.Files.createTempDirectory("graft_kg81_").toString
-      try {
-        val M = graft.pipeline.Materialize
-        M.write(rows(tri.filter(col("doc_id") % 3 =!= 0)), s"$dir/a")
-        M.write(rows(tri.filter(col("doc_id") % 2 =!= 0)), s"$dir/b")
-        graft.pipeline.ViewStore.buildSumView(
-          tri.filter(col("doc_id") % 3 =!= 0)
-            .select(col("subj"), col("pred"), col("obj")),
-          s"${P}lang", s"${P}nchars", s"$dir/view")
+      val docs = t(s, d, "documents")
+      Scratch.run("graft_kg81_") { dir =>
+        val v1 = writeSnapshots(docs, dir)
+        graft.pipeline.ViewStore.buildSumView(v1, s"${P}lang", s"${P}nchars", s"$dir/view")
         val diff = M.graphDiffProv(s, s"$dir/a", s"$dir/b")
         M.applyDiff(s, s"$dir/a", diff) // bring the store to v2 first
         graft.pipeline.ViewStore.maintainSumView(s, s"$dir/view",
@@ -1297,9 +1227,7 @@ object SparkEntry {
           (p: String) => M.readMergedPred(s, s"$dir/a", p))
         graft.pipeline.ViewStore.readView(s, s"$dir/view")
           .select(col("key").as("l"), col("n"))
-          .localCheckpoint() // eager — the scratch dirs are deleted below
-      } finally
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      }
     }),
 
     // MAX-view IVM (kg82) — the NON-INVERTIBLE aggregate: deletes of a
@@ -1309,21 +1237,10 @@ object SparkEntry {
     // maintained view == fresh MAX(nchars) per lang over v2
     "kg82_max_view_maintenance" -> ((s, d) => {
       val P = GraphOps.PropPrefix
-      val tri = GraphOps.parseTurtle(t(s, d, "documents"))
-      def rows(df: DataFrame) = df.select(
-        col("subj"), col("pred"), col("obj"),
-        concat(lit("doc:"), col("doc_id").cast("string")).as("src_url"),
-        lit(new java.sql.Timestamp(0L)).as("warc_ts"))
-        .as(org.apache.spark.sql.Encoders.product[graft.pipeline.TripleRow])
-      val dir = java.nio.file.Files.createTempDirectory("graft_kg82_").toString
-      try {
-        val M = graft.pipeline.Materialize
-        M.write(rows(tri.filter(col("doc_id") % 3 =!= 0)), s"$dir/a")
-        M.write(rows(tri.filter(col("doc_id") % 2 =!= 0)), s"$dir/b")
-        graft.pipeline.ViewStore.buildMaxView(
-          tri.filter(col("doc_id") % 3 =!= 0)
-            .select(col("subj"), col("pred"), col("obj")),
-          s"${P}lang", s"${P}nchars", s"$dir/view")
+      val docs = t(s, d, "documents")
+      Scratch.run("graft_kg82_") { dir =>
+        val v1 = writeSnapshots(docs, dir)
+        graft.pipeline.ViewStore.buildMaxView(v1, s"${P}lang", s"${P}nchars", s"$dir/view")
         val diff = M.graphDiffProv(s, s"$dir/a", s"$dir/b")
         M.applyDiff(s, s"$dir/a", diff) // bring the store to v2 first
         graft.pipeline.ViewStore.maintainMaxView(s, s"$dir/view",
@@ -1331,9 +1248,7 @@ object SparkEntry {
           (p: String) => M.readMergedPred(s, s"$dir/a", p))
         graft.pipeline.ViewStore.readView(s, s"$dir/view")
           .select(col("key").as("l"), col("n"))
-          .localCheckpoint() // eager — the scratch dirs are deleted below
-      } finally
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      }
     }),
 
     // SPARQL 1.1 UPDATE over the LSM graph: DELETE { ?d p:source ?src }
@@ -1342,18 +1257,10 @@ object SparkEntry {
     // via ONE tombstone delta batch; merged view == closed-form rewrite
     "kg63_sparql_update" -> ((s, d) => {
       val P = GraphOps.PropPrefix
-      val tri = GraphOps.parseTurtle(t(s, d, "documents"))
-      val rows = tri.select(
-        col("subj"), col("pred"), col("obj"),
-        concat(lit("doc:"), col("doc_id").cast("string")).as("src_url"),
-        lit(new java.sql.Timestamp(0L)).as("warc_ts"))
-        .as(org.apache.spark.sql.Encoders.product[graft.pipeline.TripleRow])
-      val dir = java.nio.file.Files.createTempDirectory("graft_kg63_").toString
-      try {
-        val M = graft.pipeline.Materialize
+      val rows = GraphOps.docTriples(t(s, d, "documents"))
+      Scratch.run("graft_kg63_") { dir =>
         M.write(rows, s"$dir/g")
-        val counts = M.sketchPredCounts(
-          tri.select(col("subj"), col("pred"), col("obj")))
+        val counts = M.sketchPredCounts(rows.toDF())
         GraphOps.updateWhere(s, s"$dir/g",
           delete = Seq(GraphOps.ConstructTemplate("d", s"${P}source", "src")),
           insert = Seq(GraphOps.ConstructTemplate("d", s"${P}archived", "src")),
@@ -1362,11 +1269,8 @@ object SparkEntry {
             GraphOps.ChainPattern("d", s"${P}lang", oConst = Some("\"en\""))),
           predCounts = counts,
           srcUrl = "sparql:update", ts = new java.sql.Timestamp(0L))
-        M.readMerged(s, s"$dir/g")
-          .select(col("subj"), col("pred"), col("obj"))
-          .localCheckpoint() // eager — the scratch graph dir is deleted below
-      } finally
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+        M.readMerged(s, s"$dir/g").select(col("subj"), col("pred"), col("obj"))
+      }
     }),
 
     // QUAD-scoped SPARQL Update: the kg63 rewrite confined to ONE named
@@ -1379,9 +1283,7 @@ object SparkEntry {
       val quads = GraphOps.nquadsRoundTrip(t(s, d, "documents"))
         .withColumn("src_url", col("graph"))
         .withColumn("warc_ts", lit(new java.sql.Timestamp(0L)))
-      val dir = java.nio.file.Files.createTempDirectory("graft_kg69_").toString
-      try {
-        val M = graft.pipeline.Materialize
+      Scratch.run("graft_kg69_") { dir =>
         M.writeQuads(quads, s"$dir/g")
         val counts = M.sketchPredCounts(quads)
         GraphOps.updateWhereGraph(s, s"$dir/g",
@@ -1393,11 +1295,9 @@ object SparkEntry {
             GraphOps.ChainPattern("d", s"${P}lang", oConst = Some("\"en\""))),
           predCounts = counts,
           srcUrl = "sparql:update", ts = new java.sql.Timestamp(0L))
-        M.readMergedQuads(s, s"$dir/g")
+        M.readMerged(s, s"$dir/g")
           .select(col("graph"), col("subj"), col("pred"), col("obj"))
-          .localCheckpoint() // eager — the scratch graph dir is deleted below
-      } finally
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      }
     }),
 
     // SPARQL as TEXT (the kg66 front-end): the full grammar→algebra
@@ -1534,29 +1434,18 @@ object SparkEntry {
     // same tombstone delta path — the oracle is kg63's, verbatim
     "kg75_sparql_update_text" -> ((s, d) => {
       val P = GraphOps.PropPrefix
-      val tri = GraphOps.parseTurtle(t(s, d, "documents"))
-      val rows = tri.select(
-        col("subj"), col("pred"), col("obj"),
-        concat(lit("doc:"), col("doc_id").cast("string")).as("src_url"),
-        lit(new java.sql.Timestamp(0L)).as("warc_ts"))
-        .as(org.apache.spark.sql.Encoders.product[graft.pipeline.TripleRow])
-      val dir = java.nio.file.Files.createTempDirectory("graft_kg75_").toString
-      try {
-        val M = graft.pipeline.Materialize
+      val rows = GraphOps.docTriples(t(s, d, "documents"))
+      Scratch.run("graft_kg75_") { dir =>
         M.write(rows, s"$dir/g")
-        val counts = M.sketchPredCounts(
-          tri.select(col("subj"), col("pred"), col("obj")))
+        val counts = M.sketchPredCounts(rows.toDF())
         graft.sparql.SparqlExec.update(s,
           s"""PREFIX p: <$P>
              |DELETE { ?d p:source ?src }
              |INSERT { ?d p:archived ?src }
              |WHERE { ?d p:source ?src . ?d p:lang "en" }""".stripMargin,
           s"$dir/g", counts, "sparql:update", new java.sql.Timestamp(0L))
-        M.readMerged(s, s"$dir/g")
-          .select(col("subj"), col("pred"), col("obj"))
-          .localCheckpoint() // eager — the scratch graph dir is deleted below
-      } finally
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+        M.readMerged(s, s"$dir/g").select(col("subj"), col("pred"), col("obj"))
+      }
     }),
 
     // INSERT DATA / DELETE DATA from text: two ground batches appended to
@@ -1565,18 +1454,10 @@ object SparkEntry {
     // (latest-batch-wins), so exactly one survives the merged read
     "kg76_sparql_insert_data" -> ((s, d) => {
       val P = GraphOps.PropPrefix
-      val tri = GraphOps.parseTurtle(t(s, d, "documents"))
-      val rows = tri.select(
-        col("subj"), col("pred"), col("obj"),
-        concat(lit("doc:"), col("doc_id").cast("string")).as("src_url"),
-        lit(new java.sql.Timestamp(0L)).as("warc_ts"))
-        .as(org.apache.spark.sql.Encoders.product[graft.pipeline.TripleRow])
-      val dir = java.nio.file.Files.createTempDirectory("graft_kg76_").toString
-      try {
-        val M = graft.pipeline.Materialize
+      val rows = GraphOps.docTriples(t(s, d, "documents"))
+      Scratch.run("graft_kg76_") { dir =>
         M.write(rows, s"$dir/g")
-        val counts = M.sketchPredCounts(
-          tri.select(col("subj"), col("pred"), col("obj")))
+        val counts = M.sketchPredCounts(rows.toDF())
         val ts0 = new java.sql.Timestamp(0L)
         graft.sparql.SparqlExec.update(s,
           s"""PREFIX p: <$P>
@@ -1588,11 +1469,8 @@ object SparkEntry {
           s"""PREFIX p: <$P>
              |DELETE DATA { <${GraphOps.DocPrefix}seed> p:source "manual" }""".stripMargin,
           s"$dir/g", counts, "sparql:data", ts0)
-        M.readMerged(s, s"$dir/g")
-          .select(col("subj"), col("pred"), col("obj"))
-          .localCheckpoint() // eager — the scratch graph dir is deleted below
-      } finally
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+        M.readMerged(s, s"$dir/g").select(col("subj"), col("pred"), col("obj"))
+      }
     }),
 
     // SHACL-lite validation: per-property cardinality/datatype/enum rules
@@ -1911,17 +1789,14 @@ object SparkEntry {
       val derived = GraphOps.construct(paths, Seq(
         GraphOps.ConstructTemplate("a", s"${P}near", "b"),
         GraphOps.ConstructTemplate("b", s"${P}near", "a")))
-      val dir = java.nio.file.Files.createTempDirectory("graft_kg45_").toString
-      try {
+      Scratch.run("graft_kg45_") { dir =>
         GraphOps.exportTurtleDir(derived, s"$dir/ttl",
           Map("p" -> P, "e" -> "http://graft.example/entity/"))
         val (rows, rejects) = GraphOps.readTurtleDir(s, s"$dir/ttl")
         if (rejects.count() > 0)
           throw new IllegalStateException("export produced unparseable files")
         rows.toDF().select(col("subj"), col("pred"), col("obj"))
-          .localCheckpoint() // eager — the scratch dir is deleted below
-      } finally
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      }
     }),
 
     // RDFS inference materialization: TBox (subClassOf/subPropertyOf

@@ -65,6 +65,18 @@ object GraphOps {
     perDoc(docColumns(documents))(forDoc)(triplesOf).toDF("doc_id", "subj", "pred", "obj")
   }
 
+  /** The documents' triples as graph-table rows: [[parseTurtle]] with
+    * provenance `src_url = "doc:<doc_id>"` and `warc_ts` = epoch 0 — the
+    * one binding of documents to [[graft.pipeline.TripleRow]] that the
+    * graph-maintenance and streaming queries write, merge and diff.
+    */
+  def docTriples(documents: DataFrame): Dataset[graft.pipeline.TripleRow] =
+    parseTurtle(documents).select(
+      col("subj"), col("pred"), col("obj"),
+      concat(lit("doc:"), col("doc_id").cast("string")).as("src_url"),
+      lit(new java.sql.Timestamp(0L)).as("warc_ts"))
+      .as(org.apache.spark.sql.Encoders.product[graft.pipeline.TripleRow])
+
   /** Graph → TURTLE → graph round trip at corpus scale (kg34): each doc's
     * parsed triples serialize through [[graft.turtle.TurtleWriter]]
     * (prefix compaction and `;`-grouping exercised on real namespaces)
@@ -1044,7 +1056,7 @@ object GraphOps {
     require(delete.nonEmpty || insert.nonEmpty,
       "DELETE/INSERT WHERE with no templates is a no-op")
     val M = graft.pipeline.Materialize
-    val merged = M.readMergedQuads(spark, out)
+    val merged = M.readMerged(spark, out)
     val sol = bgpChain(
       (p: String) => merged.filter(col("graph") === graph &&
         col("pred_hash") === M.predHash(lit(p))),
@@ -1059,7 +1071,7 @@ object GraphOps {
       .withColumn("src_url", lit(srcUrl))
       .withColumn("warc_ts", lit(ts))
       .localCheckpoint()
-    M.appendQuadDeltaOps(spark, out, batch)
+    M.appendDeltaOps(spark, out, batch)
   }
 
   // -------------------------------------------- SPARQL term functions

@@ -104,29 +104,38 @@ object Canonical {
   }
 
   /** The part of an edge-set update a label recomputation must see: the
-    * AFFECTED node set (every node of an old component the diff touches,
-    * plus diff nodes absent from the old labels — brand-new vertices) and
-    * the new-edge subgraph they induce. An edge of `newEdges` has either
-    * both endpoints affected or neither: a surviving old edge's endpoints
-    * share an old component (touched together), an added edge's endpoints
-    * are diff nodes — so ONE src-side semi-join captures the induced
-    * subgraph exactly. Exposed for the spec that pins "untouched
-    * components are not recomputed" as a row-count invariant.
+    * TOUCHED old components, the AFFECTED node set (every node of a
+    * touched component, plus diff nodes absent from the old labels —
+    * brand-new vertices) and the new-edge subgraph they induce. An edge of
+    * `newEdges` has either both endpoints affected or neither: a surviving
+    * old edge's endpoints share an old component (touched together), an
+    * added edge's endpoints are diff nodes — so ONE src-side semi-join
+    * captures the induced subgraph exactly. The diff-node and
+    * touched-component sets are diff-sized by contract and consumed twice
+    * (here and by the caller's carry-forward anti-join), so both are
+    * materialized ONCE through `checkpoint` with truncated lineage instead
+    * of re-evaluating the caller's diff subtree at every consuming action.
+    * The one derivation [[connectedComponentsDelta]] runs; the spec pins
+    * "untouched components are not recomputed" on it as a row-count
+    * invariant.
     */
-  def affectedSubgraph(
-      oldLabels: DataFrame, newEdges: DataFrame, diff: DataFrame)
-      : (DataFrame, DataFrame) = {
-    val touched = diff.select(col("src").as("id"))
-      .unionByName(diff.select(col("dst").as("id"))).distinct()
-    val touchedComps = oldLabels.join(touched, Seq("id"), "left_semi")
-      .select(col("component")).distinct()
+  private[graft] def affectedSubgraph(
+      oldLabels: DataFrame, newEdges: DataFrame, diff: DataFrame,
+      checkpoint: CheckpointPolicy = CheckpointPolicy.Local)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val touched = checkpoint.truncate(
+      diff.select(col("src").as("id"))
+        .unionByName(diff.select(col("dst").as("id"))).distinct())
+    val touchedComps = checkpoint.truncate(
+      oldLabels.join(touched, Seq("id"), "left_semi")
+        .select(col("component")).distinct())
     val affected = oldLabels.join(touchedComps, Seq("component"), "left_semi")
       .select(col("id"))
       .unionByName(touched) // diff nodes the old labels never saw
       .distinct()
     val subEdges = newEdges
       .join(affected.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-    (affected, subEdges)
+    (touchedComps, affected, subEdges)
   }
 
   /** INCREMENTAL connected components under an edge diff — the nightly
@@ -149,23 +158,8 @@ object Canonical {
       diff: DataFrame,
       maxIter: Int = 50,
       checkpoint: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
-    // diff-node and touched-component sets are diff-sized by contract;
-    // materialize them ONCE with truncated lineage — the former shape
-    // derived `touched`/`touchedComps` twice (once inside
-    // affectedSubgraph, once for `keep`), re-evaluating the caller's
-    // diff subtree at every consuming action
-    val touched = checkpoint.truncate(
-      diff.select(col("src").as("id"))
-        .unionByName(diff.select(col("dst").as("id"))).distinct())
-    val touchedComps = checkpoint.truncate(
-      oldLabels.join(touched, Seq("id"), "left_semi")
-        .select(col("component")).distinct())
-    val affected = oldLabels.join(touchedComps, Seq("component"), "left_semi")
-      .select(col("id"))
-      .unionByName(touched) // diff nodes the old labels never saw
-      .distinct()
-    val subEdges = newEdges
-      .join(affected.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
+    val (touchedComps, _, subEdges) =
+      affectedSubgraph(oldLabels, newEdges, diff, checkpoint)
     // the using-column join fronts `component` — re-project to the
     // (id, component) contract before the union
     val keep = oldLabels.join(touchedComps, Seq("component"), "left_anti")

@@ -424,13 +424,20 @@ object Materialize {
     */
   def graphDiffProv(
       spark: org.apache.spark.sql.SparkSession,
-      oldOut: String, newOut: String): DataFrame = {
-    def side(p: String) =
-      withPredHash(
-        read(spark, p).select(col("subj"), col("pred"), col("obj"),
-          col("src_url"), col("warc_ts")))
-    val o = side(oldOut)
-    val n = side(newOut)
+      oldOut: String, newOut: String): DataFrame =
+    diff(read(spark, oldOut), read(spark, newOut))
+
+  /** The one body of [[graphDiffProv]], over any two triple frames
+    * (subj, pred, obj, src_url, warc_ts) — stored snapshots or in-flight
+    * parses alike (the streaming re-crawl diffs a page's old parse against
+    * its new one). Same row shape and provenance rule as [[graphDiffProv]].
+    */
+  def diff(oldRows: DataFrame, newRows: DataFrame): DataFrame = {
+    def side(df: DataFrame) =
+      withPredHash(df.select(col("subj"), col("pred"), col("obj"),
+        col("src_url"), col("warc_ts")))
+    val o = side(oldRows)
+    val n = side(newRows)
     val keys = Seq("pred_hash", "subj", "pred", "obj")
     val keyCols = keys.map(col)
     n.join(o.select(keyCols: _*), keys, "left_anti").withColumn("op", lit(TableLog.OpAdd))
@@ -488,16 +495,4 @@ object Materialize {
         rows.repartition(("pred_hash" +: contentKeys(base)).map(col): _*), Seq("pred_hash"))
     }
   }
-
-  // [[writeQuads]] and these two entry points name the quad form of the
-  // same bodies for callers that handle named graphs.
-
-  /** [[appendDeltaOps]] for quad deltas (…, graph, op). */
-  def appendQuadDeltaOps(
-      spark: org.apache.spark.sql.SparkSession, out: String, deltaOps: DataFrame): Unit =
-    appendDeltaOps(spark, out, deltaOps)
-
-  /** [[readMerged]] for quad tables. */
-  def readMergedQuads(spark: org.apache.spark.sql.SparkSession, out: String): DataFrame =
-    readMerged(spark, out)
 }

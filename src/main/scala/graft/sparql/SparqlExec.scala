@@ -129,8 +129,8 @@ object SparqlExec {
     * templates, never a table rewrite):
     *
     *   - `INSERT DATA` / `DELETE DATA` → one ground delta batch
-    *     ([[graft.pipeline.Materialize.appendDeltaOps]] /
-    *     `appendQuadDeltaOps` under GRAPH blocks).
+    *     ([[graft.pipeline.Materialize.appendDeltaOps]], quad rows under
+    *     GRAPH blocks).
     *   - `DELETE { … } INSERT { … } WHERE { … }` →
     *     [[GraphOps.updateWhere]] (delete-then-insert order preserved,
     *     kg63 semantics).
@@ -163,21 +163,16 @@ object SparqlExec {
           throw Diag("GRAPH blocks in DATA need a quad table (quadTable = true)", 0, 0)
         val op = if (insert) TableLog.OpAdd else TableLog.OpDel
         import spark.implicits._
-        if (quadTable) {
-          val batch = triples
+        val rows =
+          if (quadTable) triples
             .map { case (g, s, p, o) => (s"<${g.get}>", s, p, o) }
             .toDF("graph", "subj", "pred", "obj")
-            .withColumn("op", lit(op))
-            .withColumn("src_url", lit(srcUrl)).withColumn("warc_ts", lit(ts))
-          M.appendQuadDeltaOps(spark, out, batch)
-        } else {
-          val batch = triples
+          else triples
             .map { case (_, s, p, o) => (s, p, o) }
             .toDF("subj", "pred", "obj")
-            .withColumn("op", lit(op))
-            .withColumn("src_url", lit(srcUrl)).withColumn("warc_ts", lit(ts))
-          M.appendDeltaOps(spark, out, batch)
-        }
+        M.appendDeltaOps(spark, out, rows
+          .withColumn("op", lit(op))
+          .withColumn("src_url", lit(srcUrl)).withColumn("warc_ts", lit(ts)))
       case UpdateOp.Modify(withGraph, del, ins, where, start, end) =>
         if (quadTable && withGraph.isEmpty)
           throw Diag("quad tables need WITH <graph> on DELETE/INSERT WHERE", start, end)

@@ -1,9 +1,11 @@
 package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.pipeline.TableLog
+import org.apache.spark.sql.streaming.Trigger
+import graft.ops.GraphOps
+import graft.pipeline.{Materialize => M, Scratch, TableLog}
 
 /** State-v2 processor for [[StreamingOps.userStatsTws]]: counts a user's
   * events in a ValueState and their distinct event types in a MapState
@@ -59,28 +61,94 @@ object StreamingOps {
       .parquet(sfDir)
   }
 
+  /** The one memory-sink drain: start `df` into a named memory sink, drain
+    * it (`processAllAvailable`; with a `checkpoint` dir the query runs
+    * checkpointed under `Trigger.AvailableNow` and is awaited instead),
+    * stop the query in `finally`, hand the sink table to `read` and
+    * materialize the result eagerly — then DROP the sink's temp view,
+    * which otherwise outlives `stop()` and pins the sink rows on the
+    * driver for the rest of the session. The table is resolved in
+    * `df`'s own session, so a forked session's sink is found (q33).
+    */
+  private def drain(df: DataFrame, outputMode: String, checkpoint: Option[String] = None)(
+      read: DataFrame => DataFrame): DataFrame = {
+    val name = s"graft_sink_${counter.incrementAndGet()}"
+    val w = df.writeStream.outputMode(outputMode).format("memory").queryName(name)
+    val q = checkpoint.fold(w.start())(chk =>
+      w.option("checkpointLocation", chk).trigger(Trigger.AvailableNow()).start())
+    try { if (checkpoint.isEmpty) q.processAllAvailable() else q.awaitTermination() }
+    finally q.stop()
+    val session = df.sparkSession
+    try read(session.table(name)).localCheckpoint()
+    finally session.catalog.dropTempView(name)
+  }
+
+  /** Document deliveries: the corpus in thirds by doc_id, or the re-crawl
+    * of the even pages (doc_id % 4 ∈ {0, 2}) in two deliveries.
+    */
+  private val thirds: Seq[Column] = (0 until 3).map(i => pmod(col("doc_id"), lit(3)) === i)
+  private val evenPages: Seq[Column] =
+    (0 until 2).map(i => pmod(col("doc_id"), lit(4)) === i * 2)
+
+  /** Write each delivery filter of `docs` as one parquet file under `in`. */
+  private def deliver(docs: DataFrame, deliveries: Seq[Column], in: String): Unit =
+    deliveries.foreach(d => docs.filter(d).coalesce(1).write.mode("append").parquet(in))
+
+  /** The one delivery-stream driver of the streaming graph queries: the
+    * deliveries land as files under `dir/in`, stream one file per
+    * micro-batch (`maxFilesPerTrigger=1`) with a checkpoint under
+    * `dir/chk` and `Trigger.AvailableNow`, and every non-empty batch runs
+    * `body(batch, batchId)`; returns when the stream is drained. The
+    * checkpointed source replays at-least-once, so `body` must be
+    * idempotent per batch id — this is the one place a commit point
+    * around `body` belongs.
+    */
+  private def replay(docs: DataFrame, deliveries: Seq[Column], dir: String)(
+      body: (DataFrame, Long) => Unit): Unit = {
+    deliver(docs, deliveries, s"$dir/in")
+    docs.sparkSession.readStream.schema(docs.schema)
+      .option("maxFilesPerTrigger", "1") // one delivery per micro-batch
+      .parquet(s"$dir/in")
+      .writeStream
+      .option("checkpointLocation", s"$dir/chk")
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, seq: Long) => if (!batch.isEmpty) body(batch, seq) }
+      .start()
+      .awaitTermination()
+  }
+
+  /** Whether the first batch already wrote the graph at `graph`: the first
+    * batch writes, later ones merge. Probed through the Hadoop FileSystem
+    * API (not java.io.File): the graph path is a DFS location in the
+    * cluster-scale deployment these ops narrate, where a local-file check
+    * would always be false and every micro-batch would silently
+    * FULL-OVERWRITE the graph instead of merging.
+    */
+  private def graphWritten(spark: SparkSession, graph: String): Boolean = {
+    val success = new org.apache.hadoop.fs.Path(s"$graph/_SUCCESS")
+    success.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(success)
+  }
+
+  /** Append one batch's answer snapshot to the result log at `res`, keyed
+    * by the checkpointed batch id with DYNAMIC partition overwrite: a
+    * replayed batch rewrites ITS OWN partition, so at-least-once delivery
+    * stays exactly-once at the result log.
+    */
+  private def logSnapshot(answer: DataFrame, seq: Long, res: String): Unit =
+    answer.withColumn("batch_seq", lit(seq))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_seq").parquet(res)
+
   /** Tumbling 5-minute window counts by event_type over a parquet STREAM. */
   def eventsWindowed(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = s"graft_stream_${counter.incrementAndGet()}"
-
     val stream = boundedStream(spark, sfDir, "events.parquet")
     val agg = stream
       .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"))
 
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try {
-      q.processAllAvailable()
-    } finally q.stop()
-
-    spark.table(name)
-      .select(col("window.start").as("w"), col("event_type"), col("n"))
-      // materialize: the memory sink table is dropped with the query
-      .localCheckpoint()
+    drain(agg, "complete")(
+      _.select(col("window.start").as("w"), col("event_type"), col("n")))
   }
 
   /** Tumbling 10-minute windows WITH an event-time watermark (10 minutes):
@@ -92,8 +160,6 @@ object StreamingOps {
     * append mode emits each window once when the watermark passes it.
     */
   def eventsWatermarked(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = s"graft_wm_${counter.incrementAndGet()}"
-
     val stream = boundedStream(spark, sfDir, "events.parquet")
     val agg = stream
       .withColumn("ts", col("ts").cast("timestamp"))
@@ -101,22 +167,13 @@ object StreamingOps {
       .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"))
 
-    val q = agg.writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-
     // the update-mode memory sink APPENDS each micro-batch's updated rows
     // (no upsert): if the file source ever splits the input into several
     // micro-batches, a re-updated window would appear twice. Counts only
     // grow across updates, so keeping the max per key == keeping the latest.
-    spark.table(name)
-      .select(col("window.start").as("w"), col("event_type"), col("n"))
-      .groupBy(col("w"), col("event_type")).agg(max(col("n")).as("n"))
-      .localCheckpoint()
+    drain(agg, "update")(
+      _.select(col("window.start").as("w"), col("event_type"), col("n"))
+        .groupBy(col("w"), col("event_type")).agg(max(col("n")).as("n")))
   }
 
   /** Streaming DEDUP: `dropDuplicates` keyed on (user_id, event_type)
@@ -127,8 +184,6 @@ object StreamingOps {
     * for unbounded key spaces.
     */
   def dedupedUserCounts(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = s"graft_dedup_${counter.incrementAndGet()}"
-
     val stream = boundedStream(spark, sfDir, "events.parquet")
     val agg = stream
       .select(col("user_id"), col("event_type"))
@@ -136,15 +191,7 @@ object StreamingOps {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_users"))
 
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    spark.table(name).localCheckpoint()
+    drain(agg, "complete")(identity)
   }
 
   /** Streaming dedup with BOUNDED state on an UNBOUNDED key space:
@@ -160,23 +207,15 @@ object StreamingOps {
   def dedupWithinWatermark(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = spark.read.parquet(s"$sfDir/events.parquet")
     val planted = ev.unionByName(ev.filter(col("event_id") % 10 === 0))
-    val dir = java.nio.file.Files.createTempDirectory("graft_q29_").toString
-    try {
+    Scratch.run("graft_q29_") { dir =>
       planted.write.mode("overwrite").parquet(s"$dir/in")
-      val name = s"graft_wmdedup_${counter.incrementAndGet()}"
       val deduped = spark.readStream.schema(ev.schema).parquet(s"$dir/in")
         .withColumn("ts", col("ts").cast("timestamp"))
         .withWatermark("ts", "30 minutes")
         .dropDuplicatesWithinWatermark("event_id")
-      val q = deduped
-        .writeStream.outputMode("append").format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-      spark.table(name)
-        .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-        .localCheckpoint() // eager — the scratch dir can be deleted after
-    } finally
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      drain(deduped, "append")(
+        _.groupBy(col("event_type")).agg(count(lit(1)).as("n")))
+    }
   }
 
   /** STREAM-STREAM interval join: clicks joined to the purchases of the
@@ -190,7 +229,6 @@ object StreamingOps {
     * a single stateful operator.
     */
   def streamStreamJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = s"graft_ssjoin_${counter.incrementAndGet()}"
     def src = boundedStream(spark, sfDir, "events.parquet")
 
     val clicks = src.filter(col("event_type") === "click")
@@ -207,15 +245,9 @@ object StreamingOps {
     val joined = clicks.join(purchases,
       expr("c_user = p_user AND p_ts BETWEEN c_ts - INTERVAL 30 MINUTES AND c_ts"))
 
-    val q = joined.writeStream
-      .outputMode("append").format("memory").queryName(name).start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    spark.table(name)
-      .groupBy(col("c_user").as("user_id"), col("click_id"))
-      .agg(count(lit(1)).as("n_recent"))
-      .localCheckpoint()
+    drain(joined, "append")(
+      _.groupBy(col("c_user").as("user_id"), col("click_id"))
+        .agg(count(lit(1)).as("n_recent")))
   }
 
   /** Built-in SESSION WINDOWS: `session_window(ts, gap)` merges events
@@ -231,24 +263,17 @@ object StreamingOps {
     * the OpsSpec boundary test), so the oracle breaks on strict `>`.
     */
   def sessionWindows(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = s"graft_sesswin_${counter.incrementAndGet()}"
     val stream = boundedStream(spark, sfDir, "events.parquet")
     val agg = stream
       .withColumn("ts", col("ts").cast("timestamp"))
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("n_events"))
 
-    val q = agg.writeStream
-      .outputMode("complete").format("memory").queryName(name).start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    spark.table(name)
-      .select(col("user_id"),
+    drain(agg, "complete")(
+      _.select(col("user_id"),
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
-        col("n_events"))
-      .localCheckpoint()
+        col("n_events")))
   }
 
   /** Arbitrary stateful processing v2 (`transformWithState`): per-user
@@ -267,7 +292,6 @@ object StreamingOps {
   def userStatsTws(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
-    val name = s"graft_tws_${counter.incrementAndGet()}"
     val fork = spark.newSession()
     import fork.implicits._
     fork.conf.set("spark.sql.streaming.stateStore.providerClass",
@@ -281,18 +305,12 @@ object StreamingOps {
       .transformWithState(new UserStatsProcessor(),
         TimeMode.None(), OutputMode.Update())
 
-    val q = stats.toDF("user_id", "n_events", "n_types")
-      .writeStream.outputMode("update").format("memory").queryName(name).start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    // the memory-sink temp view is registered in the forked session
-    fork.table(name)
-      // update-mode memory sink appends per-batch rows; counters only
-      // grow, so max-per-key == latest (same repair as eventsWatermarked)
-      .groupBy(col("user_id"))
-      .agg(max(col("n_events")).as("n_events"), max(col("n_types")).as("n_types"))
-      .localCheckpoint()
+    // the memory-sink temp view is registered in the forked session;
+    // update-mode memory sink appends per-batch rows; counters only
+    // grow, so max-per-key == latest (same repair as eventsWatermarked)
+    drain(stats.toDF("user_id", "n_events", "n_types"), "update")(
+      _.groupBy(col("user_id"))
+        .agg(max(col("n_events")).as("n_events"), max(col("n_types")).as("n_types")))
   }
 
   /** STREAMING RESTART-RESUME (q37) — the kill-and-restart contract every
@@ -315,10 +333,9 @@ object StreamingOps {
 
   private[graft] def restartResumeWithStats(
       spark: SparkSession, sfDir: String): (DataFrame, Long, Long) = {
-    import org.apache.spark.sql.streaming.Trigger
     val ev = spark.read.parquet(s"$sfDir/events.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_q37_").toString
-    try {
+    var (run1Rows, run2Rows) = (0L, 0L)
+    val result = Scratch.run("graft_q37_") { dir =>
       val (in, out, chk) = (s"$dir/in", s"$dir/out", s"$dir/chk")
       ev.write.mode("append").parquet(in) // delivery 1: the full table
 
@@ -336,7 +353,7 @@ object StreamingOps {
         q.recentProgress.map(_.numInputRows).sum
       }
 
-      val run1Rows = runOnce() // "crash" = clean stop after delivery 1
+      run1Rows = runOnce() // "crash" = clean stop after delivery 1
 
       // delivery 2: re-deliver every row of the trailing 20 minutes —
       // within the recovered 30-minute watermark, so ONLY recovered dedup
@@ -345,16 +362,14 @@ object StreamingOps {
       ev.filter(col("ts").cast("timestamp") >= lit(maxTs) - expr("INTERVAL 20 MINUTES"))
         .write.mode("append").parquet(in)
 
-      val run2Rows = runOnce() // restart from the same checkpoint
+      run2Rows = runOnce() // restart from the same checkpoint
 
       // the parquet read honors the sink's _spark_metadata commit log:
       // only committed files count (exactly-once end to end)
-      val result = spark.read.parquet(out)
+      spark.read.parquet(out)
         .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-        .localCheckpoint() // eager — the scratch dir can be deleted after
-      (result, run1Rows, run2Rows)
-    } finally
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+    (result, run1Rows, run2Rows)
   }
 
   /** INCREMENTAL KG construction: the conformance-tested Turtle parser
@@ -365,17 +380,11 @@ object StreamingOps {
     * (new docs re-parse incrementally; only the aggregate holds state).
     */
   def streamingParse(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = s"graft_streamparse_${counter.incrementAndGet()}"
     val docs = boundedStream(spark, sfDir, "documents.parquet")
-    val agg = graft.ops.GraphOps.parseTurtle(docs)
+    val agg = GraphOps.parseTurtle(docs)
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_triples"))
 
-    val q = agg.writeStream
-      .outputMode("complete").format("memory").queryName(name).start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    spark.table(name).localCheckpoint()
+    drain(agg, "complete")(identity)
   }
 
   /** STREAMING → MATERIALIZED GRAPH, incrementally (kg23): the end-to-end
@@ -392,11 +401,8 @@ object StreamingOps {
     * composition is effectively exactly-once; because merge is also
     * independent of the batch split, the final graph equals the
     * full-corpus build (the kg01 oracle).
-    */
-  def streamingGraphMerge(spark: SparkSession, sfDir: String): DataFrame =
-    streamingGraphMerge(spark, sfDir, lsm = false)
-
-  /** With `lsm = true`, each micro-batch APPENDS to the delta log instead
+    *
+    * With `lsm = true`, each micro-batch APPENDS to the delta log instead
     * of rewriting touched partitions
     * ([[graft.pipeline.Materialize.mergeDeltaLsm]], bytes ∝ batch), with
     * compaction folding the log on the batch-count trigger — the
@@ -406,61 +412,28 @@ object StreamingOps {
     * compaction min-provenance rule collapses — the same idempotence
     * argument as the overwrite path, moved from write time to read time.
     */
-  def streamingGraphMerge(spark: SparkSession, sfDir: String, lsm: Boolean): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
+  def streamingGraphMerge(
+      spark: SparkSession, sfDir: String, lsm: Boolean = false): DataFrame = {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_kg23_").toString
-    try {
-      val (in, graph, chk) = (s"$dir/in", s"$dir/graph", s"$dir/chk")
-      // three deliveries, written as separate file batches
-      (0 until 3).foreach { i =>
-        docs.filter(pmod(col("doc_id"), lit(3)) === i)
-          .coalesce(1).write.mode("append").parquet(in)
+    Scratch.run("graft_kg23_") { dir =>
+      val graph = s"$dir/graph"
+      replay(docs, thirds, dir) { (batch, _) =>
+        if (!graphWritten(spark, graph)) M.write(GraphOps.docTriples(batch), graph)
+        else if (lsm)
+          M.mergeDeltaLsm(spark, graph, GraphOps.docTriples(batch),
+            maxDeltaBatches = 2) // second delta triggers a compaction
+        else M.mergeDelta(spark, graph, GraphOps.docTriples(batch))
       }
-      val toRows = (batch: DataFrame) =>
-        graft.ops.GraphOps.parseTurtle(batch).select(
-          col("subj"), col("pred"), col("obj"),
-          concat(lit("doc:"), col("doc_id").cast("string")).as("src_url"),
-          lit(new java.sql.Timestamp(0L)).as("warc_ts"))
-          .as(org.apache.spark.sql.Encoders.product[graft.pipeline.TripleRow])
-      val q = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1") // one delivery per micro-batch
-        .parquet(in)
-        .writeStream
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // write-vs-merge decided through the Hadoop FileSystem API (not
-          // java.io.File): the graph path is a DFS location in the
-          // cluster-scale deployment this op narrates, where a local-file
-          // check would always be false and every micro-batch would
-          // silently FULL-OVERWRITE the graph instead of merging.
-          val success = new org.apache.hadoop.fs.Path(s"$graph/_SUCCESS")
-          val fs = success.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (batch.isEmpty) ()
-          else if (!fs.exists(success))
-            graft.pipeline.Materialize.write(toRows(batch), graph)
-          else if (lsm)
-            graft.pipeline.Materialize.mergeDeltaLsm(spark, graph, toRows(batch),
-              maxDeltaBatches = 2) // second delta triggers a compaction
-          else
-            graft.pipeline.Materialize.mergeDelta(spark, graph, toRows(batch))
-        }
-        .start()
-      q.awaitTermination()
-      graft.pipeline.Materialize.readMerged(spark, graph)
-        .select(col("subj"), col("pred"), col("obj"))
-        .localCheckpoint() // eager — the scratch dirs are deleted below
-    } finally
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      M.readMerged(spark, graph).select(col("subj"), col("pred"), col("obj"))
+    }
   }
 
   /** Streaming RE-CRAWL with retractions (kg40): the composition every
     * production crawl loop needs — pages get re-fetched, their new parse
     * DROPS some triples and adds others, and the stream must retract the
     * dropped ones. Per micro-batch of re-crawled pages: diff the old parse
-    * against the new (two anti-joins, the [[graft.pipeline.Materialize
-    * .graphDiffProv]] shape on in-flight DataFrames), apply as ONE
+    * against the new ([[graft.pipeline.Materialize.diff]], the body of
+    * `graphDiffProv`, over in-flight parses), apply as ONE
     * tombstone delta batch (bytes ∝ changed triples, never ∝ page), and
     * compact on the batch-count trigger — tombstones are consumed by the
     * rewrite. Idempotent at the read surface: a re-delivered batch appends
@@ -473,56 +446,26 @@ object StreamingOps {
     * graph must equal a fresh build of the updated corpus.
     */
   def streamingRecrawl(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_kg40_").toString
-    try {
-      val (in, graph, chk) = (s"$dir/in", s"$dir/graph", s"$dir/chk")
-      val toRows = (batch: DataFrame) =>
-        graft.ops.GraphOps.parseTurtle(batch).select(
-          col("subj"), col("pred"), col("obj"),
-          concat(lit("doc:"), col("doc_id").cast("string")).as("src_url"),
-          lit(new java.sql.Timestamp(0L)).as("warc_ts"))
+    Scratch.run("graft_kg40_") { dir =>
+      val graph = s"$dir/graph"
       // initial crawl: the whole corpus, materialized
-      graft.pipeline.Materialize.write(
-        toRows(docs).as(org.apache.spark.sql.Encoders.product[graft.pipeline.TripleRow]),
-        graph)
-      // two re-crawl deliveries: the even pages (doc_id % 4 ∈ {0, 2})
-      (0 until 2).foreach { i =>
-        docs.filter(pmod(col("doc_id"), lit(4)) === i * 2)
-          .coalesce(1).write.mode("append").parquet(in)
+      M.write(GraphOps.docTriples(docs), graph)
+      replay(docs, evenPages, dir) { (batch, _) =>
+        M.applyDiff(spark, graph, recrawlDiff(batch))
+        if (M.deltaBatchCount(spark, graph) >= 2) M.compact(spark, graph)
       }
-      val q = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1") // one delivery per micro-batch
-        .parquet(in)
-        .writeStream
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty) {
-            val olds = toRows(batch)
-            val news = toRows(batch.withColumn("n_chars", col("n_chars") + 1))
-            val keys = Seq("subj", "pred", "obj")
-            val keyCols = keys.map(col)
-            val ops = news
-              .join(olds.select(keyCols: _*), keys, "left_anti")
-              .withColumn("op", lit(TableLog.OpAdd))
-              .unionByName(olds
-                .join(news.select(keyCols: _*), keys, "left_anti")
-                .withColumn("op", lit(TableLog.OpDel)))
-            graft.pipeline.Materialize.applyDiff(spark, graph, ops)
-            if (graft.pipeline.Materialize.deltaBatchCount(spark, graph) >= 2)
-              graft.pipeline.Materialize.compact(spark, graph)
-          }
-        }
-        .start()
-      q.awaitTermination()
-      graft.pipeline.Materialize.readMerged(spark, graph)
-        .select(col("subj"), col("pred"), col("obj"))
-        .localCheckpoint() // eager — the scratch dirs are deleted below
-    } finally
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      M.readMerged(spark, graph).select(col("subj"), col("pred"), col("obj"))
+    }
   }
+
+  /** A re-crawl delivery's diff: its pages' old parse against the new one
+    * (content grown by one char), as [[graft.pipeline.Materialize.diff]]
+    * rows — bytes ∝ changed triples, never ∝ page.
+    */
+  private def recrawlDiff(batch: DataFrame): DataFrame =
+    M.diff(GraphOps.docTriples(batch).toDF(),
+      GraphOps.docTriples(batch.withColumn("n_chars", col("n_chars") + 1)).toDF())
 
   final case class Ev(user_id: Long, ts_us: Long, event_id: Long)
 
@@ -534,8 +477,6 @@ object StreamingOps {
   def sessionize(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
-    val name = s"graft_sessions_${counter.incrementAndGet()}"
 
     val events = boundedStream(spark, sfDir, "events.parquet")
       .select(col("user_id"),
@@ -557,12 +498,7 @@ object StreamingOps {
           Iterator.single((uid, nSessions, sorted.length.toLong))
       }
 
-    val q = sessions.toDF("user_id", "n_sessions", "n_events")
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    spark.table(name).localCheckpoint()
+    drain(sessions.toDF("user_id", "n_sessions", "n_events"), "append")(identity)
   }
 
   /** STREAMING TRENDING TERMS — the text×streaming composition: document
@@ -577,36 +513,21 @@ object StreamingOps {
     * for a vocab, wrong for an unbounded key space).
     */
   def streamingTrendingTerms(spark: SparkSession, sfDir: String, k: Int = 20): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val name = s"graft_trend_${counter.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_q41_").toString
-    try {
-      val in = s"$dir/in"
-      (0 until 3).foreach { i =>
-        docs.filter(pmod(col("doc_id"), lit(3)) === i)
-          .coalesce(1).write.mode("append").parquet(in)
-      }
+    Scratch.run("graft_q41_") { dir =>
+      deliver(docs, thirds, s"$dir/in")
       val counts = spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", "1")
-        .parquet(in)
+        .parquet(s"$dir/in")
         .select(explode(graft.ops.TextOps.tokensCol(col("text"))).as("token"))
         .groupBy(col("token")).agg(count(lit(1)).as("n"))
-      val q = counts.writeStream.outputMode("complete")
-        .format("memory").queryName(name)
-        .option("checkpointLocation", s"$dir/chk")
-        .trigger(Trigger.AvailableNow()).start()
-      try q.awaitTermination()
-      finally q.stop()
       val w = org.apache.spark.sql.expressions.Window
         .orderBy(col("n").desc, col("token").asc)
-      spark.table(name)
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= k)
-        .select(col("token"), col("n"), col("rk"))
-        .localCheckpoint() // eager — the scratch stream dir is deleted below
-    } finally
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      drain(counts, "complete", checkpoint = Some(s"$dir/chk"))(
+        _.withColumn("rk", row_number().over(w).cast("long"))
+          .filter(col("rk") <= k)
+          .select(col("token"), col("n"), col("rk")))
+    }
   }
 
   /** Continuous SPARQL (kg78): a standing TEXT query registered over the
@@ -636,64 +557,39 @@ object StreamingOps {
     */
   def continuousSparql(
       spark: SparkSession, sfDir: String, queryText: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val M = graft.pipeline.Materialize
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_kg78_").toString
-    try {
-      val (in, graph, res, chk) = (s"$dir/in", s"$dir/graph", s"$dir/res", s"$dir/chk")
-      (0 until 3).foreach { i =>
-        docs.filter(pmod(col("doc_id"), lit(3)) === i)
-          .coalesce(1).write.mode("append").parquet(in)
-      }
-      val toRows = (batch: DataFrame) =>
-        graft.ops.GraphOps.parseTurtle(batch).select(
-          col("subj"), col("pred"), col("obj"),
-          concat(lit("doc:"), col("doc_id").cast("string")).as("src_url"),
-          lit(new java.sql.Timestamp(0L)).as("warc_ts"))
-          .as(org.apache.spark.sql.Encoders.product[graft.pipeline.TripleRow])
+    Scratch.run("graft_kg78_") { dir =>
+      val (graph, res) = (s"$dir/graph", s"$dir/res")
       // join-order sketch, maintained incrementally batch-by-batch —
       // driver-side map bounded by the predicate vocabulary
       val predCounts = scala.collection.mutable.Map.empty[String, Long]
-      val q = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1") // one delivery per micro-batch
-        .parquet(in)
-        .writeStream
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, seq: Long) =>
-          if (!batch.isEmpty) {
-            // the parse is consumed twice (merge + count fold) — persist
-            val rows = toRows(batch).localCheckpoint()
-            val success = new org.apache.hadoop.fs.Path(s"$graph/_SUCCESS")
-            val fs = success.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            if (!fs.exists(success)) M.write(rows, graph)
-            else M.mergeDeltaLsm(spark, graph, rows, maxDeltaBatches = 2)
-            rows.groupBy(col("pred")).agg(count(lit(1)).as("n")).collect()
-              .foreach { r =>
-                val p = r.getString(0)
-                predCounts(p) = predCounts.getOrElse(p, 0L) + r.getLong(1)
-              }
-            val answer = graft.sparql.SparqlExec.query(spark, queryText,
-              (p: String) => M.readMergedPred(spark, graph, p),
-              predCounts.toMap,
-              fullSource = Some(() => M.readMerged(spark, graph)
-                .select(col("subj"), col("pred"), col("obj"))))
-            // keyed by the checkpointed batch id with DYNAMIC partition
-            // overwrite: a replayed batch rewrites ITS OWN partition, so
-            // at-least-once delivery stays exactly-once at the result log
-            answer.withColumn("batch_seq", lit(seq))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_seq").parquet(res)
+      replay(docs, thirds, dir) { (batch, seq) =>
+        // the parse is consumed twice (merge + count fold) — persist
+        val rows = GraphOps.docTriples(batch).localCheckpoint()
+        if (!graphWritten(spark, graph)) M.write(rows, graph)
+        else M.mergeDeltaLsm(spark, graph, rows, maxDeltaBatches = 2)
+        rows.groupBy(col("pred")).agg(count(lit(1)).as("n")).collect()
+          .foreach { r =>
+            val p = r.getString(0)
+            predCounts(p) = predCounts.getOrElse(p, 0L) + r.getLong(1)
           }
-        }
-        .start()
-      q.awaitTermination()
-      spark.read.parquet(res).localCheckpoint() // eager — dir deleted below
-    } finally
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+        logSnapshot(standingQuery(spark, graph, queryText, predCounts.toMap), seq, res)
+      }
+      spark.read.parquet(res)
+    }
   }
+
+  /** The registered query over the merged LSM graph: pattern scans
+    * pred-prune through [[graft.pipeline.Materialize.readMergedPred]],
+    * whole-graph patterns read the merged view.
+    */
+  private def standingQuery(spark: SparkSession, graph: String, queryText: String,
+      predCounts: Map[String, Long]): DataFrame =
+    graft.sparql.SparqlExec.query(spark, queryText,
+      (p: String) => M.readMergedPred(spark, graph, p),
+      predCounts,
+      fullSource = Some(() => M.readMerged(spark, graph)
+        .select(col("subj"), col("pred"), col("obj"))))
 
   /** The completed standing-query loop (kg83): ingest → INCREMENTAL VIEW
     * MAINTENANCE → serve. Where kg78 RE-EVALUATES the registered query
@@ -703,86 +599,55 @@ object StreamingOps {
     * dashboard actually runs: per-batch work is O(delta) on both the
     * graph AND the answer. Deliveries are disjoint new documents, so the
     * batch's own triples are a set-effective diff (the ViewStore
-    * contract); a re-crawl stream would route through graphDiffProv first
-    * (kg80's path). Snapshot log keyed by batch id with dynamic overwrite
+    * contract); a re-crawl stream would route through
+    * [[graft.pipeline.Materialize.diff]] first (kg80's path). Snapshot log keyed by batch id with dynamic overwrite
     * — replays rewrite their own partition.
     */
   def continuousViewMaintenance(
       spark: SparkSession, sfDir: String, keyPred: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val M = graft.pipeline.Materialize
     val V = graft.pipeline.ViewStore
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_kg83_").toString
-    try {
-      val (in, graph, view, res, chk) =
-        (s"$dir/in", s"$dir/graph", s"$dir/view", s"$dir/res", s"$dir/chk")
-      (0 until 3).foreach { i =>
-        docs.filter(pmod(col("doc_id"), lit(3)) === i)
-          .coalesce(1).write.mode("append").parquet(in)
-      }
-      val toRows = (batch: DataFrame) =>
-        graft.ops.GraphOps.parseTurtle(batch).select(
-          col("subj"), col("pred"), col("obj"),
-          concat(lit("doc:"), col("doc_id").cast("string")).as("src_url"),
-          lit(new java.sql.Timestamp(0L)).as("warc_ts"))
-          .as(org.apache.spark.sql.Encoders.product[graft.pipeline.TripleRow])
-      val q = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1") // one delivery per micro-batch
-        .parquet(in)
-        .writeStream
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, seq: Long) =>
-          if (!batch.isEmpty) {
-            // merge + view fold both consume the parse — persist once
-            val rows = toRows(batch).localCheckpoint()
-            val success = new org.apache.hadoop.fs.Path(s"$graph/_SUCCESS")
-            val fs = success.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            if (!fs.exists(success)) {
-              M.write(rows, graph)
-              // the view is a multiplicity ledger while the LSM store is a
-              // set: a document legally stating the same triple twice must
-              // count once — dedup BEFORE the first build, mirroring
-              // M.write's own dedup
-              V.buildCountView(
-                rows.toDF().dropDuplicates("subj", "pred", "obj"),
-                keyPred, view)
-            } else {
-              // EFFECTIVE diff (the ViewStore contract): within-batch
-              // dedup + anti-join against the PRE-state merged read, so
-              // duplicate statements and re-delivered triples fold as
-              // zero — computed BEFORE the merge lands the batch. The
-              // fold only consumes keyPred rows, so both sides prune to
-              // that predicate's single pred_hash partition
-              // (readMergedPred) — never a whole-graph scan per batch
-              val eff = rows.toDF()
-                .filter(col("pred") === keyPred)
-                .dropDuplicates("subj", "pred", "obj")
-                .join(M.readMergedPred(spark, graph, keyPred)
-                  .select(col("subj"), col("pred"), col("obj")),
-                  Seq("subj", "pred", "obj"), "left_anti")
-                .withColumn("op", lit(TableLog.OpAdd))
-                .localCheckpoint() // consumed after the merge overwrites the store
-              M.mergeDeltaLsm(spark, graph, rows, maxDeltaBatches = 2)
-              // foldId = the checkpointed micro-batch id: an at-least-once
-              // replay re-enters this body, and the ledger makes the
-              // re-fold a no-op instead of double-counting the view
-              V.maintainCountView(spark, view, eff, keyPred,
-                foldId = Some(seq.toString))
-            }
-            V.readView(spark, view)
-              .withColumn("batch_seq", lit(seq))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_seq").parquet(res)
-          }
+    Scratch.run("graft_kg83_") { dir =>
+      val (graph, view, res) = (s"$dir/graph", s"$dir/view", s"$dir/res")
+      replay(docs, thirds, dir) { (batch, seq) =>
+        // merge + view fold both consume the parse — persist once
+        val rows = GraphOps.docTriples(batch).localCheckpoint()
+        if (!graphWritten(spark, graph)) {
+          M.write(rows, graph)
+          // the view is a multiplicity ledger while the LSM store is a
+          // set: a document legally stating the same triple twice must
+          // count once — dedup BEFORE the first build, mirroring
+          // M.write's own dedup
+          V.buildCountView(
+            rows.toDF().dropDuplicates("subj", "pred", "obj"),
+            keyPred, view)
+        } else {
+          // EFFECTIVE diff (the ViewStore contract): within-batch
+          // dedup + anti-join against the PRE-state merged read, so
+          // duplicate statements and re-delivered triples fold as
+          // zero — computed BEFORE the merge lands the batch. The
+          // fold only consumes keyPred rows, so both sides prune to
+          // that predicate's single pred_hash partition
+          // (readMergedPred) — never a whole-graph scan per batch
+          val eff = rows.toDF()
+            .filter(col("pred") === keyPred)
+            .dropDuplicates("subj", "pred", "obj")
+            .join(M.readMergedPred(spark, graph, keyPred)
+              .select(col("subj"), col("pred"), col("obj")),
+              Seq("subj", "pred", "obj"), "left_anti")
+            .withColumn("op", lit(TableLog.OpAdd))
+            .localCheckpoint() // consumed after the merge overwrites the store
+          M.mergeDeltaLsm(spark, graph, rows, maxDeltaBatches = 2)
+          // foldId = the checkpointed micro-batch id: an at-least-once
+          // replay re-enters this body, and the ledger makes the
+          // re-fold a no-op instead of double-counting the view
+          V.maintainCountView(spark, view, eff, keyPred,
+            foldId = Some(seq.toString))
         }
-        .start()
-      q.awaitTermination()
-      spark.read.parquet(res).localCheckpoint() // eager — dir deleted below
-    } finally
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+        logSnapshot(V.readView(spark, view), seq, res)
+      }
+      spark.read.parquet(res)
+    }
   }
 
   /** Standing SPARQL query over a RE-CRAWL stream with retractions (kg80):
@@ -802,72 +667,27 @@ object StreamingOps {
     */
   def continuousSparqlRecrawl(
       spark: SparkSession, sfDir: String, queryText: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val M = graft.pipeline.Materialize
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_kg80_").toString
-    try {
-      val (in, graph, res, chk) = (s"$dir/in", s"$dir/graph", s"$dir/res", s"$dir/chk")
-      val toRows = (batch: DataFrame) =>
-        graft.ops.GraphOps.parseTurtle(batch).select(
-          col("subj"), col("pred"), col("obj"),
-          concat(lit("doc:"), col("doc_id").cast("string")).as("src_url"),
-          lit(new java.sql.Timestamp(0L)).as("warc_ts"))
-      val initial = toRows(docs)
-      M.write(initial.as(
-        org.apache.spark.sql.Encoders.product[graft.pipeline.TripleRow]), graph)
+    Scratch.run("graft_kg80_") { dir =>
+      val (graph, res) = (s"$dir/graph", s"$dir/res")
+      val initial = GraphOps.docTriples(docs)
+      M.write(initial, graph)
       val predCounts = scala.collection.mutable.Map.empty[String, Long]
-      M.sketchPredCounts(initial).foreach { case (p, n) => predCounts(p) = n }
-      (0 until 2).foreach { i =>
-        docs.filter(pmod(col("doc_id"), lit(4)) === i * 2)
-          .coalesce(1).write.mode("append").parquet(in)
-      }
-      val q = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1") // one delivery per micro-batch
-        .parquet(in)
-        .writeStream
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, seq: Long) =>
-          if (!batch.isEmpty) {
-            val olds = toRows(batch)
-            val news = toRows(batch.withColumn("n_chars", col("n_chars") + 1))
-            val keys = Seq("subj", "pred", "obj")
-            val keyCols = keys.map(col)
-            // consumed twice (applyDiff + the count fold) — persist once
-            val ops = news
-              .join(olds.select(keyCols: _*), keys, "left_anti")
-              .withColumn("op", lit(TableLog.OpAdd))
-              .unionByName(olds
-                .join(news.select(keyCols: _*), keys, "left_anti")
-                .withColumn("op", lit(TableLog.OpDel)))
-              .localCheckpoint()
-            M.applyDiff(spark, graph, ops)
-            ops.groupBy(col("pred"))
-              .agg(sum(when(col("op") === TableLog.OpAdd, lit(1L)).otherwise(lit(-1L)))
-                .as("dn"))
-              .collect().foreach { r =>
-                val p = r.getString(0)
-                predCounts(p) = predCounts.getOrElse(p, 0L) + r.getLong(1)
-              }
-            val answer = graft.sparql.SparqlExec.query(spark, queryText,
-              (p: String) => M.readMergedPred(spark, graph, p),
-              predCounts.toMap,
-              fullSource = Some(() => M.readMerged(spark, graph)
-                .select(col("subj"), col("pred"), col("obj"))))
-            // keyed by the checkpointed batch id with DYNAMIC partition
-            // overwrite: a replayed batch rewrites ITS OWN partition, so
-            // at-least-once delivery stays exactly-once at the result log
-            answer.withColumn("batch_seq", lit(seq))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_seq").parquet(res)
+      M.sketchPredCounts(initial.toDF()).foreach { case (p, n) => predCounts(p) = n }
+      replay(docs, evenPages, dir) { (batch, seq) =>
+        // consumed twice (applyDiff + the count fold) — persist once
+        val ops = recrawlDiff(batch).localCheckpoint()
+        M.applyDiff(spark, graph, ops)
+        ops.groupBy(col("pred"))
+          .agg(sum(when(col("op") === TableLog.OpAdd, lit(1L)).otherwise(lit(-1L)))
+            .as("dn"))
+          .collect().foreach { r =>
+            val p = r.getString(0)
+            predCounts(p) = predCounts.getOrElse(p, 0L) + r.getLong(1)
           }
-        }
-        .start()
-      q.awaitTermination()
-      spark.read.parquet(res).localCheckpoint() // eager — dir deleted below
-    } finally
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+        logSnapshot(standingQuery(spark, graph, queryText, predCounts.toMap), seq, res)
+      }
+      spark.read.parquet(res)
+    }
   }
 }

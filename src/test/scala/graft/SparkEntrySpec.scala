@@ -152,4 +152,36 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(rs.map(_.url).sorted.toSeq == Seq("http://bad.example/2", "http://bad.example/3"))
     assert(rs.forall(r => r.message.nonEmpty && r.span_end >= r.span_start))
   }
+
+  test("memory-sink queries leave no temp view and no active stream behind") {
+    val sinkQueries = Seq("q12_stream_window", "q13_stream_sessionize",
+      "q23_stream_watermark", "q24_stream_dedup", "q29_stream_dedup_watermark",
+      "q31_stream_stream_join", "q32_session_window", "q33_transform_with_state",
+      "q41_stream_trending", "kg17_stream_parse")
+    // other tests of this session register their own graft_* views
+    def graftViews() = spark.catalog.listTables().collect()
+      .filter(t => t.isTemporary && t.name.startsWith("graft_")).map(_.name).toSet
+    val before = graftViews()
+    sinkQueries.foreach { q =>
+      assert(SparkEntry.queries(q)(spark, sf).count() > 0, s"$q returned no rows")
+    }
+    val views = graftViews() -- before
+    assert(views.isEmpty, s"sink views outlived their queries: ${views.mkString(", ")}")
+    assert(spark.streams.active.isEmpty,
+      s"streams still active: ${spark.streams.active.map(_.name).mkString(", ")}")
+  }
+
+  test("scratch-dir queries return frames that outlive their deleted dirs") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def scratchDirs(prefix: String) =
+      Option(tmp.listFiles()).toSeq.flatten.filter(_.getName.startsWith(prefix)).toSet
+    Seq("kg22_delta_merge" -> "graft_kg22_", "kg23_stream_graph_merge" -> "graft_kg23_",
+      "emb19_ann_ivf_delta" -> "graft_emb19_").foreach { case (q, prefix) =>
+      val before = scratchDirs(prefix)
+      val df = SparkEntry.queries(q)(spark, sf)
+      assert(scratchDirs(prefix) == before, s"$q left a scratch dir behind")
+      // counted after the call returned: the frame reads no deleted file
+      assert(df.count() > 0, s"$q returned no rows")
+    }
+  }
 }

@@ -176,7 +176,7 @@ class PipelineSpec extends AnyFunSuite {
       20L -> 20L, 21L -> 20L, 22L -> 20L)) // carried forward untouched
     // the work-∝-diff invariant: the iterative loop's induced subgraph
     // excludes every edge of the untouched component
-    val (affected, subEdges) = Canonical.affectedSubgraph(oldLabels, v2, diff)
+    val (_, affected, subEdges) = Canonical.affectedSubgraph(oldLabels, v2, diff)
     assert(affected.collect().map(_.getLong(0)).toSet ==
       Set(1L, 2L, 3L, 10L, 11L, 12L))
     assert(subEdges.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
@@ -1090,7 +1090,7 @@ class PipelineSpec extends AnyFunSuite {
           ("<g1>", "<s1>", "<p:solo>", "\"a\"", "u1", ts),
           ("<g1>", "<c>", "<p:cold>", "\"c\"", "u", ts))
           .toDF("graph", "subj", "pred", "obj", "src_url", "warc_ts"), qout)
-        Materialize.appendQuadDeltaOps(spark, qout, Seq(
+        Materialize.appendDeltaOps(spark, qout, Seq(
           ("<g1>", "<s1>", "<p:solo>", "\"a\"", "u1", ts, "del"))
           .toDF("graph", "subj", "pred", "obj", "src_url", "warc_ts", "op"))
         Materialize.compact(spark, qout)
@@ -1119,18 +1119,18 @@ class PipelineSpec extends AnyFunSuite {
         ("<g:2>", "<s>", "<p:hot>", "\"a\""),
         ("<g:1>", "<c>", "<p:cold>", "\"c\"")), out)
       // retract (s, p, o) in g:1 ONLY, assert a new quad in g:2
-      Materialize.appendQuadDeltaOps(spark, out, quads(
+      Materialize.appendDeltaOps(spark, out, quads(
         ("<g:1>", "<s>", "<p:hot>", "\"a\""),
         ("<g:2>", "<t>", "<p:hot>", "\"b\""))
         .withColumn("op", when(c("graph") === "<g:1>", "del").otherwise("add")))
-      def view() = Materialize.readMergedQuads(spark, out)
+      def view() = Materialize.readMerged(spark, out)
         .select("graph", "subj", "obj").as[(String, String, String)].collect().toSet
       assert(view() == Set(
         ("<g:2>", "<s>", "\"a\""), // the sibling graph's identical triple SURVIVES
         ("<g:2>", "<t>", "\"b\""),
         ("<g:1>", "<c>", "\"c\"")), s"got ${view()}")
       // bounded merge-on-read carries over: one exchange, cold bypasses
-      val plan = Materialize.readMergedQuads(spark, out)
+      val plan = Materialize.readMerged(spark, out)
         .queryExecution.executedPlan.toString
       assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1,
         s"untouched quad partitions must bypass the dedup exchange:\n${plan.take(2000)}")
@@ -1170,7 +1170,7 @@ class PipelineSpec extends AnyFunSuite {
         predCounts = Map.empty, srcUrl = "upd", ts = ts)
       // the update is append-only: every base file untouched on disk
       assert(baseFiles() == before, "updateWhereGraph rewrote base files")
-      val got = Materialize.readMergedQuads(spark, out)
+      val got = Materialize.readMerged(spark, out)
         .select("graph", "subj", "pred", "obj")
         .as[(String, String, String, String)].collect().toSet
       assert(got == Set(
@@ -1446,5 +1446,19 @@ class PipelineSpec extends AnyFunSuite {
     val recall = tp / oracle.size
     assert(precision >= 0.95, s"precision $precision")
     assert(recall >= 0.95, s"recall $recall")
+  }
+
+  test("Scratch.run deletes its dir when the body throws and rethrows the body's error") {
+    var seen: Option[java.io.File] = None
+    val boom = new IllegalStateException("boom")
+    val thrown = intercept[IllegalStateException] {
+      Scratch.run("graft_scratch_") { dir =>
+        seen = Some(new java.io.File(dir))
+        assert(seen.get.isDirectory)
+        throw boom
+      }
+    }
+    assert(thrown eq boom)
+    assert(seen.exists(!_.exists()), s"scratch dir $seen survived the failure")
   }
 }

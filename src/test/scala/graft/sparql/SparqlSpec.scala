@@ -542,7 +542,7 @@ class SparqlSpec extends AnyFunSuite {
             (xxhash64(col("subj")) % 2 + 2) % 2, lit(">")))
         .withColumn("src_url", lit("t:src")).withColumn("warc_ts", lit(ts0))
       M.writeQuads(quads, s"$dir/q")
-      val before0 = rows(M.readMergedQuads(s, s"$dir/q")
+      val before0 = rows(M.readMerged(s, s"$dir/q")
         .filter(col("graph") === "<http://g/g/0>")
         .select(col("subj"), col("pred"), col("obj")))
       SparqlExec.update(s, prologue +
@@ -552,7 +552,7 @@ class SparqlSpec extends AnyFunSuite {
       SparqlExec.update(s, prologue +
         "INSERT DATA { GRAPH <http://g/g/0> { <http://g/e/9> p:lang \"xx\" } }",
         s"$dir/q", counts, "u:5", ts0, quadTable = true)
-      val after = M.readMergedQuads(s, s"$dir/q")
+      val after = M.readMerged(s, s"$dir/q")
       // graph 1: no p:lang survives; its p:tongue rows replaced them
       assert(after.filter(col("graph") === "<http://g/g/1>" &&
         col("pred") === s"${P}lang").count() == 0)
